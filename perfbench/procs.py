@@ -36,6 +36,23 @@ def descendants(pid: int) -> list[int]:
     return out
 
 
+def tree_cpu_s() -> float:
+    """CPU seconds (user + system) of this process's calling thread and
+    of every process it started, the JVM and its Python workers, with
+    the workers that have exited (counted in their parent once reaped).
+    Time the hypervisor gives to other guests (steal) is in neither."""
+    tick = os.sysconf("SC_CLK_TCK")
+    total = 0
+    for pid in descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                f = fh.read().rsplit(")", 1)[1].split()
+        except OSError:  # exited while reading
+            continue
+        total += sum(int(x) for x in f[11:15])  # utime stime cutime cstime
+    return time.thread_time() + total / tick
+
+
 def _pss(pid: int) -> int:
     """Proportional set size: resident bytes, with each page shared by
     n processes (a forked Python worker and its daemon) counted 1/n."""

@@ -1,6 +1,6 @@
 """Same-host benchmark for geospark.
 
-    python3 perfbench/run.py --workload flagship_pages --seed 1 --seconds 4 --trace 0
+    python3 perfbench/run.py --workload flagship_pages --seed 1 --seconds 5 --trace 0
 
 One run measures one workload as a closed loop with one client on a
 ``local[<cores>]`` session sized from this host. Set-up (session start,
@@ -9,9 +9,9 @@ then the workload's operator calls repeat for ``--seconds``, every
 output checked against an answer computed outside the measured path.
 
 ``--trace 0`` reports the end-to-end metrics of BENCHMARK.json.
-``--trace 1`` turns on Spark's event log, runs the untraced loop and
-then the same number of seconds of traced iterations (job-group tags,
-cumulative plan prefixes), and reports the per-layer metrics,
+``--trace 1`` turns on Spark's event log, runs the untraced loop for
+half of ``--seconds`` and traced iterations (job-group tags, cumulative
+plan prefixes) for the other half, and reports the per-layer metrics,
 including the traced-minus-untraced iteration wall.
 
 Metric lines go to stderr, one JSON record per run is appended to
@@ -49,13 +49,21 @@ def start_session(cores: int, mem: int, work: Path, trace: bool):
     """local[cores], shuffle partitions = cores, driver heap an eighth
     of physical memory (1-4 GiB); every scratch path inside ``work``.
     The heap is committed and touched at JVM start: otherwise G1 grows
-    it by a different amount on every run and peak RSS follows."""
+    it by a different amount on every run and peak RSS follows.
+    The JIT stops at its first tier (C1): with the optimising tier the
+    JVM still gets faster ten iterations in, so a run's figures would
+    depend on how far that warm-up got, not on the code. The code cache
+    is large and never flushed: Spark generates a class per plan, the
+    default cache fills within two iterations, and its sweeper then
+    evicts and recompiles on every iteration after."""
     from geospark.session import get_spark
 
     heap_mb = min(max(mem // 8 // 2**20, 1024), 4096)
     conf = {
         "spark.driver.memory": f"{heap_mb}m",
-        "spark.driver.extraJavaOptions": f"-Xms{heap_mb}m -XX:+AlwaysPreTouch",
+        "spark.driver.extraJavaOptions": (f"-Xms{heap_mb}m -XX:+AlwaysPreTouch"
+                                          " -XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=512m"
+                                          " -XX:-UseCodeCacheFlushing"),
         "spark.local.dir": str(work / "spark-local"),
         "spark.sql.warehouse.dir": str(work / "warehouse"),
         "spark.ui.enabled": "false",
@@ -80,36 +88,41 @@ def row_count(out) -> int:
 
 
 class Loop:
-    """Closed-loop iterations of a workload's ops for a fixed time."""
+    """Closed-loop iterations of a workload's ops for a fixed time. Each
+    call's wall and CPU seconds are kept per op."""
+
+    WALL, CPU = 0, 1
 
     def __init__(self):
-        self.iterations: list[tuple[float, dict[str, float]]] = []
+        # one dict per iteration: op name -> (wall_s, cpu_s)
+        self.iterations: list[dict[str, tuple[float, float]]] = []
         self.attempted = 0
         self.failed = 0
         self.rows_out = 0
 
     @property
     def walls(self) -> list[float]:
-        return [w for w, _ in self.iterations]
+        return [sum(w for w, _ in calls.values()) for calls in self.iterations]
 
     def iterate(self, ops) -> None:
-        wall, rows, calls = 0.0, 0, {}
+        from perfbench.procs import tree_cpu_s
+
+        rows, calls = 0, {}
         for op in ops:
+            c0 = tree_cpu_s()
             t0 = time.perf_counter()
             try:
                 out = op.run()
-                dt = time.perf_counter() - t0
+                calls[op.name] = (time.perf_counter() - t0, tree_cpu_s() - c0)
                 ok = op.check(out)
                 rows += row_count(out)
             except Exception:  # a failed call is counted, the loop goes on
-                dt = time.perf_counter() - t0
+                calls.setdefault(op.name, (time.perf_counter() - t0, tree_cpu_s() - c0))
                 traceback.print_exc()
                 ok = False
-            calls[op.name] = dt
-            wall += dt
             self.attempted += 1
             self.failed += not ok
-        self.iterations.append((wall, calls))
+        self.iterations.append(calls)
         self.rows_out = rows
 
     def run(self, ops, seconds: float) -> None:
@@ -120,15 +133,23 @@ class Loop:
                 return
 
     def all_lat(self) -> list[float]:
-        return [dt for _, calls in self.iterations for dt in calls.values()]
+        return [w for calls in self.iterations for w, _ in calls.values()]
 
-    def op_p50(self) -> float:
-        """Median over the ops of each op's median call latency. Unlike
-        the median of all calls, it does not shift with the number of
-        iterations that fit in the run."""
-        return statistics.median(
-            statistics.median(calls[name] for _, calls in self.iterations)
-            for name in self.iterations[0][1])
+    def medians(self, k: int) -> list[float]:
+        """Each op's median over its calls of wall (``WALL``) or CPU
+        (``CPU``) seconds."""
+        return [statistics.median(calls[name][k] for calls in self.iterations)
+                for name in self.iterations[0]]
+
+    def total(self, k: int) -> float:
+        """An iteration as the sum of its ops' medians: a burst of host
+        load that slows one call moves only that call's median."""
+        return sum(self.medians(k))
+
+    def op_geomean(self, k: int) -> float:
+        """Geometric mean over the ops of each op's median: every op
+        weighs the same whatever its cost."""
+        return statistics.geometric_mean(self.medians(k))
 
 
 def tail(samples: list[float]) -> tuple[float, float, int] | None:
@@ -142,7 +163,7 @@ def tail(samples: list[float]) -> tuple[float, float, int] | None:
 
 def spark_layers(wl, tr, groups) -> dict[str, float]:
     """spark.* per traced iteration, folded from the event log over the
-    job groups of ``wl.spark_ops`` (all ops when None)."""
+    job groups of ``wl.spark_ops``."""
     from perfbench.eventlog import Group
 
     n_iter = len({it for _, it, _, _ in tr.spans})
@@ -157,7 +178,7 @@ def spark_layers(wl, tr, groups) -> dict[str, float]:
             out["joins.knn.jobs"] += g.jobs / n_iter
         if name == "skew":
             skew_shares.append(g.max_task_share())
-        if wl.spark_ops is not None and name not in wl.spark_ops:
+        if name not in wl.spark_ops:
             continue
         out["spark.jobs"] += g.jobs / n_iter
         out["spark.gc_s"] += g.gc_s / n_iter
@@ -227,7 +248,7 @@ def main(argv: list[str]) -> int:
 
     from perfbench import eventlog
     from perfbench.procs import PeakRss, stop_spark
-    from perfbench.workloads import WORKLOADS, Ctx, Tracer
+    from perfbench.workloads import WORKLOADS, Ctx, Tracer, Workload
 
     cores, mem = host()
     loop = Loop()
@@ -240,7 +261,7 @@ def main(argv: list[str]) -> int:
             spark = start_session(cores, mem, work, trace)
             start_s = time.perf_counter() - t0
             try:
-                wl = WORKLOADS[args.workload](Ctx(spark, str(work), args.seed, cores))
+                wl = Workload(Ctx(spark, str(work), args.seed, cores), WORKLOADS[args.workload])
                 # the JVM starts and the JIT warms once per process; the
                 # inputs are generated SYNTH_REPEATS times (each pass
                 # rewrites the same files) and the median pass counts
@@ -257,10 +278,11 @@ def main(argv: list[str]) -> int:
                 warm.iterate(wl.ops())
                 warm_s = warm.walls[0]
 
-                loop.run(wl.ops(), args.seconds)
+                # a traced run splits --seconds between the two loops
+                loop.run(wl.ops(), args.seconds / (2 if trace else 1))
                 if trace:
                     tr = Tracer(spark.sparkContext)
-                    end = time.perf_counter() + args.seconds
+                    end = time.perf_counter() + args.seconds / 2
                     while True:
                         attempted, failed = wl.traced_iteration(tr)
                         traced_attempted += attempted
@@ -283,13 +305,17 @@ def main(argv: list[str]) -> int:
 
     attempted = warm.attempted + loop.attempted + traced_attempted
     failed = warm.failed + loop.failed + traced_failed
-    wall_s = statistics.median(loop.walls)
+    wall_s = loop.total(Loop.WALL)
     e2e = {
         "setup_s": start_s + synth_s + warm_s,
-        "wall_s": wall_s,
-        "op_p50_s": loop.op_p50(),
-        "rows_per_s": wl.rows / wall_s,
+        "cpu_s": loop.total(Loop.CPU),
+        "op_cpu_geomean_s": loop.op_geomean(Loop.CPU),
         "peak_rss_mb": rss.peak_mb,
+        # wall clock: printed and recorded on every run, reported as
+        # per-layer metrics of the traced run
+        "wall_s": wall_s,
+        "op_geomean_s": loop.op_geomean(Loop.WALL),
+        "rows_per_s": wl.rows / wall_s,
     }
     if trace:
         traced = statistics.median(traced_walls)
@@ -305,10 +331,11 @@ def main(argv: list[str]) -> int:
     metrics = {m["name"]: {"value": float(values.get(m["name"], 0.0)), "unit": m["unit"]}
                for m in chosen}
 
-    for m in spec["end_to_end"] + (spec["per_layer"] if trace else []):
-        v = values.get(m["name"])
-        print(f"{m['name']:40s} {'-' if v is None else f'{v:.6g}':>14s} {m['unit']}",
-              file=sys.stderr)
+    for m in spec["end_to_end"] + spec["per_layer"]:
+        if trace or m["name"] in e2e:
+            v = values.get(m["name"])
+            print(f"{m['name']:40s} {'-' if v is None else f'{v:.6g}':>14s} {m['unit']}",
+                  file=sys.stderr)
     print(f"{'op_tail_s':40s} "
           + (f"{op_tail[0]:>14.6g} s  (p{op_tail[1]:.0f} of {op_tail[2]} calls)"
              if op_tail else f"{'-':>14s} s  ({len(loop.all_lat())} calls, < 11)"),
@@ -328,7 +355,9 @@ def main(argv: list[str]) -> int:
                     for k, v in values.items()},
         "op_tail_s": op_tail and {"value": op_tail[0], "percentile": op_tail[1],
                                   "samples": op_tail[2]},
-        "iterations": [{"wall_s": w, "calls_s": c} for w, c in loop.iterations],
+        "iterations": [{"calls_s": {k: w for k, (w, _) in calls.items()},
+                        "calls_cpu_s": {k: c for k, (_, c) in calls.items()}}
+                       for calls in loop.iterations],
         "traced_iteration_wall_s": traced_walls,
         "setup_parts_s": {"session": start_s, "synth": synth_s, "warm": warm_s,
                           "synth_passes": synth},

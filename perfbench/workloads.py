@@ -1,11 +1,12 @@
 """The benchmark's workloads.
 
-A workload writes its seeded inputs (``generate``), computes the
-answers its outputs must match outside the measured path (``expect``),
-and lists the calls one iteration makes (``ops``). Each ``Op`` is one
-timed call into a public geospark function whose result is pulled to
-the driver and checked. The traced run repeats the iteration under
-``Tracer`` spans and derives the per-layer metrics in ``layers``.
+A workload is a list of suites. A suite writes its seeded inputs
+(``generate``), computes the answers its outputs must match outside the
+measured path (``expect``), and lists the calls one iteration makes
+(``ops``). Each ``Op`` is one timed call into a public geospark
+function whose result is pulled to the driver and checked. The traced
+run repeats the iteration under ``Tracer`` spans and derives the
+per-layer metrics in ``layers``.
 """
 
 from __future__ import annotations
@@ -67,6 +68,8 @@ class Tracer:
             return fn()
         finally:
             self.spans.append((name, self.iteration, t0, time.time()))
+            # jobs run between calls (layer counts) fold into no span
+            self.sc.setJobGroup("untraced", "untraced")
 
     def busy(self, name: str) -> float:
         return statistics.median(e - s for n, _, s, e in self.spans if n == name)
@@ -85,8 +88,7 @@ def _du(path: str) -> int:
                for d, _, fs in os.walk(path) for f in fs)
 
 
-class Workload:
-    name = ""
+class Suite:
     rows = 0  # input rows one iteration reads (the rows_per_s numerator)
     # ops whose job groups the spark.* layer metrics fold; None = all
     spark_ops: tuple[str, ...] | None = None
@@ -125,7 +127,7 @@ class Workload:
 
 
 # ---------------------------------------------------------------------------
-class FlagshipPages(Workload):
+class FlagshipPages(Suite):
     """Two calls per iteration over seeded pages:
 
     - ``flagship``: read parquet -> extract_points -> pip_join(demo
@@ -137,8 +139,7 @@ class FlagshipPages(Workload):
       the first run's output.
     """
 
-    name = "flagship_pages"
-    n_pages = 120_000
+    n_pages = 60_000
     n_files = 8
     ckpt_files = 1
     stage_names = ("extract", "pip", "tiles")
@@ -282,11 +283,10 @@ class FlagshipPages(Workload):
 
 
 # ---------------------------------------------------------------------------
-class SpatialJoins(Workload):
+class SpatialJoins(Suite):
     """Operator calls over a city-skewed points table: radius, kNN,
     polygon-table PIP, box overlap, tile rollup and a salted join."""
 
-    name = "spatial_joins"
     n_points = 30_000
     n_centers = 60
     n_boxes = 1_200
@@ -429,26 +429,16 @@ class SpatialJoins(Workload):
 
 
 # ---------------------------------------------------------------------------
-class DocDedup(Workload):
-    """exact_dedup and minhash_neardup_pairs over planted documents,
-    semdedup over planted embeddings."""
+class TextDedup(Suite):
+    """exact_dedup and minhash_neardup_pairs over planted documents."""
 
-    name = "doc_dedup"
     n_docs = 5_000
-    n_vecs = 1_000
-    dim = 64
     jaccard_min = 0.5
-    # cos > 0.8 (0.8^2 = 16/25): planted duplicates sit at cos >= 0.9,
-    # unrelated 64-d unit vectors essentially never above 0.8
-    tau = (16, 25)
 
     def generate(self) -> None:
         self.docs = inputs.documents(self.ctx.seed, self.n_docs)
-        self.emb = inputs.embeddings(self.ctx.seed, self.n_vecs, self.dim)
         self.docs_dir = inputs.write_parquet(self.docs, self.ctx.path("docs"), 2 * self.ctx.cores)
-        self.emb_dir = inputs.write_parquet(self.emb[["vec_id", "embedding"]],
-                                            self.ctx.path("emb"), 2 * self.ctx.cores)
-        self.rows = 2 * self.n_docs + self.n_vecs
+        self.rows = 2 * self.n_docs
 
     def expect(self) -> None:
         d = self.docs
@@ -459,8 +449,6 @@ class DocDedup(Workload):
         self.shingles = dict(zip(d.doc_id.tolist(), map(O.shingle_set, d.text)))
         self.identical = {tuple(sorted(p)) for grp in g.apply(list) if len(grp) > 1
                           for p in ((a, b) for i, a in enumerate(grp) for b in grp[i + 1:])}
-        e = self.emb
-        self.group = dict(zip(e.vec_id.tolist(), e.src_id.tolist()))
 
     def _check_minhash(self, got: pd.DataFrame) -> bool:
         pairs = set()
@@ -470,6 +458,52 @@ class DocDedup(Workload):
                 return False
             pairs.add((min(a, b), max(a, b)))
         return len(pairs) == len(got) and self.identical <= pairs
+
+    def ops(self) -> list[Op]:
+        from geospark import textops
+
+        docs = lambda: self.spark.read.parquet(self.docs_dir)  # noqa: E731
+        return [
+            Op("textops.exact_dedup",
+               lambda: _rows(textops.exact_dedup(docs()), "doc_id", "canonical_id", "group_size"),
+               lambda got: got == self.exact_want),
+            Op("textops.minhash",
+               lambda: textops.minhash_neardup_pairs(docs(), self.jaccard_min).toPandas(),
+               self._check_minhash),
+        ]
+
+    def layers(self, tr: Tracer) -> dict[str, float]:
+        from geospark import textops
+
+        out = super().layers(tr)
+        docs = self.spark.read.parquet(self.docs_dir)
+        cand = textops.lsh_candidates(textops.minhash_signatures_from_shingles(
+            textops.shingles(docs))).count()
+        verified = textops.minhash_neardup_pairs(docs, self.jaccard_min).count()
+        out["textops.minhash.cand_ratio"] = verified / cand
+        return out
+
+
+# ---------------------------------------------------------------------------
+class SemDedup(Suite):
+    """semdedup over planted embeddings: a k-means bucketing, then an
+    all-pairs cosine test inside each bucket."""
+
+    n_vecs = 1_000
+    dim = 64
+    # cos > 0.8 (0.8^2 = 16/25): planted duplicates sit at cos >= 0.9,
+    # unrelated 64-d unit vectors essentially never above 0.8
+    tau = (16, 25)
+
+    def generate(self) -> None:
+        self.emb = inputs.embeddings(self.ctx.seed, self.n_vecs, self.dim)
+        self.emb_dir = inputs.write_parquet(self.emb[["vec_id", "embedding"]],
+                                            self.ctx.path("emb"), 2 * self.ctx.cores)
+        self.rows = self.n_vecs
+
+    def expect(self) -> None:
+        e = self.emb
+        self.group = dict(zip(e.vec_id.tolist(), e.src_id.tolist()))
 
     def _check_semdedup(self, got: pd.DataFrame) -> bool:
         """No vector joins another planted group; every duplicate that
@@ -488,16 +522,9 @@ class DocDedup(Workload):
         return True
 
     def ops(self) -> list[Op]:
-        from geospark import embeddings, textops
+        from geospark import embeddings
 
-        docs = lambda: self.spark.read.parquet(self.docs_dir)  # noqa: E731
         return [
-            Op("textops.exact_dedup",
-               lambda: _rows(textops.exact_dedup(docs()), "doc_id", "canonical_id", "group_size"),
-               lambda got: got == self.exact_want),
-            Op("textops.minhash",
-               lambda: textops.minhash_neardup_pairs(docs(), self.jaccard_min).toPandas(),
-               self._check_minhash),
             Op("embeddings.semdedup",
                lambda: embeddings.semdedup(self.spark.read.parquet(self.emb_dir),
                                            tau_num=self.tau[0], tau_den=self.tau[1])
@@ -505,16 +532,52 @@ class DocDedup(Workload):
                self._check_semdedup),
         ]
 
+
+# ---------------------------------------------------------------------------
+class Workload:
+    """The suites of one workload, run one after another as one
+    iteration. Inputs, checks and layer metrics stay per suite."""
+
+    def __init__(self, ctx: Ctx, suites: tuple[type[Suite], ...]):
+        self.suites = [cls(ctx) for cls in suites]
+
+    @property
+    def rows(self) -> int:
+        return sum(s.rows for s in self.suites)
+
+    @property
+    def spark_ops(self) -> tuple[str, ...]:
+        return tuple(name for s in self.suites for name in
+                     (s.spark_ops if s.spark_ops is not None else [op.name for op in s.ops()]))
+
+    def generate(self) -> None:
+        for s in self.suites:
+            s.generate()
+
+    def expect(self) -> None:
+        for s in self.suites:
+            s.expect()
+
+    def ops(self) -> list[Op]:
+        return [op for s in self.suites for op in s.ops()]
+
+    def traced_iteration(self, tr: Tracer) -> tuple[int, int]:
+        attempted = failed = 0
+        for s in self.suites:
+            a, f = s.traced_iteration(tr)
+            attempted += a
+            failed += f
+        return attempted, failed
+
     def layers(self, tr: Tracer) -> dict[str, float]:
-        from geospark import textops
+        return {k: v for s in self.suites for k, v in s.layers(tr).items()}
 
-        out = super().layers(tr)
-        docs = self.spark.read.parquet(self.docs_dir)
-        cand = textops.lsh_candidates(textops.minhash_signatures_from_shingles(
-            textops.shingles(docs))).count()
-        verified = textops.minhash_neardup_pairs(docs, self.jaccard_min).count()
-        out["textops.minhash.cand_ratio"] = verified / cand
-        return out
+    def record(self) -> dict:
+        return {k: v for s in self.suites for k, v in s.record().items()}
 
 
-WORKLOADS = {w.name: w for w in (FlagshipPages, SpatialJoins, DocDedup)}
+# name -> suites; checkpoint/resume rides in FlagshipPages' second call
+WORKLOADS = {
+    "flagship_pages": (FlagshipPages, TextDedup),
+    "spatial_joins": (SpatialJoins, SemDedup),
+}
