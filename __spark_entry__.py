@@ -1206,9 +1206,9 @@ def _bm25_oracle() -> str:
         q(query_id, term) AS (VALUES {qvals}),
         scored AS (
             SELECT q.query_id, tf.doc_id,
-                   sum(CAST(floor(1000.0 * {idf}) AS BIGINT)
+                   CAST(sum(CAST(floor(1000.0 * {idf}) AS BIGINT)
                        * CAST(floor(1000.0 * {norm}) AS BIGINT))
-                       AS score_q
+                       AS BIGINT) AS score_q
             FROM tf JOIN q USING (term) JOIN dfr USING (term)
             CROSS JOIN stats
             GROUP BY 1, 2
@@ -2712,10 +2712,12 @@ PQ_RERANK = 40
 def _q_emb_semdedup(spark, sf_dir):
     """SemDeDup (embeddings.semdedup, Abbas et al. 2023): k-means
     clusters bound the pairwise cosine comparison (the paper's n^2 ->
-    sum(|cluster|^2) trick), duplicates close transitively via
-    large/small-star CC, canonical = min vec_id. Integer-exact (the
-    trained 1e6 quantization floor-divided to 1e3, integer cosine
-    predicate 400*dot^2 > 49*|a|^2*|b|^2), so the independent twin
+    sum(|cluster|^2) trick); one grouped-map numpy kernel per
+    cluster tests every pair on exact int64 Gram tiles and closes the
+    duplicates transitively by min-id label propagation, canonical =
+    min vec_id. Integer-exact (the trained 1e6 quantization
+    floor-divided to 1e3, integer cosine predicate
+    400*dot^2 > 49*|a|^2*|b|^2), so the independent twin
     goldens.semdedup_py (union-find, brute pairs) replays it
     bit-identically."""
     from geospark.embeddings import semdedup
@@ -6149,7 +6151,8 @@ def oracle_sql() -> dict[str, str]:
         ),
         # independent-ALGORITHM oracle: plain-Python Lloyd + brute
         # within-cluster integer cosine + union-find
-        # (goldens.semdedup_py) vs the engine's large/small-star CC
+        # (goldens.semdedup_py) vs the engine's per-cluster numpy
+        # kernel (Gram tiles + label propagation)
         "emb_semdedup": _values_sql(
             sdd_rows,
             [("vec_id", "BIGINT"), ("centroid_id", "INTEGER"),

@@ -1192,6 +1192,67 @@ def ivf_topk_trained(emb: DataFrame, query_ids: list[int], k: int = 10,
 SEMDEDUP_TAU = (49, 400)  # cos > 0.35  (0.35^2 = 49/400 exactly)
 
 
+# the Gram matrix is computed in row tiles of at most this many entries,
+# so a worker holds one cluster's vectors plus one tile
+_SEMDEDUP_TILE = 1 << 22
+
+
+def semdedup_canonical(ids: np.ndarray, v_q: np.ndarray, tau_num: int,
+                       tau_den: int) -> np.ndarray:
+    """Canonical ids of ONE k-means cluster: the exact SemDeDup kernel.
+
+    ``ids`` are the cluster's n >= 1 vec_ids, ``v_q`` its n x dim
+    int64 1e6-quantized vectors. Components coarsen by floor division
+    (floor(floor(x*1e6)/1000) == floor(x*1000)), every pair i < j is
+    tested with the integer cosine predicate ``dot > 0 AND tau_den *
+    dot^2 > tau_num * |a|^2 * |b|^2`` over an exact int64 Gram matrix
+    built in row tiles, and duplicate groups close by min-id label
+    propagation. Returns canonical ids aligned with ``ids`` (the
+    minimum vec_id of each group; the id itself when unique), for any
+    row order of the input.
+
+    Raises ArithmeticError unless max(tau) * max|v|^4 < 2^63 — by
+    Cauchy-Schwarz dot^2 <= |a|^2 |b|^2, so this bound keeps every
+    product below 2^63 where numpy int64 would otherwise wrap."""
+    ids = np.asarray(ids, dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    v = np.asarray(v_q, dtype=np.int64)[order] // 1000
+    n = len(ids)
+    max_abs = int(np.abs(v).max())
+    if v.shape[1] * max_abs * max_abs >= 1 << 63:
+        raise ArithmeticError("semdedup: squared norm overflows int64")
+    norms = (v * v).sum(axis=1)
+    max_norm = int(norms.max())
+    if max(abs(tau_num), abs(tau_den)) * max_norm * max_norm >= 1 << 63:
+        raise ArithmeticError(
+            "semdedup: tau * |v|^4 overflows int64 in the cosine predicate")
+    tile = max(1, _SEMDEDUP_TILE // n)
+    src, dst = [], []
+    for r0 in range(0, n, tile):
+        g = v[r0:r0 + tile] @ v.T
+        # pairs i < j with dot > 0: tile row t is global row r0 + t
+        i, j = np.nonzero(np.triu(g > 0, k=r0 + 1))
+        d = g[i, j]
+        i += r0
+        keep = tau_den * d * d > tau_num * norms[i] * norms[j]
+        src.append(i[keep])
+        dst.append(j[keep])
+    src, dst = np.concatenate(src), np.concatenate(dst)
+    # rows are in id order, so the min row label is the min vec_id
+    lab = np.arange(n)
+    while True:
+        nxt = lab.copy()
+        np.minimum.at(nxt, src, lab[dst])
+        np.minimum.at(nxt, dst, lab[src])
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, lab):
+            break
+        lab = nxt
+    out = np.empty(n, dtype=np.int64)
+    out[order] = ids[order][lab]
+    return out
+
+
 def semdedup(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
              tau_num: int = SEMDEDUP_TAU[0],
              tau_den: int = SEMDEDUP_TAU[1],
@@ -1206,68 +1267,48 @@ def semdedup(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
     missed BY DESIGN (the paper's approximation).
 
     Integer-exact end to end, so the result replays in plain Python:
-    the trained quantized vectors coarsen to floor-div-1000 ints
-    (dot <= dim*1e6 per pair keeps every product in int64 at
-    dim<=~2000), and ``cos > tau`` evaluates as the integer predicate
-    ``dot > 0 AND tau_den * dot^2 > tau_num * |a|^2 * |b|^2`` — no
-    sqrt, no float division. Duplicate groups close transitively via
-    large/small-star connected components (min-id canonical), exactly
-    like the text near-dup family.
+    the trained quantized vectors coarsen to floor-div-1000 ints, and
+    ``cos > tau`` evaluates as the integer predicate ``dot > 0 AND
+    tau_den * dot^2 > tau_num * |a|^2 * |b|^2`` — no sqrt, no float
+    division. Duplicate groups close transitively (min-id canonical).
+    A cluster whose tau * max|v|^4 reaches 2^63 raises ArithmeticError
+    instead of wrapping (see :func:`semdedup_canonical`).
 
-    Plan shape: kmeans_fit's map-side training; ONE self-join
-    shuffled on centroid_id (AQE skew-join splits hot clusters); the
-    pair predicate is a codegen zip_with/aggregate fold; CC runs
-    O(log n) all-Catalyst rounds on the (tiny) duplicate-pair
-    relation; survivors left-join the pair components back.
+    Plan shape: kmeans_fit's map-side training, then ONE
+    ``groupBy(centroid_id).applyInPandas`` — a single shuffle on the
+    cluster key, after which :func:`semdedup_canonical` runs per
+    cluster in numpy: exact int64 Gram tiles for the pair predicate
+    and min-id label propagation for the groups (valid locally,
+    since duplicate edges never cross clusters). No self-join, no
+    connected-components rounds, no join back. A whole cluster goes
+    to one Python worker, so there is no AQE skew split of a hot
+    cluster: cluster size is bounded only through ``n_centroids``,
+    and worker memory is one cluster's vectors plus one Gram tile of
+    at most 2^22 entries.
 
     Returns one row per vector: (vec_id, centroid_id, canonical_id,
     is_dup) with canonical_id = min vec_id of its semantic-duplicate
     group (itself when unique)."""
-    from geospark.graph import connected_components
-    from geospark.spool import spool
+    tau_num, tau_den = int(tau_num), int(tau_den)
+
+    def cluster(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        canon = semdedup_canonical(ids, np.stack(pdf["v_q"].to_numpy()),
+                                   tau_num, tau_den)
+        return pd.DataFrame({
+            "vec_id": ids,
+            "centroid_id": pdf["centroid_id"].to_numpy(dtype=np.int32),
+            "canonical_id": canon,
+            "is_dup": (canon != ids).astype(np.int32),
+        })
 
     a, _cents = kmeans_fit(emb, k=n_centroids, iters=iters,
                            id_col=id_col, vec_col=vec_col,
                            with_vec=True, arrow=arrow)
-    # the assignment feeds BOTH self-join sides and the final
-    # labeling join — spool it once or the corpus-sized assignment
-    # pass (an Arrow kernel on the arrow path) recomputes three times
-    a = spool(a.select("vec_id", "centroid_id", "v_q"),
-              "semdedup_assign")
-    # coarsen the spooled 1e6 quantization by exact floor division —
-    # floor(floor(x*1e6)/1000) == floor(x*1000) identically
-    v3 = F.expr(
-        "transform(v_q, v -> (v - pmod(v, 1000)) DIV 1000)")
-    norm = ("aggregate({v}, 0L, (acc, x) -> acc + x * x)")
-    side = a.select(
-        "centroid_id", F.col("vec_id").alias("_id"), v3.alias("_v"),
-    ).withColumn("_n", F.expr(norm.format(v="_v")))
-    pa = side.select("centroid_id", F.col("_id").alias("id_a"),
-                     F.col("_v").alias("_va"), F.col("_n").alias("_na"))
-    pb = side.select("centroid_id", F.col("_id").alias("id_b"),
-                     F.col("_v").alias("_vb"), F.col("_n").alias("_nb"))
-    dot = F.expr(
-        "aggregate(zip_with(_va, _vb, (x, y) -> x * y), 0L, "
-        "(acc, v) -> acc + v)")
-    edges = (
-        pa.join(pb, "centroid_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("_dot", dot)
-        .filter((F.col("_dot") > 0)
-                & (F.lit(int(tau_den)) * F.col("_dot") * F.col("_dot")
-                   > F.lit(int(tau_num)) * F.col("_na") * F.col("_nb")))
-        .select("id_a", "id_b")
-    )
-    cc = connected_components(edges, "id_a", "id_b")
     return (
-        a.select("vec_id", "centroid_id")
-        .join(cc, F.col("vec_id") == F.col("node"), "left")
-        .select(
-            "vec_id", "centroid_id",
-            F.coalesce(F.col("component"), F.col("vec_id"))
-            .alias("canonical_id"),
-        )
-        .withColumn(
-            "is_dup",
-            (F.col("canonical_id") != F.col("vec_id")).cast("int"))
+        a.select("vec_id", "centroid_id", "v_q")
+        .groupBy("centroid_id")
+        .applyInPandas(
+            cluster,
+            "vec_id long, centroid_id int, canonical_id long, is_dup int")
     )

@@ -1385,9 +1385,9 @@ def semdedup_py(vecs: list[tuple[int, list[float]]], k: int, iters: int,
                 ) -> list[tuple[int, int, int, int]]:
     """Independent twin of embeddings.semdedup: _lloyd_py training +
     lowest-id assignment, floor-div-1000 coarsened components, the
-    integer cosine predicate, and a plain union-find (vs the engine's
-    large/small-star CC). Returns sorted (vec_id, centroid_id,
-    canonical_id, is_dup) rows."""
+    integer cosine predicate, and a plain union-find over brute pairs
+    (vs the engine's per-cluster Gram tiles and label propagation).
+    Returns sorted (vec_id, centroid_id, canonical_id, is_dup) rows."""
     qv = _quantize_vecs(vecs)
     cents = _lloyd_py(qv, k, iters)
     assign = {

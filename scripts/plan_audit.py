@@ -931,15 +931,16 @@ def main() -> None:
     audit(
         "emb_semdedup (cluster-bounded semantic dedup)",
         q["emb_semdedup"](spark, sf_dir),
-        must=["SortMergeJoin"],
-        must_not=["BatchEvalPython", "CartesianProduct"],
-        notes="the pairwise cosine comparison is a centroid_id-keyed "
-              "self-join (SortMergeJoin on the cluster key — the "
-              "SemDeDup n^2 -> sum(|cluster|^2) bound; AQE skew-join "
-              "splits hot clusters at scale) with the integer "
-              "predicate as a codegen zip_with fold; CC rounds are "
-              "all-Catalyst; the only Python is the kmeans Arrow "
-              "assignment kernel.",
+        must=["FlatMapGroupsInPandas"],
+        must_not=["BatchEvalPython", "CartesianProduct", "SortMergeJoin"],
+        notes="one shuffle on centroid_id feeds a grouped-map pandas "
+              "kernel (FlatMapGroupsInPandas) that runs per cluster: "
+              "exact int64 Gram tiles for the integer cosine predicate "
+              "(the SemDeDup n^2 -> sum(|cluster|^2) bound) and min-id "
+              "label propagation for the groups — no self-join, no CC "
+              "rounds, no join back; a hot cluster is not skew-split. "
+              "The other Python is the kmeans Arrow assignment "
+              "kernel.",
     )
 
     audit(

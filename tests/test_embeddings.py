@@ -781,3 +781,80 @@ def test_semdedup_group_invariants(spark):
         assert c["is_dup"] == 0 and c["canonical_id"] == canon
         assert canon == min(m["vec_id"] for m in members)
         assert len({m["centroid_id"] for m in members}) == 1, canon
+
+
+def _uf_canonical(ids, v_q, tau_num, tau_den):
+    """Brute-force twin of E.semdedup_canonical: Python-int pairs over
+    the floor-div-1000 components and a plain union-find keeping the
+    lower id as root."""
+    v = [[int(x) // 1000 for x in row] for row in v_q]
+    ids = [int(i) for i in ids]
+    norms = [sum(x * x for x in row) for row in v]
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a in range(len(ids)):
+        for b in range(a + 1, len(ids)):
+            d = sum(x * y for x, y in zip(v[a], v[b]))
+            if d > 0 and tau_den * d * d > tau_num * norms[a] * norms[b]:
+                ra, rb = find(ids[a]), find(ids[b])
+                parent[max(ra, rb)] = min(ra, rb)
+    return [find(i) for i in ids]
+
+
+def _planted_cluster(n=301, dim=16, seed=4):
+    """n quantized vectors: 40 planted groups (a base plus noisy
+    copies, so some copies only join their group transitively) under
+    sparse shuffled ids."""
+    rng = np.random.default_rng(seed)
+    base = rng.integers(-10**6, 10**6, (40, dim))
+    v_q = base[rng.integers(0, 40, n)] + rng.integers(-4 * 10**5, 4 * 10**5,
+                                                      (n, dim))
+    ids = rng.permutation(10 * n)[:n].astype(np.int64) * 3 + 7
+    return ids, v_q.astype(np.int64)
+
+
+def test_semdedup_kernel_spans_tiles_and_matches_union_find(monkeypatch):
+    """The per-cluster kernel over many Gram tiles (6 rows each, the
+    last one short) equals a brute-force union-find, and a shuffled
+    row order returns the same canonical id for every vector."""
+    monkeypatch.setattr(E, "_SEMDEDUP_TILE", 6 * 301)
+    ids, v_q = _planted_cluster()
+    got = E.semdedup_canonical(ids, v_q, 16, 25)
+    want = _uf_canonical(ids, v_q, 16, 25)
+    assert got.tolist() == want
+    groups = {}
+    for i, c in zip(ids.tolist(), want):
+        groups.setdefault(c, []).append(i)
+    assert sum(len(g) > 2 for g in groups.values()) >= 30  # not vacuous
+    perm = np.random.default_rng(1).permutation(len(ids))
+    shuffled = E.semdedup_canonical(ids[perm], v_q[perm], 16, 25)
+    assert dict(zip(ids[perm].tolist(), shuffled.tolist())) == dict(
+        zip(ids.tolist(), got.tolist()))
+
+
+def test_semdedup_kernel_single_vector():
+    got = E.semdedup_canonical(np.array([42]), np.array([[5000, -3000]]),
+                               49, 400)
+    assert got.tolist() == [42]
+
+
+def test_semdedup_kernel_raises_instead_of_wrapping():
+    """Two identical vectors whose tau * dot^2 exceeds 2^63: numpy int64
+    wraps that product, the kernel raises ArithmeticError; just inside
+    the bound the pair is an exact duplicate."""
+    big = np.array([[8 * 10**7] * 2] * 2)     # coarsened |v|^2 = 1.28e10
+    d = (big[0] // 1000 * big[1] // 1000).sum()
+    with np.errstate(over="ignore"):                 # int64 wraps
+        assert int(np.int64(400) * d * d) != 400 * int(d) ** 2
+    with pytest.raises(ArithmeticError):
+        E.semdedup_canonical(np.array([1, 2]), big, 49, 400)
+    with pytest.raises(ArithmeticError):          # |v|^2 itself wraps
+        E.semdedup_canonical(np.array([1, 2]), big * 10**5, 49, 400)
+    ok = np.array([[8 * 10**6] * 2] * 2)      # 400 * 1.28e8^2 < 2^63
+    assert E.semdedup_canonical(np.array([1, 2]), ok, 49, 400).tolist() \
+        == [1, 1]
