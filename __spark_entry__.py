@@ -25,7 +25,7 @@ from geospark import geodata as G
 from geospark import cells as Ce
 from geospark.cells import tile_rollup, with_tile
 from geospark.functions import kernels as K
-from geospark.joins import box_query, knn_join, pip_join, radius_join
+from geospark.joins import box_query, knn_join_df, pip_join, radius_join_df
 
 
 def _round_half_up(v: float, nd: int) -> float:
@@ -160,9 +160,15 @@ def _q_haversine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _demo_centers(spark: SparkSession) -> DataFrame:
+    """The 4 demo query centers as a (query_id, q_lat, q_lng) relation."""
+    return spark.createDataFrame(
+        G.DEMO_CENTERS, "query_id long, q_lat double, q_lng double")
+
+
 def _q_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = G.events_points(spark, sf_dir).select("event_id", "lat", "lng")
-    out = radius_join(pts, G.DEMO_CENTERS, max_m=RADIUS_M)
+    out = radius_join_df(pts, _demo_centers(spark), max_m=RADIUS_M)
     return out.select(
         "query_id", "event_id", F.floor("dist_m").alias("dist_floor_m")
     )
@@ -194,7 +200,7 @@ def _q_box_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = G.events_points(spark, sf_dir).select("event_id", "lat", "lng")
-    out = knn_join(pts, G.DEMO_CENTERS, k=KNN_K, id_col="event_id")
+    out = knn_join_df(pts, _demo_centers(spark), k=KNN_K, id_col="event_id")
     return out.select(
         "query_id", "event_id", F.floor("dist_m").alias("dist_floor_m")
     )
@@ -213,7 +219,7 @@ def _q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = G.events_points(spark, sf_dir).select(
         "event_id", "lat", "lng", "event_type")
-    return knn_classify(pts, G.DEMO_CENTERS, k=KNN_CLS_K,
+    return knn_classify(pts, _demo_centers(spark), k=KNN_CLS_K,
                         label_col="event_type", id_col="event_id")
 
 
@@ -1380,10 +1386,7 @@ def _q_approx_polyline_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("f_lat").isNotNull())
         .repartition(spark.sparkContext.defaultParallelism)  # see _q_polyline_dist
     )
-    centers = spark.createDataFrame(
-        [(q, la, ln) for q, la, ln in G.DEMO_CENTERS],
-        "query_id long, q_lat double, q_lng double",
-    ).withColumn(
+    centers = _demo_centers(spark).withColumn(
         "scale", K.approx_distance_lng_degrees(F.col("q_lat"), F.col("q_lng"))
     )
     pairs = seg.crossJoin(F.broadcast(centers))
@@ -1426,10 +1429,7 @@ def _q_polyline_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 5x-amplified transcendental scoring below must fan out
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    centers = spark.createDataFrame(
-        [(q, la, ln) for q, la, ln in G.DEMO_CENTERS],
-        "query_id long, q_lat double, q_lng double",
-    )
+    centers = _demo_centers(spark)
     pairs = seg.crossJoin(F.broadcast(centers))
     scored = K.with_closest_on_segment(
         pairs, "q_lat", "q_lng", "f_lat", "f_lng", "lat", "lng",
@@ -3775,8 +3775,10 @@ def _query_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # DuckDB oracles (same formulas, generated by geospark.geodata)
 # ---------------------------------------------------------------------------
 def _centers_values() -> str:
+    # BIGINT query_id: Spark's centers relation types it as long
     rows = ", ".join(
-        f"({qid}, {repr(lat)}, {repr(lng)})" for qid, lat, lng in G.DEMO_CENTERS
+        f"(CAST({qid} AS BIGINT), {repr(lat)}, {repr(lng)})"
+        for qid, lat, lng in G.DEMO_CENTERS
     )
     return f"(VALUES {rows}) AS c(query_id, q_lat, q_lng)"
 

@@ -17,12 +17,6 @@ from geospark.functions import kernels as K
 CELL_ZOOM = 16  # tile_hash_32's fixed zoom (src/latlng.cc:78)
 
 
-def with_cell(df: DataFrame, lat: str = "lat", lng: str = "lng",
-              col: str = "cell") -> DataFrame:
-    """Append the z=16 quadkey Morton cell (S10)."""
-    return with_cell_at_zoom(df, CELL_ZOOM, lat, lng, col)
-
-
 def with_cell_at_zoom(df: DataFrame, zoom: int, lat: str = "lat",
                       lng: str = "lng", col: str = "cell") -> DataFrame:
     """Append the Morton cell at ``zoom`` — STAGED: the z=16 pixel
@@ -85,25 +79,6 @@ def with_tile(df: DataFrame, zoom: int, lat: str = "lat", lng: str = "lng",
         .withColumn(prefix + "y", K.latlng_to_tile_y(F.col(lat), zoom, tile_size))
         .withColumn("zoom", F.lit(zoom))
     )
-
-
-def with_tile_bounds(df: DataFrame, zoom: int, tx: str = "tile_x",
-                     ty: str = "tile_y", tile_size: int = 4096) -> DataFrame:
-    """Append the merc AABB of each tile (P7, webmercator.h:184-198)."""
-    x1, y1, x2, y2 = K.tile_bounds_merc(F.col(tx), F.col(ty), zoom, tile_size)
-    return (
-        df.withColumn("bounds_min_x", x1)
-        .withColumn("bounds_min_y", y1)
-        .withColumn("bounds_max_x", x2)
-        .withColumn("bounds_max_y", y2)
-    )
-
-
-def cell_of(lat, lng, zoom: int = CELL_ZOOM) -> Column:
-    """Morton cell at arbitrary zoom <= 16 as a Column."""
-    if zoom == CELL_ZOOM:
-        return K.tile_hash_32(lat, lng)
-    return K.cell_at_zoom(lat, lng, zoom)
 
 
 # ---------------------------------------------------------------------------

@@ -123,11 +123,6 @@ def geohash(lat: Column, lng: Column, chars: int = 6) -> Column:
     return _chars_of(geohash_int(lat, lng, chars), chars)
 
 
-def geohash_prefix(gh: Column, chars: int) -> Column:
-    """Parent geohash = string prefix (the rollup key — zero math)."""
-    return F.substring(gh, 1, chars)
-
-
 # ---------------------------------------------------------------------------
 # Staged variants — the hot-path API: quantized axes and the code become
 # real columns so each is evaluated once per row and the plan depth

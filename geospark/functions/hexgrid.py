@@ -177,30 +177,6 @@ def hex_r(cell) -> Column:
     return (_c(cell).bitwiseAND(F.lit(MASK29)) - F.lit(OFF)).cast("long")
 
 
-def hex_center_x(cell, res: int) -> Column:
-    c, s, size = _COS[res], _SIN[res], _SIZE[res]
-    xl = F.lit(size) * (F.lit(SQRT3) * hex_q(cell)
-                        + F.lit(SQRT3 / 2.0) * hex_r(cell))
-    yl = F.lit(size) * F.lit(1.5) * hex_r(cell)
-    return xl * F.lit(c) - yl * F.lit(s)      # rotate by +res*ALPHA
-
-
-def hex_center_y(cell, res: int) -> Column:
-    c, s, size = _COS[res], _SIN[res], _SIZE[res]
-    xl = F.lit(size) * (F.lit(SQRT3) * hex_q(cell)
-                        + F.lit(SQRT3 / 2.0) * hex_r(cell))
-    yl = F.lit(size) * F.lit(1.5) * hex_r(cell)
-    return xl * F.lit(s) + yl * F.lit(c)
-
-
-def hex_center_lat(cell, res: int) -> Column:
-    return K.merc_to_lat(hex_center_y(cell, res))
-
-
-def hex_center_lng(cell, res: int) -> Column:
-    return K.merc_to_lng(hex_center_x(cell, res))
-
-
 def hex_parent(cell) -> Column:
     """Aperture-7 parent: the res-1 cell containing this cell's
     center. Like H3's hierarchy this is approximate containment — a
@@ -254,11 +230,6 @@ def hex_shift(cell, dq: int, dr: int) -> Column:
     return (_c(cell) + F.lit(dq * (1 << 29) + dr)).cast("long")
 
 
-def hex_kring(cell, k: int) -> Column:
-    """Array column of the cell's k-ring ids (cell itself included)."""
-    return F.array(*[hex_shift(cell, dq, dr) for dq, dr in kring_offsets(k)])
-
-
 # ---------------------------------------------------------------------------
 # DuckDB SQL twins — literal-identical constants, same rounding
 # ---------------------------------------------------------------------------
@@ -294,24 +265,6 @@ def hex_cell_sql(lat: str, lng: str, res: int) -> str:
          f"THEN - {rq} - {rs} ELSE {rr} END)")
     return (f"(CAST({res} AS BIGINT) * {1 << 58} "
             f"+ ({q} + {OFF}) * {1 << 29} + ({r} + {OFF}))")
-
-
-def hex_center_x_sql(cell: str, res: int) -> str:
-    c, s, size = _COS[res], _SIN[res], _SIZE[res]
-    q = f"(({cell} // {1 << 29}) % {1 << 29} - {OFF})"
-    r = f"({cell} % {1 << 29} - {OFF})"
-    xl = f"({size!r} * ({SQRT3!r} * {q} + {SQRT3 / 2.0!r} * {r}))"
-    yl = f"({size!r} * 1.5 * {r})"
-    return f"({xl} * {c!r} - {yl} * {s!r})"
-
-
-def hex_center_y_sql(cell: str, res: int) -> str:
-    c, s, size = _COS[res], _SIN[res], _SIZE[res]
-    q = f"(({cell} // {1 << 29}) % {1 << 29} - {OFF})"
-    r = f"({cell} % {1 << 29} - {OFF})"
-    xl = f"({size!r} * ({SQRT3!r} * {q} + {SQRT3 / 2.0!r} * {r}))"
-    yl = f"({size!r} * 1.5 * {r})"
-    return f"({xl} * {s!r} + {yl} * {c!r})"
 
 
 def hex_parent_sql(cell: str) -> str:

@@ -12,8 +12,6 @@ Reference files cited below live under /root/reference/.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -333,25 +331,6 @@ def cell_at_zoom(lat, lng, z: int) -> Column:
     """Morton cell at an arbitrary zoom z <= 16 (parent prefix of S10:
     tile.parent() chains == dropping the two low bits per level)."""
     return F.shiftright(tile_hash_32(lat, lng), 2 * (16 - z))
-
-
-def cell_parent(cell, delta_z: int = 1) -> Column:
-    return F.shiftright(_c(cell).cast("long"), 2 * delta_z)
-
-
-def cell_to_tile_xy(cell) -> tuple[Column, Column]:
-    """Inverse Morton: cell -> (tile_x, tile_y) at the cell's zoom."""
-    c = _c(cell).cast("long")
-
-    def compact(v: Column) -> Column:
-        v = v.bitwiseAND(F.lit(0x55555555))
-        v = (v.bitwiseOR(F.shiftright(v, 1))).bitwiseAND(F.lit(0x33333333))
-        v = (v.bitwiseOR(F.shiftright(v, 2))).bitwiseAND(F.lit(0x0F0F0F0F))
-        v = (v.bitwiseOR(F.shiftright(v, 4))).bitwiseAND(F.lit(0x00FF00FF))
-        v = (v.bitwiseOR(F.shiftright(v, 8))).bitwiseAND(F.lit(0x0000FFFF))
-        return v
-
-    return compact(c), compact(F.shiftright(c, 1))
 
 
 # ---------------------------------------------------------------------------
@@ -697,8 +676,3 @@ def approx_closest_on_segment(
         .otherwise(pos_x * pos_x + pos_y * pos_y)
     )
     return out_lat, out_lng, out_sq
-
-
-def py_resolution(z: int, tile_size: int = 4096) -> float:
-    """Python-side resolution (same math as `resolution`)."""
-    return (2.0 * math.pi * MERC_EARTH_RADIUS / tile_size) / (1 << z)

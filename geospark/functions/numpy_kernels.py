@@ -244,19 +244,6 @@ def apply_simplify_mask(mask: np.ndarray, values: list):
     return [v for i, v in enumerate(values) if i == 0 or mask[i]]
 
 
-# --- M7 one-shot simplify (simplify_mask.h:272-290) --------------------------
-def simplify_pixels(xs: np.ndarray, ys: np.ndarray, pixel_precision: int = 1) -> np.ndarray:
-    if xs.size == 0:
-        raise ValueError("simplify: empty polyline")
-    mask = np.zeros(xs.size, dtype=bool)
-    mask[0] = True
-    mask[-1] = True
-    process_level(xs.astype(np.float64), ys.astype(np.float64),
-                  float(pixel_precision) * float(pixel_precision), mask,
-                  truncate=True)
-    return mask
-
-
 def simplify_dp_latlng(lats, lngs, max_distance_deg: float) -> np.ndarray:
     """L2 (src/polyline.cc:16-20): Douglas-Peucker with a degree
     tolerance, boost::geometry::simplify semantics (keep-mask form,

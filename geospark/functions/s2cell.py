@@ -207,19 +207,6 @@ def s2_parent_col(cell, level: int):
     return c.bitwiseAND(F.lit(~(lsb - 1))).bitwiseOR(F.lit(lsb))
 
 
-def s2_range_cols(cell):
-    """(range_min, range_max) Columns of an int64 S2 cell id — the
-    containment interval for BETWEEN range joins. lsb extraction
-    id & -id is exact on int64 for ids with bit 63 clear OR set
-    (two's complement), since the trailing-bit structure lives in the
-    low 61 bits."""
-    from pyspark.sql import functions as F
-
-    c = cell if not isinstance(cell, str) else F.col(cell)
-    lsb = c.bitwiseAND(-c)
-    return c - (lsb - F.lit(1)), c + (lsb - F.lit(1))
-
-
 # --- cap covering (mixed-level cell cover of a radius query) ----------------
 _EARTH_R = 6371000.0  # kernels.EARTH_RADIUS_M (haversine radius)
 
@@ -342,8 +329,8 @@ def s2_radius_join(points, centers: list[tuple[int, float, float]],
                    leaf_col: str = "leaf"):
     """Exact radius join via the S2 index: per center, cover_cap ->
     (level, cell) rows broadcast -> ancestor-at-level EQUI-join ->
-    exact haversine refine. Same semantics as joins.radius_join, with
-    the S2 cover replacing the quadkey cover explosion.
+    exact haversine refine. Same semantics as joins.radius_join_df,
+    with the S2 cover replacing the quadkey cover explosion.
 
     The join is a broadcast HASH join, not the BETWEEN interval form:
     a point lies in cover cell C iff its ancestor at C's level equals

@@ -18,7 +18,6 @@ are handled by AQE skew-join + optional salting (geospark.plans.skew).
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -32,29 +31,8 @@ from geospark.functions import numpy_kernels as NK
 
 
 # ---------------------------------------------------------------------------
-# Morton helpers (numpy side, matching kernels.tile_hash_32 exactly)
+# Cell-id helpers (numpy side, matching the Column cell ids exactly)
 # ---------------------------------------------------------------------------
-def _spread16(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.uint64) & np.uint64(0xFFFF)
-    v = (v | (v << np.uint64(8))) & np.uint64(0x00FF00FF)
-    v = (v | (v << np.uint64(4))) & np.uint64(0x0F0F0F0F)
-    v = (v | (v << np.uint64(2))) & np.uint64(0x33333333)
-    v = (v | (v << np.uint64(1))) & np.uint64(0x55555555)
-    return v
-
-
-def morton(tx: np.ndarray, ty: np.ndarray) -> np.ndarray:
-    """Interleave tile coords -> Morton cell (same bit layout as S10:
-    x in even bits, y in odd bits, finest zoom in the low bits)."""
-    return (_spread16(np.asarray(tx)) | (_spread16(np.asarray(ty)) << np.uint64(1))).astype(np.int64)
-
-
-def cell_of_latlng(lat, lng, zoom: int) -> np.ndarray:
-    """numpy twin of kernels.cell_at_zoom (S10 prefix)."""
-    full = NK.tile_hash_32(lat, lng)
-    return np.asarray(full, np.int64) >> np.int64(2 * (16 - zoom))
-
-
 def lin_id(tx: int, ty: int, zoom: int) -> int:
     """Linear cell id ``ty*2^z + tx`` in z16-prefix cell space — the
     physical join key (see cells.with_linear_cell_at_zoom for why the
@@ -407,18 +385,6 @@ def pip_join(points: DataFrame, layer: PolygonLayer,
 # ---------------------------------------------------------------------------
 # Radius join (Q2/Q3)
 # ---------------------------------------------------------------------------
-def _buffered_bbox(lat: float, lng: float, dist_m: float) -> tuple[float, float, float, float]:
-    """box{center}.extend(dist_m) (box.h:27-29 + :50-70), python twin:
-    constants 111000 / 111200 exactly as the reference."""
-    d_lat = dist_m / 111000.0
-    lat_min, lat_max = lat - d_lat, lat + d_lat
-    min_mpd = 111200.0 * math.cos(lat_min * math.pi / 180.0)
-    max_mpd = 111200.0 * math.cos(lat_max * math.pi / 180.0)
-    lng_min = lng - abs(dist_m / min_mpd)
-    lng_max = lng + abs(dist_m / max_mpd)
-    return lat_min, lng_min, lat_max, lng_max
-
-
 def _cover_ranges(lat_min, lng_min, lat_max, lng_max, z: int, pad: int = 1):
     """Vectorized bbox -> cover rectangle at zoom ``z``: returns
     ``(tx1, ty1, nx, ny)`` int64 arrays where x runs ``tx1 .. tx1+nx-1``
@@ -426,11 +392,11 @@ def _cover_ranges(lat_min, lng_min, lat_max, lng_max, z: int, pad: int = 1):
 
     ``pad`` adds a ring of cells around the bbox rectangle: the
     reference's box::extend lng buffer (box.h:50-70, replicated in
-    :func:`_buffered_bbox`) under-covers the true haversine disk at
-    high latitude / large radius (true max dLng = asin(sin(r/R)/
-    cos(lat))), so covers built from it keep a one-cell safety ring —
-    the exact refine still decides membership, the ring only restores
-    recall.
+    :func:`radius_join_df`'s cover UDF) under-covers the true
+    haversine disk at high latitude / large radius (true max dLng =
+    asin(sin(r/R)/cos(lat))), so covers built from it keep a one-cell
+    safety ring — the exact refine still decides membership, the ring
+    only restores recall.
     """
     lat_min = np.maximum(np.asarray(lat_min, np.float64), -NK.MERC_MAX_LATITUDE)
     lat_max = np.minimum(np.asarray(lat_max, np.float64), NK.MERC_MAX_LATITUDE)
@@ -478,35 +444,6 @@ def _enumerate_covers(tx1, ty1, nx, ny, z: int):
     return (ty << np.int64(z)) + tx, counts
 
 
-def _cover_cells_of_bbox(lat_min, lng_min, lat_max, lng_max, z: int,
-                         pad: int = 1) -> list[int]:
-    tx1, ty1, nx, ny = _cover_ranges(lat_min, lng_min, lat_max, lng_max, z, pad)
-    cells, _ = _enumerate_covers(tx1, ty1, nx, ny, z)
-    return [int(c) for c in cells]
-
-
-def _count_cover_cells(lat_min, lng_min, lat_max, lng_max, z: int,
-                       pad: int = 1) -> int:
-    """Cell count of the bbox cover at z WITHOUT enumerating."""
-    _, _, nx, ny = _cover_ranges(lat_min, lng_min, lat_max, lng_max, z, pad)
-    return int(nx[0] * ny[0])
-
-
-def _pick_cover_zoom(centers: list[tuple[int, float, float]], radius_m: float,
-                     max_cells_per_center: int = 64) -> int:
-    """Finest zoom whose per-center bbox cover stays under the cell
-    budget — keeps the broadcast build side tiny while maximizing
-    pruning selectivity."""
-    for z in range(20, -1, -1):
-        worst = 0
-        for _, lat, lng in centers:
-            bb = _buffered_bbox(lat, lng, radius_m)
-            worst = max(worst, _count_cover_cells(*bb, z))
-        if worst <= max_cells_per_center:
-            return z
-    return 0
-
-
 def cover_cells_series(lat_min, lng_min, lat_max, lng_max, z: int,
                        pad: int = 1) -> pd.Series:
     """Vectorized batch form for pandas UDFs: per-row cover cell LISTS
@@ -551,41 +488,6 @@ def neighbor_cells_series(lat, lng, zoom: int) -> pd.Series:
     return pa.ListArray.from_arrays(
         pa.array(offsets), pa.array(ids[keep], pa.int64())
     ).to_pandas()
-
-
-def radius_join(points: DataFrame, centers: list[tuple[int, float, float]],
-                max_m: float, min_m: float = 0.0,
-                lat: str = "lat", lng: str = "lng",
-                with_distance: bool = True) -> DataFrame:
-    """in_radius(_with_distance) as a join (src/point_rtree.cc:21-68):
-    per-center buffered-bbox cell cover (broadcast) ⨝ points on cell,
-    exact haversine refine with half-open ``[min_m, max_m)`` semantics,
-    ordered by distance. ``centers`` = [(query_id, lat, lng), ...].
-    """
-    spark = points.sparkSession
-    z = _pick_cover_zoom(centers, max_m)
-    rows = []
-    for qid, clat, clng in centers:
-        bb = _buffered_bbox(clat, clng, max_m)
-        for c in _cover_cells_of_bbox(*bb, z):
-            rows.append((int(qid), float(clat), float(clng), int(c)))
-    cover = spark.createDataFrame(
-        rows, "query_id long, q_lat double, q_lng double, q_cell long"
-    )
-    from geospark.cells import with_linear_cell_at_zoom
-
-    dist = K.distance(F.col("q_lat"), F.col("q_lng"), F.col(lat), F.col(lng))
-    out = (
-        with_linear_cell_at_zoom(points, z, lat, lng, "_cell_q")
-        .join(F.broadcast(cover), F.col("_cell_q") == F.col("q_cell"), "inner")
-        .drop("_cell_q", "q_cell")
-        .withColumn("dist_m", dist)
-        .filter((F.col("dist_m") < max_m) & (F.col("dist_m") >= min_m))
-        .orderBy("query_id", "dist_m")
-    )
-    if not with_distance:
-        out = out.drop("dist_m")
-    return out.drop("q_lat", "q_lng")
 
 
 def pip_join_table(points: DataFrame, polygons: DataFrame,
@@ -677,13 +579,13 @@ def pip_join_table(points: DataFrame, polygons: DataFrame,
 def radius_join_df(points: DataFrame, centers: DataFrame, max_m: float,
                    min_m: float = 0.0, lat: str = "lat", lng: str = "lng",
                    q_id: str = "query_id", q_lat: str = "q_lat",
-                   q_lng: str = "q_lng", cover_zoom: int | None = None,
-                   radius_col: str | None = None,
+                   q_lng: str = "q_lng", radius_col: str | None = None,
                    broadcast_centers: bool = False) -> DataFrame:
-    """Radius join with a DATAFRAME of query centers — the
-    scale-symmetric form of :func:`radius_join` (the list API collects
-    covers on the driver; this one computes each center's buffered-bbox
-    cell cover in an Arrow-batched UDF, so millions of centers work).
+    """in_radius(_with_distance) as a join (src/point_rtree.cc:21-68)
+    with a DATAFRAME of query centers (``q_id, q_lat, q_lng``): each
+    center's buffered-bbox cell cover is computed in an Arrow-batched
+    UDF, so covers never touch the driver and millions of centers work.
+    The cover zoom is derived from ``max_m``.
 
     ``radius_col``: optional per-center radius column (capped by
     ``max_m``) — each center's cover AND its refine threshold use its
@@ -697,15 +599,12 @@ def radius_join_df(points: DataFrame, centers: DataFrame, max_m: float,
     """
     from geospark.cells import with_linear_cell_at_zoom
 
-    if cover_zoom is None:
-        # finest zoom whose 1-cell edge still exceeds the radius —
-        # bbox covers then stay at a handful of cells per center
-        earth = 40075016.686
-        z = 0
-        while z < 20 and earth / (1 << (z + 1)) >= max_m:
-            z += 1
-        cover_zoom = z
-    zoom = cover_zoom
+    # finest zoom whose 1-cell edge still exceeds the radius —
+    # bbox covers then stay at a handful of cells per center
+    earth = 40075016.686
+    zoom = 0
+    while zoom < 20 and earth / (1 << (zoom + 1)) >= max_m:
+        zoom += 1
 
     @pandas_udf("array<long>")
     def _cover(clat: pd.Series, clng: pd.Series, cr: pd.Series) -> pd.Series:
@@ -745,11 +644,12 @@ def knn_join_df(points: DataFrame, centers: DataFrame, k: int,
                 lat: str = "lat", lng: str = "lng", id_col: str = "point_id",
                 q_id: str = "query_id", q_lat: str = "q_lat",
                 q_lng: str = "q_lng", start_zoom: int = 16) -> DataFrame:
-    """kNN with a DATAFRAME of query centers — the scale-symmetric
-    twin of :func:`knn_join`. The driver loop touches only per-center
-    AGGREGATES (counts), never data rows:
+    """point_rtree::nearest(c, k) (src/point_rtree.cc:38-48) with a
+    DATAFRAME of query centers, as a guaranteed-exact two-phase plan.
+    The driver loop touches only per-center AGGREGATES (counts), never
+    data rows:
 
-    phase 1: per zoom (start_zoom, -2, ... 0): join each remaining
+    phase 1: per zoom (start_zoom, -4, ... 0): join each remaining
     center's 3x3 cell neighborhood, window-top-k, keep centers with
     ≥ k candidates and their kth distance d_k (an upper bound);
     remaining centers coarsen. All DataFrame ops; the loop condition
@@ -999,6 +899,44 @@ def nearest_join_df(points: DataFrame, centers: DataFrame,
     )
 
 
+def knn_classify(points: DataFrame, centers: DataFrame, k: int,
+                 label_col: str = "label",
+                 lat: str = "lat", lng: str = "lng",
+                 id_col: str = "point_id") -> DataFrame:
+    """k-NN majority-vote classification — the spatial ML primitive:
+    each query location (``centers``: query_id, q_lat, q_lng) takes the
+    modal label of its ``k`` nearest labeled points (exact haversine
+    neighbors via :func:`knn_join_df`; vote ties break on the
+    lexicographically smaller label — deterministic in any engine).
+
+    Plan: the kNN join's aggregate-only escalation finds the |Q|*k
+    neighbor ids; that MODEL-SIZED relation broadcasts back into one
+    hash join against the labeled points (the corpus never shuffles),
+    votes partial-aggregate per (query, label), and the winner is a
+    min-struct argmax on (-votes, label). Returns
+    (query_id, label, n_votes).
+
+    Reference analogue: Q4 nearest (src/point_rtree.cc:38-48)
+    feeding a vote aggregate instead of a ranked list."""
+    nn = knn_join_df(points.select(id_col, lat, lng), centers, k,
+                     lat=lat, lng=lng, id_col=id_col).select("query_id", id_col)
+    votes = (
+        points.select(id_col, F.col(label_col).alias("_lbl"))
+        .join(F.broadcast(nn), id_col)
+        .groupBy("query_id", "_lbl")
+        .agg(F.count("*").alias("n_votes"))
+    )
+    best = F.min(F.struct(
+        (-F.col("n_votes")).alias("_neg"),
+        F.col("_lbl").alias("label"),
+    )).alias("_b")
+    return (
+        votes.groupBy("query_id").agg(best)
+        .select("query_id", F.col("_b.label").alias("label"),
+                (-F.col("_b._neg")).alias("n_votes"))
+    )
+
+
 # ---------------------------------------------------------------------------
 # Box query (Q5/Q7)
 # ---------------------------------------------------------------------------
@@ -1024,169 +962,8 @@ def box_query(points: DataFrame, lat_min: float, lng_min: float,
 
 
 # ---------------------------------------------------------------------------
-# kNN join (Q4) — guaranteed-exact two-phase plan
-# ---------------------------------------------------------------------------
-def knn_join(points: DataFrame, centers: list[tuple[int, float, float]], k: int,
-             lat: str = "lat", lng: str = "lng", id_col: str = "point_id",
-             start_zoom: int = 16) -> DataFrame:
-    """point_rtree::nearest(c, k) (src/point_rtree.cc:38-48) as a
-    distributed two-phase plan:
-
-    phase 1 (candidate radius discovery): join each center's 3×3 cell
-    neighborhood at a zoom that yields ≥ k candidates (coarsening on
-    miss — a short driver loop over *counts only*, no data collect);
-    the kth candidate distance is an upper bound d_k on the true kth
-    neighbor distance.
-
-    phase 2 (guaranteed exact): radius join with max = d_k (+ε), then
-    window top-k by exact haversine. Correct because the true k
-    nearest all lie within d_k of the center.
-    """
-    spark = points.sparkSession
-    # deterministic tie-break: exact-equal distances resolve by id
-    w = Window.partitionBy("query_id").orderBy("dist_m", id_col)
-    pts = points
-
-    # --- phase 1: find a per-center upper bound on the kth distance
-    remaining = list(centers)
-    dk_by_qid: dict[int, float] = {}
-    z = start_zoom
-    while remaining and z >= 0:
-        seen: set[tuple[int, int]] = set()
-        rows = []
-        for qid, clat, clng in remaining:
-            ctx, cty = cell_tile_of_latlng(clat, clng, z)
-            n = 1 << z
-            for dy in (-1, 0, 1):
-                for dx in (-1, 0, 1):
-                    tx, ty = (int(ctx) + dx) % n, int(cty) + dy
-                    if not (0 <= ty < n):
-                        continue
-                    c = lin_id(tx, ty, z)
-                    if (int(qid), c) in seen:  # 3x3 wraps onto itself at coarse z
-                        continue
-                    seen.add((int(qid), c))
-                    rows.append((int(qid), float(clat), float(clng), c))
-        cover = spark.createDataFrame(
-            rows, "query_id long, q_lat double, q_lng double, q_cell long"
-        )
-        from geospark.cells import with_linear_cell_at_zoom
-
-        cand = (
-            with_linear_cell_at_zoom(pts, z, lat, lng, "_c")
-            .join(F.broadcast(cover), F.col("_c") == F.col("q_cell"))
-            .withColumn("dist_m", K.distance(F.col("q_lat"), F.col("q_lng"),
-                                             F.col(lat), F.col(lng)))
-        )
-        kth = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .groupBy("query_id")
-            .agg(F.count("*").alias("n"), F.max("dist_m").alias("dk"))
-            .collect()
-        )
-        got = {r["query_id"]: (r["n"], r["dk"]) for r in kth}
-        still = []
-        for qid, clat, clng in remaining:
-            n_found, dk = got.get(qid, (0, None))
-            if n_found >= k:
-                dk_by_qid[qid] = float(dk)
-            else:
-                still.append((qid, clat, clng))
-        remaining = still
-        z -= 4  # coarsen 16x per miss (phase 2 re-prunes per center)
-
-    # --- phase 2: exact radius join with PER-CENTER radius d_k (one
-    # sparse-area center must not inflate every center's cover), top-k
-    # re-rank. Stragglers with < k points anywhere brute-force against
-    # the (tiny) remaining center set instead of forcing a z=0 cover.
-    parts: list[DataFrame] = []
-    if dk_by_qid:
-        by_qid = {int(q): (la, ln) for q, la, ln in centers}
-        rows = [
-            (int(qid), by_qid[int(qid)][0], by_qid[int(qid)][1],
-             dk * (1.0 + 1e-9) + 1e-6)
-            for qid, dk in dk_by_qid.items()
-        ]
-        centers_dk = spark.createDataFrame(
-            rows, "query_id long, q_lat double, q_lng double, knn_radius double"
-        )
-        max_r = max(r[3] for r in rows)
-        parts.append(radius_join_df(
-            pts, centers_dk, max_m=max_r, radius_col="knn_radius",
-            lat=lat, lng=lng, broadcast_centers=True,
-        ))
-    if remaining:  # fewer than k points near these centers anywhere
-        lcent = spark.createDataFrame(
-            [(int(q), float(la), float(ln)) for q, la, ln in remaining],
-            "query_id long, q_lat double, q_lng double",
-        )
-        parts.append(
-            pts.crossJoin(F.broadcast(lcent))
-            .withColumn("dist_m", K.distance(
-                F.col("q_lat"), F.col("q_lng"), F.col(lat), F.col(lng)))
-            .drop("q_lat", "q_lng")
-        )
-    if not parts:  # empty centers -> empty result, stable schema
-        return (
-            pts.withColumn("query_id", F.lit(None).cast("long"))
-            .withColumn("dist_m", F.lit(None).cast("double"))
-            .limit(0)
-        )
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy("query_id", "dist_m")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Map matching: nearest segment within a radius (GPS probe -> network)
 # ---------------------------------------------------------------------------
-def knn_classify(points: DataFrame, centers: list[tuple[int, float, float]],
-                 k: int, label_col: str = "label",
-                 lat: str = "lat", lng: str = "lng",
-                 id_col: str = "point_id",
-                 start_zoom: int = 16) -> DataFrame:
-    """k-NN majority-vote classification — the spatial ML primitive:
-    each query location takes the modal label of its ``k`` nearest
-    labeled points (exact haversine neighbors via the two-phase
-    :func:`knn_join` escalation; vote ties break on the
-    lexicographically smaller label — deterministic in any engine).
-
-    Plan: the kNN join's aggregate-only escalation finds the |Q|*k
-    neighbor ids; that MODEL-SIZED relation broadcasts back into one
-    hash join against the labeled points (the corpus never shuffles),
-    votes partial-aggregate per (query, label), and the winner is a
-    min-struct argmax on (-votes, label). Returns
-    (query_id, label, n_votes).
-
-    Reference analogue: Q4 nearest (src/point_rtree.cc:38-48)
-    feeding a vote aggregate instead of a ranked list."""
-    nn = knn_join(points.select(id_col, lat, lng), centers, k,
-                  lat=lat, lng=lng, id_col=id_col,
-                  start_zoom=start_zoom).select("query_id", id_col)
-    votes = (
-        points.select(id_col, F.col(label_col).alias("_lbl"))
-        .join(F.broadcast(nn), id_col)
-        .groupBy("query_id", "_lbl")
-        .agg(F.count("*").alias("n_votes"))
-    )
-    best = F.min(F.struct(
-        (-F.col("n_votes")).alias("_neg"),
-        F.col("_lbl").alias("label"),
-    )).alias("_b")
-    return (
-        votes.groupBy("query_id").agg(best)
-        .select("query_id", F.col("_b.label").alias("label"),
-                (-F.col("_b._neg")).alias("n_votes"))
-    )
-
-
 def match_points_to_segments(points: DataFrame, segments: DataFrame,
                              max_m: float,
                              point_id: str = "point_id",

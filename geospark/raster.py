@@ -169,8 +169,7 @@ def vectorize_tiles(tiles: DataFrame, area: str = "area_id",
 def idw_interpolate(points: DataFrame, centers: DataFrame,
                     radius_m: float, value_col: str = "value",
                     scale: int = 10 ** 15,
-                    min_d_cm: int = 100,
-                    broadcast_centers: bool = True) -> DataFrame:
+                    min_d_cm: int = 100) -> DataFrame:
     """Inverse-distance-weighted interpolation of a point measure onto
     a target grid — the classic spatial-analytics surface estimator
     (Shepard 1968, power 2). For each center, samples within
@@ -192,8 +191,8 @@ def idw_interpolate(points: DataFrame, centers: DataFrame,
     w * v_cents <= ~5e13 per pair — 1e5 overflow headroom on the sum.
 
     Plan: one filter-refine radius join (radius_join_df — per-center
-    cell cover, hash or broadcast join, exact haversine refine)
-    followed by one partial-agg shuffle keyed by center. Returns
+    cell cover, broadcast of the exploded centers, exact haversine
+    refine) followed by one partial-agg shuffle keyed by center. Returns
     (query_id, n_samples, den_w, est_cents); est_cents = NULL is
     impossible (den_w >= n_samples >= 1 by the weight floor).
 
@@ -202,8 +201,7 @@ def idw_interpolate(points: DataFrame, centers: DataFrame,
     of a sorted candidate list."""
     from geospark.joins import radius_join_df
 
-    pairs = radius_join_df(points, centers, radius_m,
-                           broadcast_centers=broadcast_centers)
+    pairs = radius_join_df(points, centers, radius_m, broadcast_centers=True)
     d_cm = F.greatest(
         F.floor(F.col("dist_m") * 100.0).cast("long"),
         F.lit(int(min_d_cm)).cast("long"),

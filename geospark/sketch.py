@@ -66,19 +66,6 @@ def _md5_60(item: Column) -> Column:
         .cast("long")
 
 
-def hll_register(item: Column, p: int) -> tuple[Column, Column]:
-    """(register, rho) of one item under 2^p registers."""
-    if not 4 <= p <= 16:
-        raise ValueError("p must be in [4, 16]")
-    tail = HASH_BITS - p
-    h = _md5_60(item)
-    reg = F.shiftright(h, tail)
-    w = h.bitwiseAND(F.lit((1 << tail) - 1))
-    rho = F.when(w == 0, F.lit(tail + 1)) \
-        .otherwise(F.lit(tail + 1) - F.length(F.bin(w)))
-    return reg, rho
-
-
 def hll_registers(df: DataFrame, keys: list[str], item: str,
                   p: int = 6) -> DataFrame:
     """The MERGEABLE sketch relation: (keys..., reg, m_rho, n_items).

@@ -110,14 +110,16 @@ def main() -> None:
               "JVM codegen, zero Python.",
     )
 
-    # 3. radius join: broadcast cover + codegen haversine refine
+    # 3. radius join: Arrow cover UDF + broadcast + codegen refine
     audit(
         "radius_join (Q2 filter-refine radius query)",
         q["radius_join"](spark, sf_dir),
         must=["* BroadcastHashJoin"],
-        must_not=["BatchEvalPython", "ArrowEvalPython"],
-        notes="per-center buffered-bbox cover cells broadcast; exact "
-              "haversine refine stays in codegen.",
+        must_not=["BatchEvalPython", "SortMergeJoin", "CartesianProduct"],
+        notes="per-center buffered-bbox cover cells come from an "
+              "Arrow-batched UDF over the centers relation (the only "
+              "Python crossing) and broadcast; exact haversine refine "
+              "stays in codegen.",
     )
 
     # 4. box query: predicate reaches the parquet scan

@@ -5,6 +5,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E
@@ -23,6 +25,38 @@ def test_queries_have_oracles():
     assert len(qs) >= 10
     missing = set(oracles) - set(qs)
     assert not missing, f"oracles without queries: {missing}"
+
+
+# Arrow type of a DuckDB result column -> the Spark type it must equal
+_ARROW_TO_SPARK = {"int64": "bigint", "string": "string",
+                   "large_string": "string"}
+
+
+@pytest.mark.parametrize("name", ["radius_join", "knn", "knn_classify",
+                                  "doc_bm25"])
+def test_oracle_strict_parity(spark, name):
+    """Spark rows equal the DuckDB oracle's rows (order-insensitive) and
+    the oracle's column TYPES equal the Spark schema as returned — no
+    dtype coercion, so an int32 query_id or a HUGEINT/decimal sum in
+    the oracle fails here."""
+    import duckdb
+
+    df = E.queries()[name](spark, E.SF0001)
+    con = duckdb.connect()
+    for t in ("events", "documents"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{E.SF0001}/{t}.parquet'")
+    duck = con.execute(E.oracle_sql()[name]).arrow()
+    con.close()
+
+    spark_types = [(f.name, f.dataType.simpleString()) for f in df.schema]
+    duck_types = [(f.name, _ARROW_TO_SPARK.get(str(f.type), str(f.type)))
+                  for f in duck.schema]
+    assert sorted(duck_types) == sorted(spark_types)
+
+    got = sorted(tuple(r) for r in df.collect())
+    want = sorted(tuple(r[c] for c in df.columns) for r in duck.to_pylist())
+    assert got == want and len(got) > 0
 
 
 def test_tile_range_relation(spark):

@@ -11,9 +11,10 @@ from geospark.joins import (
     PolygonLayer,
     area_contains,
     box_query,
-    knn_join,
+    knn_classify,
+    knn_join_df,
     pip_join,
-    radius_join,
+    radius_join_df,
 )
 
 # Darmstadt POIs (test/point_rtree_test.cc:10-16)
@@ -32,20 +33,25 @@ def _points_df(spark):
     return spark.createDataFrame(rows, "point_id long, lat double, lng double")
 
 
+def _centers_df(spark, centers):
+    return spark.createDataFrame(
+        centers, "query_id long, q_lat double, q_lng double")
+
+
 def test_radius_join_darmstadt(spark):
     pts = _points_df(spark)
-    centers = [(0, *MENSA)]
+    centers = _centers_df(spark, [(0, *MENSA)])
 
     # in_radius(450) -> {Algo} (point_rtree_test.cc:24-27)
-    r = radius_join(pts, centers, max_m=450.0).collect()
+    r = radius_join_df(pts, centers, max_m=450.0).collect()
     assert [x["point_id"] for x in r] == [2]
 
     # in_radius(450, 1000) -> {Luisenplatz} (point_rtree_test.cc:29-33)
-    r = radius_join(pts, centers, max_m=1000.0, min_m=450.0).collect()
+    r = radius_join_df(pts, centers, max_m=1000.0, min_m=450.0).collect()
     assert [x["point_id"] for x in r] == [1]
 
     # in_radius_with_distance(10000) -> distance-ordered [Algo, Luisenplatz, Hbf]
-    r = radius_join(pts, centers, max_m=10000.0).collect()
+    r = radius_join_df(pts, centers, max_m=10000.0).orderBy("dist_m").collect()
     assert [x["point_id"] for x in r] == [2, 1, 0]
     # distances match the exact haversine kernel
     for row in r:
@@ -56,16 +62,19 @@ def test_radius_join_darmstadt(spark):
 
 def test_knn_join_darmstadt(spark):
     pts = _points_df(spark)
-    r = knn_join(pts, [(0, *MENSA)], k=2).collect()
+    centers = _centers_df(spark, [(0, *MENSA)])
+    r = knn_join_df(pts, centers, k=2).orderBy("dist_m").collect()
     assert [x["point_id"] for x in r] == [2, 1]
-    r = knn_join(pts, [(0, *MENSA)], k=5).collect()  # k > n: all 3
+    r = knn_join_df(pts, centers, k=5).orderBy("dist_m").collect()  # k > n: all 3
     assert [x["point_id"] for x in r] == [2, 1, 0]
 
 
-def test_knn_join_df_matches_list_api(spark):
-    """DataFrame-centers kNN == driver-list kNN, including a center in
-    a sparse area (zoom escalation) and k > n behavior."""
-    from geospark.joins import knn_join_df
+def test_knn_join_df_vs_brute_force(spark):
+    """kNN == brute-force top-k by (dist, id), including a center in a
+    sparse area (zoom escalation) and one whose k nearest are far."""
+    from pyspark.sql import functions as F
+
+    from geospark.functions import kernels as K
 
     rows = [
         (i, float(49.5 + (i * 37 % 100) / 100.0), float(8.0 + (i * 53 % 200) / 100.0))
@@ -73,15 +82,16 @@ def test_knn_join_df_matches_list_api(spark):
     ] + [(900, -60.0, -150.0)]  # lone point far away
     pts = spark.createDataFrame(rows, "point_id long, lat double, lng double")
     centers = [(1, 49.87, 8.65), (2, -59.9, -150.2), (3, 20.0, 100.0)]
-    via_list = knn_join(pts, centers, k=5, id_col="point_id")
-    centers_df = spark.createDataFrame(
-        centers, "query_id long, q_lat double, q_lng double"
+    got = sorted(
+        (r["query_id"], r["point_id"])
+        for r in knn_join_df(pts, _centers_df(spark, centers), k=5).collect()
     )
-    via_df = knn_join_df(pts, centers_df, k=5, id_col="point_id")
-    a = sorted((r["query_id"], r["point_id"]) for r in via_list.collect())
-    b = sorted((r["query_id"], r["point_id"]) for r in via_df.collect())
-    assert a == b
-    assert len({q for q, _ in b}) == 3  # every center answered
+    brute = []
+    for qid, qla, qln in centers:
+        d = K.distance(F.lit(qla), F.lit(qln), F.col("lat"), F.col("lng"))
+        top = pts.withColumn("d", d).orderBy("d", "point_id").limit(5)
+        brute += [(qid, x["point_id"]) for x in top.collect()]
+    assert got == sorted(brute)
 
 
 def test_nearest_join_df_matches_knn_k1(spark):
@@ -89,7 +99,7 @@ def test_nearest_join_df_matches_knn_k1(spark):
     exactly knn_join_df(k=1)'s nearest point and distance per center,
     including the escalation case (center in a sparse area) and the
     brute-force straggler path (tiny point set)."""
-    from geospark.joins import knn_join_df, nearest_join_df
+    from geospark.joins import nearest_join_df
 
     rows = [
         (i, float(49.5 + (i * 37 % 100) / 100.0),
@@ -149,27 +159,6 @@ def test_pip_join_table_matches_broadcast_path(spark):
         for r in pip_join_table(pts, poly_df, cover_zoom=layer.cover_zoom).collect()
     )
     assert via_table == via_broadcast and len(via_table) > 0
-
-
-def test_radius_join_df_matches_list_api(spark):
-    """The DataFrame-of-centers radius join must produce the same pairs
-    as the driver-list API (same cover mapping, same refine)."""
-    from geospark.joins import radius_join_df
-
-    rows = [
-        (i, float(49.5 + (i * 37 % 100) / 100.0), float(8.0 + (i * 53 % 200) / 100.0))
-        for i in range(300)
-    ]
-    pts = spark.createDataFrame(rows, "point_id long, lat double, lng double")
-    centers = [(1, 49.87, 8.65), (2, 50.1, 9.2), (3, 49.6, 8.1)]
-    via_list = radius_join(pts, centers, max_m=30_000.0)
-    centers_df = spark.createDataFrame(
-        centers, "query_id long, q_lat double, q_lng double"
-    )
-    via_df = radius_join_df(pts, centers_df, max_m=30_000.0)
-    a = sorted((r["query_id"], r["point_id"]) for r in via_list.collect())
-    b = sorted((r["query_id"], r["point_id"]) for r in via_df.collect())
-    assert a == b and len(a) > 0
 
 
 def test_box_query_strict(spark):
@@ -260,7 +249,6 @@ def test_radius_join_high_latitude_vs_brute(spark):
     from pyspark.sql import functions as F
 
     from geospark.functions import kernels as K
-    from geospark.joins import radius_join
 
     rng = np.random.RandomState(5)
     lat0, lng0 = 78.0, 16.0  # Svalbard-ish
@@ -274,7 +262,8 @@ def test_radius_join_high_latitude_vs_brute(spark):
     r = 9000.0
     got = sorted(
         (x["query_id"], x["event_id"])
-        for x in radius_join(pts, centers, max_m=r).collect()
+        for x in radius_join_df(pts, _centers_df(spark, centers),
+                                max_m=r).collect()
     )
     brute = []
     for qid, qla, qln in centers:
@@ -288,13 +277,12 @@ def test_radius_join_high_latitude_vs_brute(spark):
 
 
 def test_radius_join_antimeridian(spark):
-    """Covers crossing the +-180 line must wrap, not collapse — both
-    the driver-list and DataFrame-centers forms, vs brute force."""
+    """Covers crossing the +-180 line must wrap, not collapse: the
+    radius join equals brute force on both sides of the line."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from geospark.functions import kernels as K
-    from geospark.joins import radius_join, radius_join_df
 
     rng = np.random.RandomState(9)
     rows = []
@@ -314,19 +302,12 @@ def test_radius_join_antimeridian(spark):
             for x in pts.withColumn("d", d).filter(F.col("d") < r).collect()
         }
 
-    got_list = {}
-    for x in radius_join(pts, centers, max_m=r).collect():
-        got_list.setdefault(x["query_id"], set()).add(x["event_id"])
-    cdf = spark.createDataFrame(
-        centers, "query_id long, q_lat double, q_lng double"
-    )
-    got_df = {}
-    for x in radius_join_df(pts, cdf, max_m=r).collect():
-        got_df.setdefault(x["query_id"], set()).add(x["event_id"])
+    got = {}
+    for x in radius_join_df(pts, _centers_df(spark, centers), max_m=r).collect():
+        got.setdefault(x["query_id"], set()).add(x["event_id"])
     for qid, qla, qln in centers:
         expect = brute(qla, qln)
-        assert got_list.get(qid, set()) == expect, qid
-        assert got_df.get(qid, set()) == expect, qid
+        assert got.get(qid, set()) == expect, qid
         assert len(expect) > 5
 
 def test_pip_planar_vs_spherical_divergence(spark):
@@ -549,8 +530,6 @@ def test_knn_durable_spool_backend(spark, tmp_path):
     rows."""
     import random
 
-    from geospark.joins import knn_join_df
-
     rng = random.Random(7)
     pts = spark.createDataFrame(
         [(i, 48.0 + rng.random(), 11.0 + rng.random()) for i in range(400)],
@@ -592,7 +571,6 @@ def test_knn_classify_majority_and_ties(spark):
     """Majority vote: 1-NN label loses to the 2-of-3 majority; an even
     2-2 split breaks to the lexicographically smaller label; votes
     come from exactly the k nearest under the (dist, id) kNN order."""
-    from geospark.joins import knn_classify
 
     # center at origin; nearest point labeled 'z', next two 'a'
     pts = [
@@ -611,9 +589,9 @@ def test_knn_classify_majority_and_ties(spark):
     got = {
         r["query_id"]: (r["label"], r["n_votes"])
         for r in knn_classify(
-            df, [(0, 0.0, 0.0), (8, 10.0, 10.0)], k=3
+            df, _centers_df(spark, [(0, 0.0, 0.0), (8, 10.0, 10.0)]), k=3
         ).collect()
     }
     assert got[0] == ("a", 2)      # majority beats the nearest 'z'
-    q8 = knn_classify(df, [(8, 10.0, 10.0)], k=4).collect()[0]
+    q8 = knn_classify(df, _centers_df(spark, [(8, 10.0, 10.0)]), k=4).collect()[0]
     assert (q8["label"], q8["n_votes"]) == ("b", 2)  # 2-2 tie -> 'b'
