@@ -3652,14 +3652,11 @@ def _query_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_chunk": _q_doc_chunk,
         "doc_pack": _q_doc_pack,
         "doc_tfidf": _q_doc_tfidf,
-        "doc_bm25": _q_doc_bm25,
         "doc_lm_ppl": _q_doc_lm_ppl,
         "doc_lm_kn": _q_doc_lm_kn,
         "doc_bpe": _q_doc_bpe,
         "doc_repetition": _q_doc_repetition,
         "doc_line_dedup": _q_doc_line_dedup,
-        "emb_pq": _q_emb_pq,
-        "emb_kmeans": _q_emb_kmeans,
         "emb_quantize": _q_emb_quantize,
         "tile_bounds": _q_tile_bounds,
         "box_join": _q_box_join,
@@ -3668,14 +3665,11 @@ def _query_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- new in round 4 ----------------------------------------------------
         "doc_span_scrub": _q_doc_span_scrub,
         "reverse_geocode": _q_reverse_geocode,
-        "emb_ivf_trained": _q_emb_ivf_trained,
-        "emb_ivfpq": _q_emb_ivfpq,
         "corridor_join": _q_corridor_join,
         "doc_bpe_encode": _q_doc_bpe_encode,
         "idw_tiles": _q_idw_tiles,
         "session_overlap": _q_session_overlap,
         "hmm_map_match": _q_hmm_map_match,
-        "emb_pq_rerank": _q_emb_pq_rerank,
         "trending_tiles": _q_trending_tiles,
         "knn_classify": _q_knn_classify,
         "doc_train_pipeline": _q_doc_train_pipeline,
@@ -3767,7 +3761,6 @@ def _query_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_range_box": _q_tile_range_box,
         "tile_relevel": _q_tile_relevel,
         "tile_pyramid": _q_tile_pyramid,
-        "pages_url_normalize": _q_pages_url_normalize,
     }
 
 

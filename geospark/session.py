@@ -11,9 +11,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (local[N], 128 GiB); on a real
-# cluster the same configs apply per-executor and AQE coalescing keeps
-# shuffle partition counts proportional to data volume.
+# Defaults for one host (local[N]); cores and driver heap are derived
+# from the machine in get_spark. On a real cluster the same configs
+# apply per-executor and AQE coalescing keeps shuffle partition counts
+# proportional to data volume.
 _DEFAULTS = {
     # AQE: runtime re-planning, skew-join splitting (backstop for hot
     # city cells; explicit salting in plans/skew.py is the primary).
@@ -30,8 +31,15 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # Timestamps without timezone surprises.
     "spark.sql.session.timeZone": "UTC",
-    "spark.driver.memory": "8g",
 }
+
+
+def host() -> tuple[int, int]:
+    """(cores, physical memory in bytes) of this host. Cores come from
+    $SPARK_GRAFT_CPUS when set, else from this process's CPU affinity."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return (int(cpus) if cpus else len(os.sched_getaffinity(0)),
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
 
 
 def get_spark(
@@ -42,8 +50,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox;
-    on a cluster pass None and let spark-submit decide.
+    ``master`` defaults to ``local[<cores>]`` (see ``host``) and the
+    driver heap to half of physical memory, at most 8g; under
+    spark-submit the launcher's master is kept.
     """
     from pyspark import SparkConf
 
@@ -53,18 +62,19 @@ def get_spark(
     # single-node on the driver, so only default the master when the
     # launcher didn't choose one
     submitted = SparkConf().get("spark.master", None)
+    cores, mem = host()
     if master is None and submitted:
         master = submitted
     else:
         if master is None:
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-            master = f"local[{cpus}]"
+            master = f"local[{cores}]"
         builder = builder.master(master)
     conf = dict(_DEFAULTS)
+    conf["spark.driver.memory"] = f"{min(8192, mem // 2 // 2**20)}m"
     if shuffle_partitions is None and "[" in master:
         # match parallelism: local[N] (or local[N,maxFailures]) -> N
         n = master.split("[")[-1].rstrip("]").split(",")[0]
-        shuffle_partitions = 32 if n == "*" else int(n)
+        shuffle_partitions = cores if n == "*" else int(n)
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
         conf["spark.default.parallelism"] = str(shuffle_partitions)

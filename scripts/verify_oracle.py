@@ -18,7 +18,7 @@ import pandas as pd
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E  # noqa: E402
-from geospark.session import get_spark  # noqa: E402
+from geospark.session import get_spark, host  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -65,7 +65,10 @@ def main() -> int:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("verify-oracle", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("verify-oracle")
+    # DuckDB gets a quarter of physical memory: the Spark driver shares
+    # the host
+    duck_mb = host()[1] // 4 // 2**20
 
     def fresh_con():
         # one connection PER QUERY: a shared connection accumulates
@@ -74,7 +77,7 @@ def main() -> int:
         # ~query 60); the per-query connection + an explicit cap keeps
         # the harness memory flat. Views are cheap to re-create.
         c = duckdb.connect()
-        c.execute("SET memory_limit='24GB'")
+        c.execute(f"SET memory_limit='{duck_mb}MB'")
         for t in TABLES:
             p = f"{sf_dir}/{t}.parquet"
             if Path(p).exists():
