@@ -1,11 +1,12 @@
 """Geo-entity extraction over the pages table.
 
 ``pages(url, warc_ts, html, text, lang)`` -> ``points(url, point_id,
-lat, lng)`` via an Arrow-batched ``mapInArrow`` stage: no per-row
-Python (input_hint mandate), no shuffle — extraction is a narrow map
-over whatever partitioning the pages scan produced, so at 10^12 docs
-it parallelizes with the input splits and Catalyst prunes ``html``
-out of the scan entirely (we only read ``url`` and ``text``).
+lat, lng)`` as pure Column algebra: two ``regexp_extract_all``
+captures of one coordinate pattern, zipped and ``posexplode``d, so the
+stage never leaves the JVM (no Arrow hop, no Python worker) and stays
+a narrow map over whatever partitioning the pages scan produced — at
+10^12 docs it parallelizes with the input splits and Catalyst prunes
+``html`` out of the scan entirely (we only read ``url`` and ``text``).
 
 The per-url invariant (BASELINE.json input_hint): ``text`` must be
 byte-identical to the reference extractor's output for the same url —
@@ -15,74 +16,37 @@ enforced by `tests/test_pages.py` comparing against
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-POINTS_SCHEMA = "url string, point_id long, lat double, lng double"
-
-# fixed mention format written by the synthesizer / reference extractor
-_COORD_RE = re.compile(r"coord: (-?\d+\.\d{6}), (-?\d+\.\d{6})")
+# fixed mention format written by the synthesizer / reference
+# extractor; ASCII digits only (Python's \d would also take e.g.
+# Arabic-Indic digits, which float() parses)
+COORD_PATTERN = r"coord: (-?[0-9]+\.[0-9]{6}), (-?[0-9]+\.[0-9]{6})"
 
 
 def extract_points(pages: DataFrame,
                    carry_cols: list[str] | None = None) -> DataFrame:
     """points(url, *carry_cols, point_id, lat, lng); point_id is the
-    0-based mention index within the page (deterministic given the
-    text bytes). ``carry_cols`` are passed through per mention (Arrow
-    take on the match's row index — e.g. ``["warc_ts"]`` keeps the
-    event-time column for streaming windows); batch and streaming
-    extraction share this ONE kernel."""
+    0-based mention index within the page in text order (deterministic
+    given the text bytes). ``carry_cols`` are passed through per
+    mention — e.g. ``["warc_ts"]`` keeps the event-time column for
+    streaming windows; batch and streaming extraction share this one
+    plan. A null ``text`` yields no mentions."""
     carry = list(carry_cols or [])
-    schema = "url string, " + "".join(
-        f"{c} {pages.schema[c].dataType.simpleString()}, " for c in carry
-    ) + "point_id long, lat double, lng double"
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            texts = tbl.column("text").to_pylist()
-            # batch-vectorized matching: one regex pass over the
-            # concatenated batch (rows separated by \x00, which never
-            # occurs in text), match offsets mapped back to row ids via
-            # searchsorted — the python-level loop runs per MATCH
-            # (~1.5/page), not per row.
-            safe = [t if t is not None else "" for t in texts]
-            blob = "\x00".join(safe)
-            offsets = np.zeros(len(safe) + 1, dtype=np.int64)
-            np.cumsum([len(t) + 1 for t in safe], out=offsets[1:])
-            starts: list[int] = []
-            lats: list[float] = []
-            lngs: list[float] = []
-            for m in _COORD_RE.finditer(blob):
-                starts.append(m.start())
-                lats.append(float(m.group(1)))
-                lngs.append(float(m.group(2)))
-            row_idx = np.searchsorted(offsets, np.asarray(starts, np.int64),
-                                      side="right") - 1
-            # point_id = 0-based mention index within each row (matches
-            # are emitted in document order)
-            pid = np.zeros(len(row_idx), dtype=np.int64)
-            if len(row_idx):
-                new_row = np.ones(len(row_idx), dtype=bool)
-                new_row[1:] = row_idx[1:] != row_idx[:-1]
-                run_starts = np.flatnonzero(new_row)
-                seq = np.arange(len(row_idx), dtype=np.int64)
-                pid = seq - np.repeat(seq[run_starts], np.diff(
-                    np.append(run_starts, len(row_idx))))
-            idx = pa.array(row_idx, pa.int64())
-            cols = [tbl.column("url").take(idx).combine_chunks()]
-            cols += [tbl.column(c).take(idx).combine_chunks()
-                     for c in carry]
-            cols += [
-                pa.array(pid, pa.int64()),
-                pa.array(np.asarray(lats, np.float64), pa.float64()),
-                pa.array(np.asarray(lngs, np.float64), pa.float64()),
-            ]
-            yield pa.record_batch(
-                cols, names=["url", *carry, "point_id", "lat", "lng"])
-
-    return pages.select("url", *carry, "text").mapInArrow(run, schema)
+    pat = F.lit(COORD_PATTERN)
+    return (
+        pages.select(
+            "url", *carry,
+            F.posexplode(F.arrays_zip(
+                F.regexp_extract_all("text", pat, 1).alias("lat"),
+                F.regexp_extract_all("text", pat, 2).alias("lng"),
+            )).alias("point_id", "m"),
+        )
+        .select(
+            "url", *carry,
+            F.col("point_id").cast("long").alias("point_id"),
+            F.col("m.lat").cast("double").alias("lat"),
+            F.col("m.lng").cast("double").alias("lng"),
+        )
+    )

@@ -510,7 +510,7 @@ def _complete_linkage(la, ln, md) -> list[int]:
 # mentions -> tile counts (same data generator, independent projection
 # + parse; verifies the watermarked streaming aggregation end-to-end)
 # ---------------------------------------------------------------------------
-_COORD = re.compile(r"coord: (-?\d+\.\d{6}), (-?\d+\.\d{6})")
+_COORD = re.compile(r"coord: (-?[0-9]+\.[0-9]{6}), (-?[0-9]+\.[0-9]{6})")
 
 
 def stream_tile_counts(n_pages: int, zoom: int) -> list[tuple[int, int, int]]:

@@ -8,12 +8,14 @@ a two-phase **filter-refine** plan —
 
   1. cheap cell equi-join / bbox Column predicate (prunes 99%+, stays
      in whole-stage codegen, broadcast when the build side is small);
-  2. exact refine: haversine Column expr (radius/kNN) or a vectorized
-     numpy ray-cast inside an Arrow-batched pandas UDF (PIP).
+  2. exact refine: haversine Column expr (radius/kNN), or for PIP an
+     even-odd ray-cast over only the edges in the point's latitude
+     band, joined from a broadcast slab table (PolygonLayer).
 
 At 100 TB the phase-1 join is a broadcast hash join on ``cell`` (no
-shuffle of the big side); phase 2 is a narrow map. Skewed hot cells
-are handled by AQE skew-join + optional salting (geospark.plans.skew).
+shuffle of the big side); phase 2 is a narrow map, for PIP a second
+broadcast hash join with no Python. Skewed hot cells are handled by
+AQE skew-join + optional salting (geospark.plans.skew).
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -236,13 +239,64 @@ def densify_areas(areas: list[Area],
     ]
 
 
+# Latitude band height (degrees) of PolygonLayer's slab edge index.
+PIP_BAND_DEG = 0.25
+
+_EDGE = pa.list_(pa.struct([(c, pa.float64()) for c in ("y1", "x1", "y2", "x2")]))
+_UNITS = pa.list_(pa.struct([("outer", _EDGE), ("holes", pa.list_(_EDGE))]))
+
+
+def _band(lat):
+    """Slab index of a latitude. numpy arrays and Columns evaluate the
+    SAME IEEE double ops (add, divide, floor), so the driver-side slab
+    build and the executor-side probe agree bit for bit."""
+    if isinstance(lat, np.ndarray):
+        return np.floor((lat + 90.0) / PIP_BAND_DEG).astype(np.int64)
+    return F.floor((lat + F.lit(90.0)) / F.lit(PIP_BAND_DEG))
+
+
+def _slab_edges(ring: np.ndarray) -> dict[int, list[tuple]]:
+    """band -> the ring's non-horizontal (y1, x1, y2, x2) edges whose
+    latitude range [min y, max y] reaches into that band, in ring
+    order. An edge crosses a point's eastward ray only if
+    min y <= lat < max y, and _band is monotone, so every such edge
+    is listed under the point's own band."""
+    ys, xs = ring[:, 0], ring[:, 1]
+    y2, x2 = np.roll(ys, -1), np.roll(xs, -1)
+    keep = ys != y2  # horizontal edges never cross the lat ray
+    e = np.stack([ys[keep], xs[keep], y2[keep], x2[keep]], axis=1)
+    lo = _band(np.minimum(e[:, 0], e[:, 2]))
+    hi = _band(np.maximum(e[:, 0], e[:, 2]))
+    out: dict[int, list[tuple]] = {}
+    for edge, b1, b2 in zip(e.tolist(), lo.tolist(), hi.tolist()):
+        for b in range(b1, b2 + 1):
+            out.setdefault(b, []).append(tuple(edge))
+    return out
+
+
+def _parity(edges, lat, lng):
+    """_ring_contains' even-odd crossing parity over an edge array, as
+    an ``aggregate`` XOR with the numpy twin's operation order."""
+    return F.aggregate(edges, F.lit(False), lambda acc, e: acc != (
+        ((e["y1"] > lat) != (e["y2"] > lat))
+        & (lng < (e["x2"] - e["x1"]) * (lat - e["y1"]) / (e["y2"] - e["y1"])
+           + e["x1"])))
+
+
 class PolygonLayer:
     """A small-to-medium polygon layer, prepared for broadcast PIP
-    joins: per-area bbox (Q9 agg) + cell cover at a chosen zoom (Q13
-    analogue of the area_db build). The layer itself ships to
-    executors via closure capture (Spark broadcasts task binaries);
-    for layers too big to broadcast, normalize to a DataFrame and use
-    a shuffle join on cell — same plan shape, bigger build side.
+    joins as two tables built once on the driver:
+
+    - the cell cover: per-area bbox (Q9 agg) cells at ``cover_zoom``
+      (the Q13 analogue of the area_db build), the filter side;
+    - the slab table: one row per (area, latitude band of
+      PIP_BAND_DEG) listing, per outer unit, the ring edges that
+      span the band plus one such array per hole (empty arrays
+      dropped) — the refine side, so a point tests only the few
+      edges near its latitude instead of the whole layer.
+
+    For layers too big to broadcast, normalize to a DataFrame and use
+    pip_join_table — same plan shape, shuffled build side.
 
     Edge semantics match the reference's SPHERICAL within() by
     default: long-edge areas are great-circle densified at build time
@@ -254,7 +308,7 @@ class PolygonLayer:
                  densify_deg: float | None = PIP_DENSIFY_DEG):
         self.areas = densify_areas(areas, densify_deg)
         self.cover_zoom = int(cover_zoom)
-        self.by_id = {a.area_id: a for a in self.areas}
+        self._tables: tuple[SparkSession, DataFrame, DataFrame] | None = None
 
     def cover(self) -> list[tuple[int, int]]:
         """(cell, area_id) pairs covering each area's bbox at
@@ -270,116 +324,83 @@ class PolygonLayer:
                     out.append((lin_id(tx, ty, z), a.area_id))
         return out
 
+    def slab_rows(self) -> list[tuple]:
+        """(area_id, band, units) rows, units a list of (outer edges,
+        [hole edges, ...]). A unit whose outer ring has no edge in a
+        band cannot contain a point of that band (zero crossings), so
+        it is left out of the row."""
+        rows = []
+        for a in self.areas:
+            units: dict[int, list] = {}
+            for outer, holes in zip(a.outers, a.inners):
+                hole_slabs = [_slab_edges(h) for h in holes]
+                for b, edges in _slab_edges(outer).items():
+                    units.setdefault(b, []).append((edges, [
+                        hs[b] for hs in hole_slabs if b in hs]))
+            rows += [(a.area_id, b, us) for b, us in sorted(units.items())]
+        return rows
+
+    def tables(self, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+        """(cover(cell_cov, area_id), slabs(_slab_area, _band, _units)),
+        memoized per session. Both are built from Arrow tables, which
+        Spark keeps as driver-side LocalRelations: broadcasting them
+        runs no job and no Python worker (a list would be re-pickled
+        through a Python RDD on every scan)."""
+        if self._tables is None or self._tables[0] is not spark:
+            cov = np.array(self.cover(), np.int64).reshape(-1, 2)
+            aid, band, units = list(zip(*self.slab_rows())) or [(), (), ()]
+            self._tables = (spark, spark.createDataFrame(pa.table({
+                "cell_cov": cov[:, 0], "area_id": cov[:, 1],
+            })), spark.createDataFrame(pa.table({
+                "_slab_area": pa.array(aid, pa.int64()),
+                "_band": pa.array(band, pa.int64()),
+                "_units": pa.array(units, _UNITS),
+            })))
+        return self._tables[1:]
+
     def cover_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.cover(), "cell_cov long, area_id long")
-
-
-def _balanced_reduce(terms: list[Column], op) -> Column:
-    """Pairwise (balanced) reduction: a left-deep chain of N boolean
-    ops builds an O(N)-deep Column tree that overflows Catalyst's
-    recursive converters around ~500 terms (measured StackOverflowError
-    on a densified ring); balancing makes the depth O(log N) with the
-    identical value (XOR/AND/OR are associative)."""
-    while len(terms) > 1:
-        terms = [
-            op(terms[i], terms[i + 1]) if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
-def _ring_contains_expr(ring: np.ndarray, lat: Column, lng: Column) -> Column:
-    """Even-odd ray-cast parity for a FIXED ring as a pure Column
-    expression (identical arithmetic to _ring_contains): the polygon
-    compiles into the plan and runs inside whole-stage codegen — zero
-    Python. Horizontal edges skipped exactly as the numpy twin does."""
-    ys, xs = ring[:, 0], ring[:, 1]
-    n = len(ring)
-    terms: list[Column] = []
-    for i in range(n):
-        y1, x1 = float(ys[i]), float(xs[i])
-        y2, x2 = float(ys[(i + 1) % n]), float(xs[(i + 1) % n])
-        if y1 == y2:
-            continue
-        crosses = (F.lit(y1) > lat) != (F.lit(y2) > lat)
-        xint = (F.lit(x2 - x1)) * (lat - F.lit(y1)) / F.lit(y2 - y1) + F.lit(x1)
-        terms.append(crosses & (lng < xint))
-    if not terms:
-        return F.lit(False)
-    return _balanced_reduce(terms, lambda a, b: a != b)
-
-
-def area_contains_expr(area: Area, lat: Column, lng: Column) -> Column:
-    """Q15 as a Column expression: OR over (outer AND NOT holes)."""
-    parts: list[Column] = []
-    for outer, holes in zip(area.outers, area.inners):
-        e = _ring_contains_expr(outer, lat, lng)
-        for h in holes:
-            e = e & ~_ring_contains_expr(h, lat, lng)
-        parts.append(e)
-    if not parts:
-        return F.lit(False)
-    return _balanced_reduce(parts, lambda a, b: a | b)
+        """The cover table alone: (cell_cov, area_id) rows of cover()."""
+        return self.tables(spark)[0]
 
 
 def pip_join(points: DataFrame, layer: PolygonLayer,
-             lat: str = "lat", lng: str = "lng",
-             max_expr_edges: int = 512) -> DataFrame:
+             lat: str = "lat", lng: str = "lng") -> DataFrame:
     """Flagship PIP join (Q10/Q14/Q15): points ⨝ broadcast(cell cover)
-    on the cover-zoom cell, then exact ray-cast refine. Returns the
-    input columns + ``area_id``.
+    on the cover-zoom cell, then ⨝ broadcast(slab table) on
+    (area_id, latitude band), filtered by the exact ray-cast over the
+    slab's edges:
+    ``exists(units, u -> parity(u.outer) AND NOT exists(u.holes,
+    parity))``. Returns the input columns + ``area_id``.
 
-    Refine strategy:
-    - small layers (≤ max_expr_edges total ring edges): the ray-cast
-      compiles to a per-area Column expression — the WHOLE join stays
-      inside whole-stage codegen, no JVM→Python hop at all;
-    - bigger layers: vectorized numpy ray-cast in an Arrow-batched
-      pandas UDF (rings ship once via closure, grouped by area inside
-      the batch).
+    The refine returns the same bits as ``area_contains``: the band
+    holds every edge that can cross the point's latitude, extra edges
+    only add false terms, and ``_parity`` repeats _ring_contains'
+    arithmetic. No Python runs: the cover join is whole-stage
+    codegen; the slab join's higher-order predicate is interpreted
+    (CodegenFallback) over a handful of edges per candidate.
 
-    Plan shape at scale: broadcast hash join (no shuffle of points) →
-    narrow refine → output. Hot city cells are split by AQE skew-join;
-    explicit salting unnecessary because the build side is broadcast
-    (no shuffle to skew).
+    Plan shape at scale: two broadcast hash joins (no shuffle of
+    points) → output. Hot city cells need no salting because both
+    build sides are broadcast (no shuffle to skew).
     """
     from geospark.cells import with_linear_cell_at_zoom
 
-    spark = points.sparkSession
-    z = layer.cover_zoom
-    cand = with_linear_cell_at_zoom(points, z, lat, lng, "_cell_cov").join(
-        F.broadcast(layer.cover_df(spark)),
+    cover, slabs = layer.tables(points.sparkSession)
+    cand = with_linear_cell_at_zoom(
+        points, layer.cover_zoom, lat, lng, "_cell_cov").join(
+        F.broadcast(cover),
         F.col("_cell_cov") == F.col("cell_cov"),
         "inner",
     ).drop("_cell_cov", "cell_cov")
-
-    areas = {a.area_id: Area(a.area_id, a.outers, a.inners) for a in layer.areas}
-    total_edges = sum(
-        len(r) for a in areas.values() for r in a.outers
-    ) + sum(len(r) for a in areas.values() for hs in a.inners for r in hs)
-
-    if total_edges <= max_expr_edges:
-        preds = [
-            (F.col("area_id") == aid) & area_contains_expr(
-                area, F.col(lat), F.col(lng)
-            )
-            for aid, area in areas.items()
-        ]
-        if not preds:  # empty layer: no area can contain anything
-            return cand.filter(F.lit(False))
-        return cand.filter(_balanced_reduce(preds, lambda a, b: a | b))
-
-    @pandas_udf("boolean")
-    def _is_within(lat_s: pd.Series, lng_s: pd.Series, aid_s: pd.Series) -> pd.Series:
-        out = np.zeros(len(lat_s), dtype=bool)
-        lat_v = lat_s.to_numpy(np.float64)
-        lng_v = lng_s.to_numpy(np.float64)
-        aid_v = aid_s.to_numpy(np.int64)
-        for aid in np.unique(aid_v):
-            m = aid_v == aid
-            out[m] = area_contains(areas[int(aid)], lat_v[m], lng_v[m])
-        return pd.Series(out)
-
-    return cand.filter(_is_within(F.col(lat), F.col(lng), F.col("area_id")))
+    la, lo = F.col(lat), F.col(lng)
+    inside = F.exists("_units", lambda u: _parity(u["outer"], la, lo)
+                      & ~F.exists(u["holes"], lambda h: _parity(h, la, lo)))
+    return cand.join(
+        F.broadcast(slabs),
+        (F.col("area_id") == F.col("_slab_area"))
+        & (_band(la) == F.col("_band")),
+        "inner",
+    ).filter(inside).select(*cand.columns)
 
 
 # ---------------------------------------------------------------------------

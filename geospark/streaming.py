@@ -3,7 +3,7 @@ tile aggregation with watermarked late-data handling.
 
 The reference is a pure batch library (SURVEY §2.8: no streaming);
 this is the engine's extension for continuous crawl ingest. The same
-extraction (mapInArrow) and tile kernels (pure Column exprs) run
+extraction (JVM regex) and tile kernels (pure Column exprs) run
 unchanged on streaming DataFrames — only the sink/trigger differ,
 which is exactly the Spark promise the design leans on.
 """
@@ -85,8 +85,7 @@ def sliding_tile_counts(points: DataFrame, zoom: int = 6,
 
 def extract_points_stream(pages: DataFrame) -> DataFrame:
     """Streaming variant of geospark.extract.extract_points: the SAME
-    batch-vectorized kernel (one regex pass per Arrow batch, per-MATCH
-    Python only), with the event-time column carried through per
+    JVM regex plan, with the event-time column carried through per
     mention for downstream watermarked windows."""
     from geospark.extract import extract_points
 

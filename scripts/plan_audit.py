@@ -32,10 +32,11 @@ def main() -> None:
 
     import __spark_entry__ as E
     from geospark import geodata as G
-    from geospark.session import get_spark
+    from geospark.session import get_spark, host
 
+    cores, _ = host()
     spark = get_spark(
-        "plan-audit", master="local[8]", shuffle_partitions=8,
+        "plan-audit", master=f"local[{cores}]", shuffle_partitions=cores,
         extra_conf={
             "spark.ui.enabled": "false",
             # AQE hides codegen markers in explain output
@@ -75,24 +76,25 @@ def main() -> None:
               "partial+final hash aggregation.",
     )
 
-    # 2. PIP join: broadcast build side; refine strategy by layer size.
-    # The default demo layer is great-circle DENSIFIED (~800 edges,
-    # spherical reference semantics), so its refine is the
-    # Arrow-batched vectorized ray-cast — measured FASTER than the
-    # wide codegen expression (BENCH.md round-4 A/B) and never
-    # row-at-a-time Python.
+    # 2. PIP join: two broadcast joins (cell cover, then latitude-band
+    # slab edges) and a JVM ray-cast over the band's edges, whatever
+    # the layer size. The default demo layer is great-circle DENSIFIED
+    # (~800 edges, spherical reference semantics).
     audit(
-        "pip_join (Q14 point-in-polygon, densified layer, Arrow refine)",
+        "pip_join (Q14 point-in-polygon, densified layer, slab refine)",
         q["pip_join"](spark, sf_dir),
         must=["* BroadcastHashJoin"],
-        must_not=["BatchEvalPython", "SortMergeJoin"],
+        must_not=["BatchEvalPython", "ArrowEvalPython", "MapInArrow",
+                  "SortMergeJoin"],
         notes="cell-cover build side broadcast (no shuffle of the "
-              "point table); the spherical-parity densified polygons "
-              "refine in ONE Arrow-batched vectorized numpy pass over "
-              "cover candidates only.",
+              "point table) and codegen'd; cover candidates then "
+              "join the broadcast (area_id, latitude band) slab table "
+              "and the spherical-parity densified polygons refine as "
+              "an interpreted aggregate/exists ray-cast over the "
+              "band's few edges — zero Python.",
     )
 
-    # 2b. small planar layers still compile the ray-cast into the plan
+    # 2b. a small planar layer takes the same slab refine
     from geospark.joins import Area, PolygonLayer, pip_join
 
     small = PolygonLayer(
@@ -100,14 +102,39 @@ def main() -> None:
         cover_zoom=6,
     )
     audit(
-        "pip_join (small layer, <=512-edge Column refine)",
+        "pip_join (small planar layer, slab refine)",
         pip_join(G.events_points(spark, sf_dir)
                  .select("event_id", "lat", "lng"), small),
         must=["* BroadcastHashJoin"],
-        must_not=["BatchEvalPython", "ArrowEvalPython", "SortMergeJoin"],
+        must_not=["BatchEvalPython", "ArrowEvalPython", "MapInArrow",
+                  "SortMergeJoin"],
         notes="short-edge layers skip densification (semantic no-op) "
-              "and the polygon compiles into the plan — the refine is "
-              "JVM codegen, zero Python.",
+              "and refine through the same broadcast slab table as "
+              "the densified layer — zero Python.",
+    )
+
+    # 2c. the flagship path: parquet pages -> extract -> pip -> tiles
+    import tempfile
+
+    from geospark.cells import with_tile
+    from geospark.extract import extract_points
+    from geospark.pages import synth_pages
+
+    tmp = tempfile.mkdtemp(prefix="plan_audit_")
+    synth_pages(spark, 2000, partitions=2).write.parquet(f"{tmp}/pages")
+    flagship = with_tile(
+        pip_join(extract_points(spark.read.parquet(f"{tmp}/pages")),
+                 G.demo_layer()), 8,
+    ).groupBy("area_id", "tile_x", "tile_y").count()
+    audit(
+        "flagship (pages -> extract_points -> pip_join -> tile counts)",
+        flagship,
+        must=["* BroadcastHashJoin", "* HashAggregate"],
+        must_not=["MapInArrow", "ArrowEvalPython", "BatchEvalPython"],
+        notes="extraction is two regexp_extract_all captures zipped "
+              "and posexploded, the PIP join is the broadcast cover "
+              "join plus the slab join, tiles are Column math: the "
+              "page scan never leaves the JVM.",
     )
 
     # 3. radius join: Arrow cover UDF + broadcast + codegen refine
@@ -124,9 +151,6 @@ def main() -> None:
 
     # 4. box query: predicate reaches the parquet scan
     pts = G.events_points(spark, sf_dir).select("event_id", "lat", "lng")
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="plan_audit_")
     from geospark.layout import write_cell_sorted
 
     write_cell_sorted(pts, f"{tmp}/pts", zoom=8, partitions=4)
@@ -900,17 +924,14 @@ def main() -> None:
     )
 
     audit(
-        "poly_file_pip (Q11 .poly sources -> PIP join, big-layer path)",
+        "poly_file_pip (Q11 .poly sources -> PIP join, slab refine)",
         q["poly_file_pip"](spark, sf_dir),
-        must=["BroadcastHashJoin", "partial_count", "ArrowEvalPython"],
-        must_not=["BatchEvalPython", "CartesianProduct",
-                  "SortMergeJoin"],
-        notes="the parsed fixtures densify to ~1800 ring edges — "
-              "ABOVE the 512-edge codegen-refine threshold — so this "
-              "query exercises pip_join's BIG-LAYER path: broadcast "
-              "cover-cell join + vectorized numpy ray-cast in one "
-              "Arrow batch (the demo pip_join audit covers the "
-              "small-layer all-codegen path); per-area aggregation "
+        must=["BroadcastHashJoin", "partial_count"],
+        must_not=["BatchEvalPython", "ArrowEvalPython", "MapInArrow",
+                  "CartesianProduct", "SortMergeJoin"],
+        notes="the parsed fixtures densify to ~1800 ring edges and "
+              "refine through the same broadcast cover + slab joins "
+              "as the demo layer — zero Python; per-area aggregation "
               "partial-aggregates before one exchange, and the 2-row "
               "n_ring relation broadcasts.",
     )

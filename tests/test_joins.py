@@ -190,37 +190,54 @@ def test_pip_join_spark(spark):
     assert sorted((x["point_id"], x["area_id"]) for x in got) == [(0, 7), (2, 7)]
 
 
-def test_pip_join_expr_and_udf_paths_agree(spark):
-    """The codegen Column-expression refine and the pandas-UDF refine
-    must classify identically (same arithmetic by construction)."""
-    import numpy as np
+def test_pip_join_slab_refine_matches_area_contains(spark):
+    """The slab-edge refine returns area_contains' bits: on the
+    densified demo layer, and on a planar area with two overlapping
+    outer units (one with two holes), probed at random, on every
+    vertex, on horizontal edges and exactly on band edges
+    (lat = k*0.25 - 90)."""
+    from geospark import geodata as G
 
     rng = np.random.RandomState(11)
-    outer = np.array([(0.0, 0.0), (3.0, 10.0), (10.0, 7.0), (8.0, -2.0)])
-    hole = np.array([(3.0, 2.0), (3.0, 5.0), (6.0, 5.0)])
-    layer = PolygonLayer([Area(1, [outer], [[hole]])], cover_zoom=5)
-    rows = [
-        (i, float(rng.uniform(-3, 13)), float(rng.uniform(-5, 13)))
-        for i in range(300)
-    ]
-    pts = spark.createDataFrame(rows, "point_id long, lat double, lng double")
-    via_expr = sorted(
-        r["point_id"]
-        for r in pip_join(pts, layer, max_expr_edges=512).collect()
+    two_units = Area(
+        1,
+        outers=[
+            np.array([(0.0, 0.0), (0.0, 10.0), (10.0, 10.0), (10.0, 0.0)]),
+            np.array([(5.0, 5.0), (5.1, 15.0), (15.0, 15.0), (14.9, 5.0)]),
+        ],
+        inners=[
+            [np.array([(2.0, 2.0), (2.0, 4.0), (4.0, 4.0), (4.0, 2.0)]),
+             np.array([(6.0, 6.0), (6.3, 9.0), (8.7, 7.5)])],
+            [],
+        ],
     )
-    via_udf = sorted(
-        r["point_id"]
-        for r in pip_join(pts, layer, max_expr_edges=0).collect()
-    )
-    assert via_expr == via_udf
-    # and both match the numpy oracle
-    lat = np.array([r[1] for r in rows])
-    lng = np.array([r[2] for r in rows])
-    expect = sorted(
-        int(rows[i][0])
-        for i in np.nonzero(area_contains(Area(1, [outer], [[hole]]), lat, lng))[0]
-    )
-    assert via_expr == expect
+    cases = [(G.demo_layer(), 4000),
+             (PolygonLayer([two_units], cover_zoom=5, densify_deg=None), 1500)]
+    for layer, n in cases:
+        lat, lng = [], []
+        for a in layer.areas:
+            lat_min, lng_min, lat_max, lng_max = a.bbox()
+            lat += list(rng.uniform(lat_min - 0.5, lat_max + 0.5, n))
+            lng += list(rng.uniform(lng_min - 0.5, lng_max + 0.5, n))
+            verts = np.vstack([*a.outers, *(h for hs in a.inners for h in hs)])
+            lat += list(verts[:, 0])
+            lng += list(verts[:, 1])
+            ks = np.arange(np.floor((lat_min + 90) / 0.25),
+                           np.floor((lat_max + 90) / 0.25) + 2)
+            lat += list(ks * 0.25 - 90)
+            lng += list(rng.uniform(lng_min, lng_max, len(ks)))
+        # horizontal edges of the planar fixture: lat 0 and 10, 2 and 4
+        lat += [0.0, 10.0, 2.0, 4.0, 0.0, 10.0]
+        lng += [5.0, 3.0, 3.0, 3.0, 0.0, 10.0]
+        lat, lng = np.array(lat), np.array(lng)
+        pts = spark.createDataFrame(
+            [(i, float(la), float(lo)) for i, (la, lo) in enumerate(zip(lat, lng))],
+            "point_id long, lat double, lng double")
+        got = sorted((r["area_id"], r["point_id"])
+                     for r in pip_join(pts, layer).collect())
+        want = sorted((a.area_id, int(i)) for a in layer.areas
+                      for i in np.nonzero(area_contains(a, lat, lng))[0])
+        assert got == want and len(want) > 0
 
 
 def test_pip_join_multipolygon_with_hole(spark):

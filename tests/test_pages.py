@@ -43,6 +43,31 @@ def test_extract_points_spark(spark):
     assert a.equals(b)
 
 
+def test_extract_points_mentions(spark):
+    """Null text and mention-free pages yield nothing; mentions keep
+    text order; signs parse; only ASCII digits count."""
+    from geospark import goldens
+
+    arabic = "coord: \u0661\u0662.\u0663\u0664\u0665\u0666\u0667\u0668, 9.000000"
+    rows = [
+        ("null", None),
+        ("none", "a page with no coordinates"),
+        ("three", "coord: 5.500000, 6.250000 then coord: 1.000000, 2.000000"
+                  " and coord: 3.000001, 4.000002"),
+        ("neg", "at coord: -33.868800, -151.209300."),
+        ("arabic", arabic),
+    ]
+    pages = spark.createDataFrame(rows, "url string, text string")
+    got = sorted(tuple(r) for r in extract_points(pages).collect())
+    assert got == [
+        ("neg", 0, -33.8688, -151.2093),
+        ("three", 0, 5.5, 6.25),
+        ("three", 1, 1.0, 2.0),
+        ("three", 2, 3.000001, 4.000002),
+    ]
+    assert goldens._COORD.search(arabic) is None
+
+
 def test_city_skew_present(spark):
     """Zipf city skew: hottest z8 cell should hold >> uniform share."""
     from pyspark.sql import functions as F
