@@ -58,15 +58,20 @@ def with_linear_cell_at_zoom(df: DataFrame, zoom: int, lat: str = "lat",
     ``zoom`` <= 16 derives from the z=16 pixel (bit-compatible with the
     S10 quadkey prefix space); zoom > 16 projects directly at the
     requested zoom — a finer uniform grid for sub-cell-size
-    neighborhood joins (tiny cluster radii), not a quadkey level."""
+    neighborhood joins (tiny cluster radii), not a quadkey level.
+
+    The row is clamped to 2^z - 1: latitudes at or below -85.0511 (and
+    the half pixel above) round to row 2^z, which no cover reaches.
+    ``joins.cell_tile_of_latlng``, the numpy twin, clamps the same way;
+    the Morton cell keeps S10's unclamped row."""
+    pz = max(zoom, CELL_ZOOM)  # projection zoom
+    px = K.merc_to_pixel_x(K.latlng_to_merc_x(F.col(lng)), pz, tile_size=1)
+    py = F.least(K.merc_to_pixel_y(K.latlng_to_merc_y(F.col(lat)), pz, tile_size=1),
+                 F.lit((1 << pz) - 1))
     if zoom <= CELL_ZOOM:
-        px = K.merc_to_pixel_x(K.latlng_to_merc_x(F.col(lng)), 16, tile_size=1)
-        py = K.merc_to_pixel_y(K.latlng_to_merc_y(F.col(lat)), 16, tile_size=1)
         d = CELL_ZOOM - zoom
         cell = F.shiftleft(F.shiftright(py, d), zoom) + F.shiftright(px, d)
     else:
-        px = K.merc_to_pixel_x(K.latlng_to_merc_x(F.col(lng)), zoom, tile_size=1)
-        py = K.merc_to_pixel_y(K.latlng_to_merc_y(F.col(lat)), zoom, tile_size=1)
         cell = F.shiftleft(py, zoom) + px
     return df.withColumn(col, cell)
 

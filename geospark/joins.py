@@ -47,17 +47,18 @@ def cell_tile_of_latlng(lat, lng, zoom: int) -> tuple[np.ndarray, np.ndarray]:
     """Tile coords in *cell space* at ``zoom``: the z=16 webmercator<1>
     pixel (x truncates, y rounds — S10's convention) shifted right by
     the zoom delta. This is exactly the (x, y) whose Morton code equals
-    ``kernels.cell_at_zoom`` — covers MUST use this mapping, not the
-    tile_size=4096 tile math, or boundary points miss their cover cell.
+    ``kernels.cell_at_zoom`` (bar the clamped south row below) — covers
+    MUST use this mapping, not the tile_size=4096 tile math, or
+    boundary points miss their cover cell.
     zoom > 16 projects directly (the finer-grid twin of
-    cells.with_linear_cell_at_zoom).
+    cells.with_linear_cell_at_zoom). The row is clamped to 2^zoom - 1,
+    as there: the south edge would otherwise round to row 2^zoom.
     """
-    if zoom <= 16:
-        px16, py16 = NK.latlng_to_pixel(lat, lng, 16, tile_size=1)
-        d = 16 - zoom
-        return np.asarray(px16, np.int64) >> d, np.asarray(py16, np.int64) >> d
-    px, py = NK.latlng_to_pixel(lat, lng, zoom, tile_size=1)
-    return np.asarray(px, np.int64), np.asarray(py, np.int64)
+    pz = max(zoom, 16)  # projection zoom
+    px, py = NK.latlng_to_pixel(lat, lng, pz, tile_size=1)
+    py = np.minimum(np.asarray(py, np.int64), (1 << pz) - 1)
+    d = pz - zoom
+    return np.asarray(px, np.int64) >> d, py >> d
 
 
 # ---------------------------------------------------------------------------

@@ -1,18 +1,30 @@
 """Scale machinery: snapshot tables, checkpoint/resume pipelines,
-per-partition lineage metrics (SURVEY §7.8).
+per-file lineage metrics (SURVEY §7.8).
 
 The north rule asks for Iceberg-snapshot checkpoints. The sandbox has
 no Iceberg runtime jar (and no network), so this module implements the
 documented fallback: parquet data files + JSON snapshot manifests with
 the SAME resume API — each committed snapshot records its id, parent,
-stage name, row count and file list; commits are atomic (manifest
-written via tmp + rename, data written before the manifest). Swapping
-in a real Iceberg catalog replaces ``SnapshotTable`` internals only
-(``writeTo(...).append()`` + snapshot ids from the table metadata).
+stage name, row count, schema and per-file (rows, bytes) list; commits
+are atomic (manifest written via tmp + rename, data written before the
+manifest). Swapping in a real Iceberg catalog replaces
+``SnapshotTable`` internals only (``writeTo(...).append()`` + snapshot
+ids from the table metadata).
 
-Lineage: every pipeline stage appends one row per output partition to
-``<root>/_lineage`` — (run_id, stage, partition_id, rows, wall_ms,
-input_snapshot, output_snapshot) — queryable as a plain parquet table.
+A commit is ONE Spark job, the data write. Its metadata comes from the
+files themselves: the driver reads the parquet footers of the part
+files just written (pyarrow, local ``os`` paths like the manifests)
+for each file's row count and Spark's own schema JSON — what Iceberg
+manifests keep as ``record_count`` / ``file_size_in_bytes`` and the
+table schema. Reads pass that schema to the reader, so a read starts
+no inference job.
+
+Lineage: every pipeline stage appends one row per written part file to
+``<root>/_lineage`` — (partition_id, rows, run_id, stage,
+input_snapshot, output_snapshot, wall_ms), where ``partition_id`` is
+the part file's index in the snapshot — built from the manifest and
+written by one local pyarrow write; queryable as a plain parquet
+table.
 """
 
 from __future__ import annotations
@@ -24,8 +36,42 @@ import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores its schema JSON
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+LINEAGE_SCHEMA = pa.schema([
+    ("partition_id", pa.int32()),
+    ("rows", pa.int64()),
+    ("run_id", pa.string()),
+    ("stage", pa.string()),
+    ("input_snapshot", pa.string()),
+    ("output_snapshot", pa.string()),
+    ("wall_ms", pa.float64()),
+])
+
+
+def _footers(data_dir: str) -> tuple[list[dict], dict]:
+    """(per part file {path, rows, bytes}, Spark schema JSON) of a
+    directory Spark just wrote, from the parquet footers — driver-local,
+    no Spark job. Task 0 always writes a file, even for an empty
+    output, so there is at least one footer to take the schema from."""
+    files: list[dict] = []
+    schema = None
+    for name in sorted(os.listdir(data_dir)):
+        if name.startswith(("_", ".")) or not name.endswith(".parquet"):
+            continue  # _SUCCESS, .crc: what Spark's reader skips too
+        path = f"{data_dir}/{name}"
+        md = pq.read_metadata(path)
+        files.append({"path": path, "rows": md.num_rows,
+                      "bytes": os.path.getsize(path)})
+        if schema is None:
+            schema = json.loads(md.metadata[SPARK_SCHEMA_KEY])
+    return files, schema
 
 
 class SnapshotTable:
@@ -35,7 +81,12 @@ class SnapshotTable:
     ``<path>/_snapshots/<seq>-<id>.json`` manifests. The latest
     committed manifest is the current snapshot; uncommitted data dirs
     (crash between data write and manifest rename) are ignored — the
-    same recovery contract as Iceberg's metadata pointer."""
+    same recovery contract as Iceberg's metadata pointer.
+
+    A manifest carries ``rows``, ``files`` (one ``{path, rows, bytes}``
+    per part file) and ``schema`` (Spark's schema JSON), all read from
+    the written files' footers; ``read`` uses the stored schema and
+    infers only for manifests that predate it."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -44,23 +95,25 @@ class SnapshotTable:
         os.makedirs(f"{self.path}/data", exist_ok=True)
 
     # -- manifest helpers ---------------------------------------------------
+    def _names(self) -> list[str]:
+        """Committed manifest file names, in commit order."""
+        # '.tmp-*.json' is an in-flight (possibly truncated) commit — a
+        # crash before os.rename must leave it invisible, or a
+        # half-written file bricks every later read and a complete one
+        # counts as committed without ever entering a parent chain
+        return sorted(f_ for f_ in os.listdir(f"{self.path}/_snapshots")
+                      if f_.endswith(".json") and not f_.startswith("."))
+
+    def _load(self, name: str) -> dict:
+        with open(f"{self.path}/_snapshots/{name}") as fh:
+            return json.load(fh)
+
     def _manifests(self) -> list[dict]:
-        d = f"{self.path}/_snapshots"
-        out = []
-        for f_ in sorted(os.listdir(d)):
-            # '.tmp-*.json' is an in-flight (possibly truncated) commit
-            # — a crash before os.rename must leave it invisible, or a
-            # half-written file bricks every later read and a complete
-            # one counts as committed without ever entering a parent
-            # chain
-            if f_.endswith(".json") and not f_.startswith("."):
-                with open(f"{d}/{f_}") as fh:
-                    out.append(json.load(fh))
-        return out
+        return [self._load(n) for n in self._names()]
 
     def current(self) -> dict | None:
-        m = self._manifests()
-        return m[-1] if m else None
+        names = self._names()
+        return self._load(names[-1]) if names else None
 
     def snapshot(self, snapshot_id: str) -> dict | None:
         for m in self._manifests():
@@ -73,23 +126,21 @@ class SnapshotTable:
         """Materialize df as a new snapshot; returns the manifest.
         ``mode='append'`` makes the new snapshot the union of the
         parent's files and the new files (file-level append, no
-        rewrite)."""
+        rewrite). One Spark job; the commit parses at most one manifest
+        (the parent)."""
         snap_id = uuid.uuid4().hex[:16]
         data_dir = f"{self.path}/data/snap-{snap_id}"
         t0 = time.time()
-        # row count rides the write job itself (Observation) — no
-        # second read-back scan of what was just written
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite").parquet(data_dir)
-        rows = int(obs.get["rows"])
-        parent = self.current()
+        df.write.mode("overwrite").parquet(data_dir)
+        files, schema = _footers(data_dir)
+        rows = sum(f_["rows"] for f_ in files)
+        names = self._names()
+        parent = self._load(names[-1]) if names else None
         dirs = [data_dir]
         total_rows = rows
         if mode == "append" and parent is not None:
             dirs = parent["data_dirs"] + dirs
+            files = parent.get("files", []) + files
             total_rows += parent["rows"]
         manifest = {
             "snapshot_id": snap_id,
@@ -99,9 +150,11 @@ class SnapshotTable:
             "rows": total_rows,
             "rows_added": rows,
             "data_dirs": dirs,
+            "files": files,
+            "schema": schema,
             "wall_s": round(time.time() - t0, 3),
         }
-        seq = len(self._manifests())
+        seq = len(names)
         tmp = f"{self.path}/_snapshots/.tmp-{snap_id}.json"
         final = f"{self.path}/_snapshots/{seq:06d}-{snap_id}.json"
         with open(tmp, "w") as fh:
@@ -114,7 +167,13 @@ class SnapshotTable:
         m = self.snapshot(snapshot_id) if snapshot_id else self.current()
         if m is None:
             raise FileNotFoundError(f"no committed snapshot in {self.path}")
-        return self.spark.read.parquet(*m["data_dirs"])
+        return self._read(m)
+
+    def _read(self, m: dict) -> DataFrame:
+        reader = self.spark.read
+        if "schema" in m:  # older manifests fall back to inference
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(*m["data_dirs"])
 
     def expire(self, keep_last: int = 1) -> int:
         """Iceberg-style expire_snapshots: delete data dirs referenced
@@ -151,7 +210,9 @@ class Pipeline:
     a snapshot keyed by (stage name, input snapshot id). Re-running
     skips stages whose (name, input) already committed — resume after
     a crash restarts at the first uncommitted stage, reading the last
-    good snapshot. Lineage rows are appended per stage."""
+    good snapshot. Each stage that runs appends one lineage row per
+    written part file (``partition_id`` = part-file index, ``rows`` from
+    its footer); the stage writes are the only Spark jobs."""
 
     def __init__(self, spark: SparkSession, root: str, run_id: str | None = None):
         self.spark = spark
@@ -168,43 +229,45 @@ class Pipeline:
                 return m
         return None
 
+    def _append_lineage(self, stage: str, input_snapshot: str,
+                        m: dict, wall_ms: float) -> None:
+        n = len(m["files"])
+        t = pa.table([
+            list(range(n)),
+            [f_["rows"] for f_ in m["files"]],
+            [self.run_id] * n,
+            [stage] * n,
+            [input_snapshot] * n,
+            [m["snapshot_id"]] * n,
+            [round(wall_ms, 1)] * n,
+        ], schema=LINEAGE_SCHEMA)
+        d = f"{self.root}/_lineage"
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{m['snapshot_id']}.parquet"
+        pq.write_table(t, f"{d}/.{name}")  # hidden until renamed
+        os.rename(f"{d}/.{name}", f"{d}/{name}")
+
     def run(self, source: DataFrame, stages: list[Stage]) -> DataFrame:
         """Run (or resume) the stage chain starting from ``source``.
         The source is committed as stage '_source' first so resume is
         well-defined even if the source expression is expensive."""
-        lineage_dir = f"{self.root}/_lineage"
         cur_table = self.table("_source")
         cur_manifest = self._find_commit(cur_table, "_source", None)
         if cur_manifest is None:
             cur_manifest = cur_table.write(source, stage="_source@None")
-        df = cur_table.read(cur_manifest["snapshot_id"])
+        df = cur_table._read(cur_manifest)
         input_snap = cur_manifest["snapshot_id"]
 
         for stage in stages:
             table = self.table(stage.name)
-            existing = self._find_commit(table, stage.name, input_snap)
-            if existing is not None:
-                df = table.read(existing["snapshot_id"])
-                input_snap = existing["snapshot_id"]
-                continue
-            t0 = time.time()
-            out = stage.fn(df)
-            manifest = table.write(out, stage=f"{stage.name}@{input_snap}")
-            wall_ms = (time.time() - t0) * 1000.0
-            # per-partition lineage of the committed output
-            committed = table.read(manifest["snapshot_id"])
-            part_rows = (
-                committed.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(F.count("*").alias("rows"))
-                .withColumn("run_id", F.lit(self.run_id))
-                .withColumn("stage", F.lit(stage.name))
-                .withColumn("input_snapshot", F.lit(input_snap))
-                .withColumn("output_snapshot", F.lit(manifest["snapshot_id"]))
-                .withColumn("wall_ms", F.lit(round(wall_ms, 1)))
-            )
-            part_rows.write.mode("append").parquet(lineage_dir)
-            df = committed
-            input_snap = manifest["snapshot_id"]
+            m = self._find_commit(table, stage.name, input_snap)
+            if m is None:
+                t0 = time.time()
+                m = table.write(stage.fn(df), stage=f"{stage.name}@{input_snap}")
+                self._append_lineage(stage.name, input_snap, m,
+                                     (time.time() - t0) * 1000.0)
+            df = table._read(m)
+            input_snap = m["snapshot_id"]
         return df
 
     def lineage(self) -> DataFrame:

@@ -612,3 +612,42 @@ def test_knn_classify_majority_and_ties(spark):
     assert got[0] == ("a", 2)      # majority beats the nearest 'z'
     q8 = knn_classify(df, _centers_df(spark, [(8, 10.0, 10.0)]), k=4).collect()[0]
     assert (q8["label"], q8["n_votes"]) == ("b", 2)  # 2-2 tie -> 'b'
+
+
+def test_south_edge_row_radius_knn_nearest(spark):
+    """Latitudes at or below -85.0511 project to pixel row 2^z; the
+    point cell and every cover clamp that row to 2^z - 1, so a point
+    ~2 m from a center at (-89, 0) is found by the radius, kNN and
+    nearest joins — not missed, nor beaten by a point 1,000 km away."""
+    from geospark.joins import nearest_join_df
+
+    pts = spark.createDataFrame([(0, -89.0, 0.001), (1, -80.0, 0.0)],
+                                "point_id long, lat double, lng double")
+    centers = _centers_df(spark, [(7, -89.0, 0.0)])
+    near = float(NK.distance(-89.0, 0.0, -89.0, 0.001))
+
+    r = radius_join_df(pts, centers, max_m=1000.0).collect()
+    assert [(x["query_id"], x["point_id"]) for x in r] == [(7, 0)]
+    assert abs(r[0]["dist_m"] - near) < 1e-6
+    r = knn_join_df(pts, centers, k=1).collect()
+    assert [(x["query_id"], x["point_id"]) for x in r] == [(7, 0)]
+    assert abs(r[0]["dist_m"] - near) < 1e-6
+    r = nearest_join_df(pts, centers, id_col="point_id").collect()
+    assert [(x["query_id"], x["point_id"]) for x in r] == [(7, 0)]
+    assert abs(r[0]["dist_m"] - near) < 1e-6
+
+
+def test_linear_cell_clamps_south_row_like_covers(spark):
+    """cells.with_linear_cell_at_zoom and joins.cell_tile_of_latlng
+    agree on the clamped south row, in the <=16 and >16 branches."""
+    from geospark.cells import with_linear_cell_at_zoom
+    from geospark.joins import cell_tile_of_latlng
+
+    lats = [-90.0, -89.0, -85.0511287798, -85.05, 0.0, 85.0511287798, 90.0]
+    df = spark.createDataFrame([(la, 0.5) for la in lats], "lat double, lng double")
+    for z in (0, 4, 12, 16, 18):
+        got = [r["c"] for r in with_linear_cell_at_zoom(df, z, col="c")
+               .select("c").collect()]
+        tx, ty = cell_tile_of_latlng(np.array(lats), np.full(len(lats), 0.5), z)
+        assert ty.max() <= (1 << z) - 1, z
+        assert got == [int(y) * (1 << z) + int(x) for x, y in zip(tx, ty)], z

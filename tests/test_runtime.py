@@ -185,3 +185,161 @@ def test_snapshot_expire_reclaims_old_data_dirs(spark, tmp_path):
     assert len(os.listdir(f"{st.path}/data")) == n_dirs_before - 2
     assert st.read().count() == 5           # live view intact
     assert len(st._manifests()) == 3        # replay markers retained
+
+
+# -- commits read their own footers -------------------------------------------
+LINEAGE_DTYPES = [("partition_id", "int"), ("rows", "bigint"),
+                  ("run_id", "string"), ("stage", "string"),
+                  ("input_snapshot", "string"), ("output_snapshot", "string"),
+                  ("wall_ms", "double")]
+
+
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted in a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = f"t-{uuid.uuid4().hex[:8]}"
+
+    def in_group(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            return call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    out = in_group(tag, fn)
+    in_group(f"{tag}-mark", lambda: spark.range(1).collect())
+    # job events reach the tracker in order: once the marker job shows,
+    # every job fn ran shows too
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(f"{tag}-mark") and time.time() < deadline:
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(tag))
+
+
+def test_snapshot_write_is_one_job_and_read_none(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    df = spark.range(0, 1000, numPartitions=3).withColumn("v", F.col("id") * 2)
+    m, n_write = _jobs_in(spark, lambda: t.write(df, stage="s"))
+    assert n_write == 1
+    assert m["rows"] == 1000
+    assert len(m["files"]) == 3 and sum(f["rows"] for f in m["files"]) == 1000
+    assert all(f["bytes"] > 0 for f in m["files"])
+    schema, n_read = _jobs_in(spark, lambda: t.read().schema)
+    assert n_read == 0
+    assert schema.simpleString() == "struct<id:bigint,v:bigint>"
+    assert t.read().count() == 1000
+
+
+def test_snapshot_read_schema_matches_inference(spark, tmp_path):
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        ArrayType, DecimalType, DoubleType, IntegerType, LongType, MapType,
+        StringType, StructField, StructType, TimestampType)
+
+    schema = StructType([
+        StructField("id", LongType(), False),
+        StructField("amount", DecimalType(12, 3), True),
+        StructField("ts", TimestampType(), True),
+        StructField("tags", ArrayType(IntegerType(), False), True),
+        StructField("attrs", MapType(StringType(), DoubleType()), True),
+        StructField("pt", StructType([StructField("a", IntegerType(), False),
+                                      StructField("b", StringType())]), False),
+    ])
+    rows = [(1, Decimal("12.345"), dt.datetime(2024, 1, 2, 3, 4, 5), [1, 2],
+             {"x": 1.5}, (7, "s")),
+            (2, None, None, None, None, (8, None))]
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    m = t.write(spark.createDataFrame(rows, schema), stage="s")
+    inferred = spark.read.parquet(*m["data_dirs"])
+    assert t.read().schema == inferred.schema
+    assert sorted(t.read().collect()) == sorted(inferred.collect())
+
+
+def test_snapshot_append_sums_rows_and_keeps_parent_files(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    m1 = t.write(spark.range(0, 10, numPartitions=2), stage="a")
+    m2 = t.write(spark.range(100, 103, numPartitions=1), stage="b", mode="append")
+    assert m2["rows"] == 13 and m2["rows_added"] == 3
+    assert m2["files"][: len(m1["files"])] == m1["files"]
+    assert sum(f["rows"] for f in m2["files"]) == 13
+    assert t.read().count() == 13
+
+
+def test_snapshot_manifest_without_schema_still_reads(spark, tmp_path):
+    import json
+    import os
+
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    m = t.write(spark.range(5).withColumn("s", F.col("id").cast("string")))
+    name = [f for f in os.listdir(f"{t.path}/_snapshots") if f.endswith(".json")][0]
+    path = f"{t.path}/_snapshots/{name}"
+    with open(path) as fh:
+        old = json.load(fh)
+    for key in ("schema", "files"):  # a manifest from before footer reads
+        old.pop(key)
+    with open(path, "w") as fh:
+        json.dump(old, fh)
+    got = t.read()
+    assert got.schema == t._read(m).schema
+    assert sorted(r["s"] for r in got.collect()) == [str(i) for i in range(5)]
+
+
+def test_snapshot_commit_parses_at_most_one_manifest(spark, tmp_path, monkeypatch):
+    import json
+    import os
+    import shutil
+
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.write(spark.range(3), stage="s0")
+    d = f"{t.path}/_snapshots"
+    first = os.listdir(d)[0]
+    for seq in range(1, 50):  # 50 committed manifests
+        shutil.copy(f"{d}/{first}", f"{d}/{seq:06d}-{first.split('-', 1)[1]}")
+    loads = {"n": 0}
+    real_load = json.load
+
+    def counting_load(fh):
+        loads["n"] += 1
+        return real_load(fh)
+
+    monkeypatch.setattr(json, "load", counting_load)
+    m = t.write(spark.range(4), stage="s50", mode="append")
+    assert loads["n"] <= 1
+    assert m["rows"] == 7
+    assert sorted(os.listdir(d))[-1] == f"000050-{m['snapshot_id']}.json"
+
+
+def test_pipeline_lineage_one_row_per_part_file(spark, tmp_path):
+    root = str(tmp_path / "pipe")
+    p = Pipeline(spark, root, run_id="r1")
+    stages = [Stage("double", lambda df: df.withColumn("v", F.col("id") * 2)),
+              Stage("empty", lambda df: df.filter(F.col("id") < 0))]
+    out, n_jobs = _jobs_in(spark, lambda: p.run(spark.range(0, 50, numPartitions=3),
+                                                stages))
+    # the source commit and the two (map-only) stage writes; lineage and
+    # the read-backs run no job
+    assert n_jobs == 3
+    assert out.count() == 0
+    lin = p.lineage()
+    assert lin.dtypes == LINEAGE_DTYPES
+    rows = lin.toPandas()
+    for name in ("double", "empty"):
+        m = p.table(name).current()
+        got = rows[rows["stage"] == name].sort_values("partition_id")
+        assert len(got) == len(m["files"]) >= 1
+        assert list(got["partition_id"]) == list(range(len(m["files"])))
+        assert list(got["rows"]) == [f["rows"] for f in m["files"]]
+        assert got["rows"].sum() == m["rows"]
+        assert set(got["output_snapshot"]) == {m["snapshot_id"]}
+    assert len(p.table("_source").current()["files"]) == 3
+    # an empty stage commits rows 0 and reads back with its schema
+    empty = p.table("empty")
+    m = empty.current()
+    assert m["rows"] == 0
+    assert empty.read().schema == spark.read.parquet(*m["data_dirs"]).schema
+    assert empty.read().count() == 0
