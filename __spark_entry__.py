@@ -209,8 +209,9 @@ def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN majority-vote classification (joins.knn_classify): each
     demo center takes the modal event_type of its 25 nearest event
-    points — exact-haversine neighbors via the two-phase kNN
-    escalation, votes as one partial-agg shuffle, winner by
+    points — exact-haversine neighbors via the two-phase kNN join
+    (cell-count radius bound, then a bounded radius join), votes as
+    one partial-agg shuffle, winner by
     (-votes, label) min-struct (vote ties to the smaller label). The
     DuckDB oracle is the brute-force window derivation: rank all
     points per center by (dist, event_id) — the kNN tie rule — take
@@ -3445,10 +3446,10 @@ GEOCODE_NAMES, GEOCODE_PER_NAME = 500, 3
 
 def _q_reverse_geocode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reverse geocoding (geocode.reverse_geocode): nearest gazetteer
-    place per unnamed point via the WINDOWLESS cell-ring k=1
-    escalation (joins.nearest_join_df — d_1 bound and final argmin
-    are both partial-aggregatable min-structs; z6 start for the
-    1500-place country-scale gazetteer), exact haversine argmin with
+    place per unnamed point via the WINDOWLESS k=1 join
+    (joins.nearest_join_df — a per-point d_1 bound from one count of
+    places per cell, then a radius join whose argmin is a
+    partial-aggregatable min-struct), exact haversine argmin with
     gaz_id tie-break, attributes rejoined by broadcast. A 1-in-10
     event sample keeps the DuckDB cross-join oracle tractable; the
     Spark plan is the full filter-refine path. Oracle: INDEPENDENT
@@ -4809,7 +4810,7 @@ def _polygon_overlap_oracle_sql() -> str:
 
 def _reverse_geocode_oracle() -> str:
     """DuckDB twin of _q_reverse_geocode — INDEPENDENT algorithm: the
-    Spark side is the cell-ring kNN escalation; the oracle is the
+    Spark side is the cell-count-bounded kNN radius join; the oracle is the
     brute-force cross-join argmin (row_number over every
     point x place pair), so green certifies cover recall, not plan
     echo. Ordering on the raw haversine double with gaz_id tie-break
@@ -6777,7 +6778,7 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked WHERE rn <= {KNN_K}
         """,
         # independent-ALGORITHM oracle: brute-force window kNN + vote
-        # argmax (the engine's escalation never appears)
+        # argmax (the engine's cell-count bound never appears)
         "knn_classify": f"""
             WITH pts AS ({pts}),
             ranked AS (

@@ -523,14 +523,14 @@ def _geocode(inp):
 
 
 def _revgeo(inp):
-    # nearest of 450k places per point via cell-ring kNN k=1 (z8 start)
+    # nearest of 450k places per point via the windowless kNN k=1 join
     from geospark.geocode import gazetteer, reverse_geocode
 
     spark, c = inp["spark"], F.col("id")
     pts = spark.range(inp["n"]).select(
         c.alias("point_id"), _grid_lat(c).alias("lat"),
         _grid_lng(c).alias("lng"))
-    res = reverse_geocode(pts, gazetteer(spark, 150_000, 3), start_zoom=8)
+    res = reverse_geocode(pts, gazetteer(spark, 150_000, 3))
     return _counts(res, n_resolved=F.count("*"),
                    n_places_hit=F.countDistinct("gaz_id"))
 

@@ -584,7 +584,7 @@ def _collect_codebook(emb: DataFrame, m: int, n_codes: int,
                       dim: int) -> list[list[list[int]]]:
     """Driver-side codebook: quantized subvectors of the first
     ``n_codes`` vectors by id — n_codes rows, the same O(1) driver
-    contract as the BPE argmax / kNN escalation aggregates.
+    contract as the BPE argmax aggregate.
     cb[s][c] = BIGINT-quantized subvector of centroid c in subspace
     s (missing ids are skipped; callers need n_codes present)."""
     import math as _math
@@ -820,7 +820,7 @@ def pq_topk_rerank(emb: DataFrame, query_ids: list[int], k: int = 10,
 # driver-side step is the centroid mean, defined as componentwise
 # floor division (Python //) over collected (sum, count) pairs —
 # k*dim BIGINTs per iteration, the same model-sized-data-only driver
-# contract as the BPE argmax and kNN escalation loops.
+# contract as the BPE argmax loop.
 #
 # Per-iteration plan: assignment is a MAP-SIDE projection (centroids
 # inlined as literal arrays — zero joins, zero corpus shuffle, the

@@ -134,23 +134,21 @@ def resolve_mentions(mentions: DataFrame, gaz: DataFrame,
 def reverse_geocode(points: DataFrame, gaz: DataFrame,
                     id_col: str = "point_id",
                     lat: str = "lat", lng: str = "lng",
-                    start_zoom: int = 6,
                     broadcast_attrs: bool = True) -> DataFrame:
     """Reverse geocoding — the inverse of :func:`resolve_mentions`:
     nearest gazetteer place per UNNAMED point (exact haversine argmin,
     ties -> lowest gaz_id). The "which city is this page's coordinate
     in" step when a mention carries no usable name.
 
-    Plan: the windowless k=1 cell-ring escalation
-    (joins.nearest_join_df) with the gazetteer as the indexed point
-    set and the input points as centers — per-point candidates stay
-    proportional to local place density, the driver loop touches only
-    per-level counts, and both the d_1 bound and the final argmin are
-    partial-aggregatable mins (no exchange carries raw candidates).
-    ``start_zoom`` should match gazetteer density (z6 for a
-    country-scale gazetteer; finer for POI-scale). Attributes rejoin
-    on gaz_id — broadcast by default (a gazetteer is a dimension),
-    hash join when ``broadcast_attrs=False`` (10M+ POI sets).
+    Plan: the windowless k=1 join (joins.nearest_join_df) with the
+    gazetteer as the indexed point set and the input points as
+    centers. Each point's search radius comes from one count of places
+    per cell (the finest cell around it holding a place), so candidates
+    stay proportional to local place density with no zoom rounds, and
+    the final argmin is a partial-aggregatable min (no exchange carries
+    raw candidates). Attributes rejoin on gaz_id — broadcast by default
+    (a gazetteer is a dimension), hash join when
+    ``broadcast_attrs=False`` (10M+ POI sets).
 
     Returns (id_col, gaz_id, name, population, dist_floor_m)."""
     from geospark.joins import nearest_join_df
@@ -163,7 +161,7 @@ def reverse_geocode(points: DataFrame, gaz: DataFrame,
     )
     nn = nearest_join_df(
         gpts, centers, lat="g_lat", lng="g_lng",
-        id_col="gaz_id", start_zoom=start_zoom,
+        id_col="gaz_id",
     ).select(
         F.col("query_id").alias(id_col),
         "gaz_id",

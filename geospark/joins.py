@@ -412,13 +412,9 @@ def _cover_ranges(lat_min, lng_min, lat_max, lng_max, z: int, pad: int = 1):
     ``(tx1, ty1, nx, ny)`` int64 arrays where x runs ``tx1 .. tx1+nx-1``
     **modulo 2^z** (antimeridian wrap) and y is clamped to [0, 2^z).
 
-    ``pad`` adds a ring of cells around the bbox rectangle: the
-    reference's box::extend lng buffer (box.h:50-70, replicated in
-    :func:`radius_join_df`'s cover UDF) under-covers the true
-    haversine disk at high latitude / large radius (true max dLng =
-    asin(sin(r/R)/cos(lat))), so covers built from it keep a one-cell
-    safety ring — the exact refine still decides membership, the ring
-    only restores recall.
+    ``pad`` adds a ring of cells around the bbox rectangle, a safety
+    margin for boxes whose edges are only approximate — the exact
+    refine still decides membership, the ring only restores recall.
     """
     lat_min = np.maximum(np.asarray(lat_min, np.float64), -NK.MERC_MAX_LATITUDE)
     lat_max = np.minimum(np.asarray(lat_max, np.float64), NK.MERC_MAX_LATITUDE)
@@ -437,7 +433,10 @@ def _cover_ranges(lat_min, lng_min, lat_max, lng_max, z: int, pad: int = 1):
     ty1 = np.clip(np.atleast_1d(ty1), 0, n - 1)
     ty2 = np.clip(np.atleast_1d(ty2), 0, n - 1)
     nx = np.mod(tx2 - tx1, n) + 1  # wrapped width
-    nx = np.where(np.atleast_1d(span) >= 360.0, n, nx)
+    # ends in one column but more than half the world apart: the box
+    # wraps all the way round, like a span of 360 deg
+    span = np.atleast_1d(span)
+    nx = np.where((span >= 360.0) | ((tx2 == tx1) & (span > 180.0)), n, nx)
     p = np.int64(pad)
     tx1 = np.mod(tx1 - p, n)
     nx = np.minimum(nx + 2 * p, n)
@@ -471,44 +470,12 @@ def cover_cells_series(lat_min, lng_min, lat_max, lng_max, z: int,
     """Vectorized batch form for pandas UDFs: per-row cover cell LISTS
     as a pandas Series backed by a pyarrow ListArray — zero per-row
     Python (the round trip is two numpy passes + one Arrow build)."""
-    import pyarrow as pa
-
     tx1, ty1, nx, ny = _cover_ranges(lat_min, lng_min, lat_max, lng_max, z, pad)
     cells, counts = _enumerate_covers(tx1, ty1, nx, ny, z)
     offsets = np.zeros(len(counts) + 1, np.int32)
     np.cumsum(counts, out=offsets[1:])
     return pa.ListArray.from_arrays(
         pa.array(offsets), pa.array(cells, pa.int64())
-    ).to_pandas()
-
-
-def neighbor_cells_series(lat, lng, zoom: int) -> pd.Series:
-    """3x3 neighbor-cell lists for a batch of points, fully vectorized
-    (numpy broadcast over the 9 offsets; x wraps mod 2^z, y clamps;
-    in-row dedup via sort — wrap collisions occur only at zoom <= 1).
-    Returns a pandas Series of int64 arrays (pyarrow ListArray)."""
-    import pyarrow as pa
-
-    tx, ty = cell_tile_of_latlng(
-        np.asarray(lat, np.float64), np.asarray(lng, np.float64), zoom
-    )
-    n = np.int64(1 << zoom)
-    dx = np.tile(np.array([-1, 0, 1], np.int64), 3)
-    dy = np.repeat(np.array([-1, 0, 1], np.int64), 3)
-    xs = np.mod(np.atleast_1d(tx)[:, None] + dx, n)
-    ys = np.atleast_1d(ty)[:, None] + dy
-    valid = (ys >= 0) & (ys < n)
-    ids = (np.maximum(ys, 0) << np.int64(zoom)) + xs
-    sent = np.int64(1) << np.int64(62)
-    ids = np.where(valid, ids, sent)
-    ids.sort(axis=1)
-    keep = ids != sent
-    keep[:, 1:] &= ids[:, 1:] != ids[:, :-1]
-    counts = keep.sum(axis=1)
-    offsets = np.zeros(len(counts) + 1, np.int32)
-    np.cumsum(counts, out=offsets[1:])
-    return pa.ListArray.from_arrays(
-        pa.array(offsets), pa.array(ids[keep], pa.int64())
     ).to_pandas()
 
 
@@ -611,7 +578,9 @@ def radius_join_df(points: DataFrame, centers: DataFrame, max_m: float,
 
     ``radius_col``: optional per-center radius column (capped by
     ``max_m``) — each center's cover AND its refine threshold use its
-    own radius (the kNN phase-2 path).
+    own radius (the kNN phase-2 path). The cover zoom then fits the
+    median radius, at most 3 levels finer than the largest radius needs
+    (that center's cover stays under ~20x20 cells).
 
     Plan: centers -> explode(cover cells)  (narrow, ~k cells/center)
           points  -> linear cell           (narrow)
@@ -621,26 +590,40 @@ def radius_join_df(points: DataFrame, centers: DataFrame, max_m: float,
     """
     from geospark.cells import with_linear_cell_at_zoom
 
-    # finest zoom whose 1-cell edge still exceeds the radius —
-    # bbox covers then stay at a handful of cells per center
-    earth = 40075016.686
-    zoom = 0
-    while zoom < 20 and earth / (1 << (zoom + 1)) >= max_m:
-        zoom += 1
+    def zoom_for(m: float) -> int:
+        # finest zoom whose 1-cell edge still exceeds the radius —
+        # bbox covers then stay at a handful of cells per center
+        earth = 40075016.686
+        zoom = 0
+        while zoom < 20 and earth / (1 << (zoom + 1)) >= m:
+            zoom += 1
+        return zoom
+
+    r_col = F.least(F.col(radius_col), F.lit(max_m)) if radius_col else F.lit(max_m)
+    if radius_col is None:
+        zoom = zoom_for(max_m)
+    else:
+        med, top = centers.agg(F.percentile_approx(r_col, 0.5), F.max(r_col)).first()
+        zoom = 0 if top is None else min(zoom_for(med), zoom_for(top) + 3)
 
     @pandas_udf("array<long>")
     def _cover(clat: pd.Series, clng: pd.Series, cr: pd.Series) -> pd.Series:
         la = clat.to_numpy(np.float64)
         ln = clng.to_numpy(np.float64)
         r = cr.to_numpy(np.float64)
-        # vectorized box::extend twin (box.h:27-29 + :50-70)
+        # bounding box of the spherical cap: the latitude span errs wide
+        # (111 km per degree), the longitude half-width is
+        # asin(sin(r/R)/cos(lat)), and a cap over a pole spans every
+        # longitude
         d_lat = r / 111000.0
         lat_lo, lat_hi = la - d_lat, la + d_lat
-        lng_lo = ln - np.abs(r / (111200.0 * np.cos(np.radians(lat_lo))))
-        lng_hi = ln + np.abs(r / (111200.0 * np.cos(np.radians(lat_hi))))
+        ang = np.minimum(r / K.EARTH_RADIUS_M, np.pi / 2)
+        half = np.degrees(np.arcsin(np.minimum(
+            np.sin(ang) / np.cos(np.radians(la)), 1.0)))
+        half = np.where((lat_lo <= -90.0) | (lat_hi >= 90.0), 180.0, half)
+        lng_lo, lng_hi = ln - half, ln + half
         return cover_cells_series(lat_lo, lng_lo, lat_hi, lng_hi, zoom, pad=1)
 
-    r_col = F.least(F.col(radius_col), F.lit(max_m)) if radius_col else F.lit(max_m)
     c = centers.select(
         F.col(q_id).alias("query_id"),
         F.col(q_lat).alias("_q_lat"),
@@ -662,129 +645,95 @@ def radius_join_df(points: DataFrame, centers: DataFrame, max_m: float,
     )
 
 
+def _knn_candidates(points: DataFrame, centers: DataFrame, k: int, lat: str,
+                    lng: str, q_id: str, q_lat: str, q_lng: str) -> DataFrame:
+    """Every (point, query_id, dist_m) pair within a per-center upper
+    bound on d_k, the distance to the k-th nearest point: radius_join_df
+    against the spooled bound, with no rounds.
+
+    One partially aggregated ``groupBy`` counts points per cell
+    ``(z, x, y)`` at z16 .. z1; each center keeps the finest z whose own
+    cell holds >= k points. Those points lie in the cell, and in a
+    lat/lng box spanning <= 180 deg of longitude the farthest point from
+    a point inside is a corner, so the farthest corner bounds d_k. Row 0
+    reaches 90N and the last row 90S (cell ids clamp latitudes beyond
+    the Mercator limit into them); longitudes wrap into [-180, 180), so
+    every point lies in its cell's box. A center short of k points even
+    at z1 gets half the earth's circumference, which reaches every point.
+    """
+    from geospark.spool import spool
+
+    top = (1 << 16) - 1
+
+    def levels(df: DataFrame, la: str, ln: str, *keep: str) -> DataFrame:
+        # the z16 pixel (_px, _py) and one (_z, _x, _y) row per ancestor
+        wrapped = F.pmod(F.col(ln) + 180.0, F.lit(360.0)) - 180.0
+        px = K.merc_to_pixel_x(K.latlng_to_merc_x(wrapped), 16, tile_size=1)
+        py = K.merc_to_pixel_y(K.latlng_to_merc_y(F.col(la)), 16, tile_size=1)
+        return df.select(
+            *keep, F.least(px, F.lit(top)).alias("_px"),
+            F.least(py, F.lit(top)).alias("_py"),
+        ).select(*keep, "_px", "_py", F.expr(
+            "inline(transform(sequence(1, 16), z -> named_struct('_z', z,"
+            " '_x', shiftright(_px, 16 - z), '_y', shiftright(_py, 16 - z))))"
+        ))
+
+    counts = levels(points, lat, lng).groupBy("_z", "_x", "_y").agg(
+        F.count("*").alias("_n"))
+    cen = centers.select(
+        F.col(q_id).alias("query_id"), F.col(q_lat).alias("q_lat"),
+        F.col(q_lng).alias("q_lng"),
+    )
+    best = (
+        levels(cen, "q_lat", "q_lng", "query_id", "q_lat", "q_lng")
+        .join(counts, ["_z", "_x", "_y"], "left")
+        .groupBy("query_id", "q_lat", "q_lng", "_px", "_py")
+        .agg(F.max(F.when(F.col("_n") >= k, F.col("_z"))).alias("_z"))
+    )
+    # the cell's box in z16 pixel units (s pixels a side): x is
+    # truncated, y rounded, so row edges sit half a pixel above the
+    # pixel row boundaries
+    s = F.pow(F.lit(2.0), 16 - F.col("_z"))
+    u0 = F.floor(F.col("_px") / s) * s
+    v0 = F.floor(F.col("_py") / s) * s
+
+    def row_lat(v):
+        return K.merc_to_lat(K.pixel_to_merc_y(v, 16, tile_size=1))
+
+    box = best.select(
+        "query_id", "q_lat", "q_lng",
+        F.when(v0 == 0, 90.0).otherwise(row_lat(v0 - 0.5)).alias("_lat_n"),
+        F.when(v0 + s > top, -90.0).otherwise(row_lat(v0 + s - 0.5)).alias("_lat_s"),
+        (u0 * (360.0 / (1 << 16)) - 180.0).alias("_lng_w"),
+        ((u0 + s) * (360.0 / (1 << 16)) - 180.0).alias("_lng_e"),
+    )
+    corner = F.greatest(*[
+        K.distance(F.col("q_lat"), F.col("q_lng"), F.col(la), F.col(ln))
+        for la in ("_lat_n", "_lat_s") for ln in ("_lng_w", "_lng_e")
+    ])
+    r = F.coalesce(corner, F.lit(np.pi * K.EARTH_RADIUS_M))
+    bound = spool(box.select(
+        "query_id", "q_lat", "q_lng",
+        (r * (1.0 + 1e-9) + 1e-6).alias("knn_radius"),
+    ), "knn_bound")
+    return radius_join_df(points, bound, max_m=float("inf"),
+                          radius_col="knn_radius", lat=lat, lng=lng)
+
+
 def knn_join_df(points: DataFrame, centers: DataFrame, k: int,
                 lat: str = "lat", lng: str = "lng", id_col: str = "point_id",
                 q_id: str = "query_id", q_lat: str = "q_lat",
-                q_lng: str = "q_lng", start_zoom: int = 16) -> DataFrame:
+                q_lng: str = "q_lng") -> DataFrame:
     """point_rtree::nearest(c, k) (src/point_rtree.cc:38-48) with a
-    DATAFRAME of query centers, as a guaranteed-exact two-phase plan.
-    The driver loop touches only per-center AGGREGATES (counts), never
-    data rows:
-
-    phase 1: per zoom (start_zoom, -4, ... 0): join each remaining
-    center's 3x3 cell neighborhood, window-top-k, keep centers with
-    ≥ k candidates and their kth distance d_k (an upper bound);
-    remaining centers coarsen. All DataFrame ops; the loop condition
-    is one count() per level. START FINE (z16): on skewed data a
-    coarse start hands every dense-city center a 10^5-row
-    neighborhood to sort for k=10 (measured 165s for 2k centers over
-    12M points at z12 vs seconds at z16); centers in sparse areas
-    escalate, and each escalation reprocesses only the missers.
-
-    phase 2: radius_join_df with PER-CENTER radius d_k, then window
-    top-k by exact haversine (ties -> id_col).
+    DATAFRAME of query centers, as a guaranteed-exact two-phase plan:
+    the candidates within each center's d_k bound
+    (:func:`_knn_candidates`, no zoom rounds), then window top-k by
+    exact haversine (ties -> id_col).
     """
-    from geospark.cells import with_linear_cell_at_zoom
-
-    spark = points.sparkSession
-    eps = 1e-6
-    remaining = centers.select(
-        F.col(q_id).alias("query_id"),
-        F.col(q_lat).alias("c_lat"),
-        F.col(q_lng).alias("c_lng"),
-    )
-    from geospark.spool import spool
-
-    remaining = spool(remaining, "knn_centers")
-    dk_parts: list[DataFrame] = []
-    z = start_zoom
-    def _neigh_udf(_z: int):
-        @pandas_udf("array<long>")
-        def _neigh(clat: pd.Series, clng: pd.Series) -> pd.Series:
-            return neighbor_cells_series(
-                clat.to_numpy(np.float64), clng.to_numpy(np.float64), _z
-            )
-
-        return _neigh
-
-    while z >= 0:
-        _neigh = _neigh_udf(z)
-        cov = remaining.select(
-            "query_id", "c_lat", "c_lng",
-            F.explode(_neigh(F.col("c_lat"), F.col("c_lng"))).alias("_q_cell"),
-        )
-        cand = (
-            with_linear_cell_at_zoom(points, z, lat, lng, "_c")
-            .join(cov, F.col("_c") == F.col("_q_cell"))
-            .withColumn("dist_m", K.distance(F.col("c_lat"), F.col("c_lng"),
-                                             F.col(lat), F.col(lng)))
-        )
-        w = Window.partitionBy("query_id").orderBy("dist_m", id_col)
-        summary = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .groupBy("query_id")
-            .agg(F.count("*").alias("_n"), F.max("dist_m").alias("_dk"))
-        )
-        summary = spool(summary, "knn_summary")
-        sat = summary.filter(F.col("_n") >= k).select(
-            "query_id", (F.col("_dk") * (1.0 + 1e-9) + eps).alias("knn_radius")
-        )
-        dk_parts.append(spool(sat, "knn_sat"))
-        remaining = spool(
-            remaining.join(sat, "query_id", "left_anti"), "knn_remaining"
-        )
-        if remaining.limit(1).count() == 0:
-            break
-        z -= 4  # coarsen 16x per miss: phase 2 prunes with per-center
-        #         radii, so a loose d_k costs less than extra rounds
-    dk_all = None
-    for p in dk_parts:
-        dk_all = p if dk_all is None else dk_all.unionByName(p)
-
-    base = centers.select(
-        F.col(q_id).alias("query_id"),
-        F.col(q_lat).alias("q_lat"),
-        F.col(q_lng).alias("q_lng"),
-    )
     w = Window.partitionBy("query_id").orderBy("dist_m", id_col)
-    results = []
-
-    if dk_all is not None:
-        # cover zoom from the actual max d_k (one scalar aggregate) —
-        # covers stay proportional to each center's own radius
-        max_dk = dk_all.agg(F.max("knn_radius")).collect()[0][0]
-        if max_dk is not None:
-            centers_dk = base.join(dk_all, "query_id")
-            results.append(radius_join_df(
-                points, centers_dk, max_m=float(max_dk),
-                radius_col="knn_radius", lat=lat, lng=lng,
-            ))
-
-    if remaining.limit(1).count() > 0:
-        # centers with < k points even at z=0: brute-force the few
-        # stragglers (cross join against a tiny center set)
-        lcent = remaining.select(
-            "query_id", F.col("c_lat").alias("q_lat"),
-            F.col("c_lng").alias("q_lng"),
-        )
-        brute = points.crossJoin(F.broadcast(lcent)).withColumn(
-            "dist_m",
-            K.distance(F.col("q_lat"), F.col("q_lng"), F.col(lat), F.col(lng)),
-        ).drop("q_lat", "q_lng")
-        results.append(brute)
-
-    if not results:  # empty centers -> empty result, stable schema
-        return (
-            points.withColumn("query_id", F.lit(None).cast("long"))
-            .withColumn("dist_m", F.lit(None).cast("double"))
-            .limit(0)
-        )
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
     return (
-        out.withColumn("_rn", F.row_number().over(w))
+        _knn_candidates(points, centers, k, lat, lng, q_id, q_lat, q_lng)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
@@ -794,125 +743,25 @@ def nearest_join_df(points: DataFrame, centers: DataFrame,
                     lat: str = "lat", lng: str = "lng",
                     id_col: str = "point_id",
                     q_id: str = "query_id", q_lat: str = "q_lat",
-                    q_lng: str = "q_lng",
-                    start_zoom: int = 8) -> DataFrame:
-    """Nearest-neighbor join (kNN k=1) with ZERO windows — every pass
-    is a partial-aggregatable min, so no exchange ever carries the raw
-    candidate relation (each map task ships one minimum per center it
-    saw). :func:`knn_join_df` with k=1 is semantically identical but
-    pays two row_number windows over the candidate relation (the
-    general-k top-k needs them); at 12M points x 450k places the
-    window sorts dominated its wall (137.8s vs this path — BENCH.md).
+                    q_lng: str = "q_lng") -> DataFrame:
+    """Nearest-neighbor join (kNN k=1) with ZERO windows — the final
+    argmin is a partial-aggregatable min, so no exchange carries the
+    raw candidate relation (each map task ships one minimum per center
+    it saw). :func:`knn_join_df` with k=1 is semantically identical but
+    pays a row_number window over the candidate relation (the
+    general-k top-k needs it); at 12M points x 450k places the window
+    sort dominated its wall (137.8s vs this path — BENCH.md).
 
-    phase 1 (d_1 upper bound): per zoom (start_zoom, -4, ... 0), join
-    each remaining center's 3x3 cell neighborhood and take
-    min(dist) per center — centers with >=1 candidate are satisfied,
-    the rest coarsen. phase 2: radius_join_df with per-center radius
-    d_1(1+1e-9)+eps, then the final exact argmin as min(struct(dist,
-    id)) — ties resolve to the lowest ``id_col``, matching
-    knn_join_df's (dist, id) window order exactly.
+    Same k=1 candidates (:func:`_knn_candidates`), then the exact
+    argmin as min(struct(dist, id)) — ties resolve to the lowest
+    ``id_col``, matching knn_join_df's (dist, id) window order exactly.
 
     Returns (query_id, id_col, dist_m)."""
-    from geospark.cells import with_linear_cell_at_zoom
-    from geospark.spool import spool
-
-    eps = 1e-6
-    remaining = spool(
-        centers.select(
-            F.col(q_id).alias("query_id"),
-            F.col(q_lat).alias("c_lat"),
-            F.col(q_lng).alias("c_lng"),
-        ),
-        "nn_centers",
-    )
-
-    def _neigh_udf(_z: int):
-        @pandas_udf("array<long>")
-        def _neigh(clat: pd.Series, clng: pd.Series) -> pd.Series:
-            return neighbor_cells_series(
-                clat.to_numpy(np.float64), clng.to_numpy(np.float64), _z
-            )
-
-        return _neigh
-
-    d1_parts: list[DataFrame] = []
-    z = start_zoom
-    while z >= 0:
-        _neigh = _neigh_udf(z)
-        cov = remaining.select(
-            "query_id", "c_lat", "c_lng",
-            F.explode(_neigh(F.col("c_lat"), F.col("c_lng"))).alias("_q_cell"),
-        )
-        cand = (
-            with_linear_cell_at_zoom(points, z, lat, lng, "_c")
-            .join(cov, F.col("_c") == F.col("_q_cell"))
-        )
-        sat = (
-            cand.groupBy("query_id")
-            .agg(F.min(K.distance(F.col("c_lat"), F.col("c_lng"),
-                                  F.col(lat), F.col(lng))).alias("_d1"))
-            .select(
-                "query_id",
-                (F.col("_d1") * (1.0 + 1e-9) + eps).alias("nn_radius"),
-            )
-        )
-        sat = spool(sat, "nn_sat")
-        d1_parts.append(sat)
-        remaining = spool(
-            remaining.join(sat, "query_id", "left_anti"), "nn_remaining"
-        )
-        if remaining.limit(1).count() == 0:
-            break
-        z -= 4
-
-    d1_all = None
-    for p in d1_parts:
-        d1_all = p if d1_all is None else d1_all.unionByName(p)
-
-    base = centers.select(
-        F.col(q_id).alias("query_id"),
-        F.col(q_lat).alias("q_lat"),
-        F.col(q_lng).alias("q_lng"),
-    )
-    parts: list[DataFrame] = []
-    if d1_all is not None:
-        max_d1 = d1_all.agg(F.max("nn_radius")).collect()[0][0]
-        if max_d1 is not None:
-            centers_d1 = base.join(d1_all, "query_id")
-            parts.append(
-                radius_join_df(
-                    points, centers_d1, max_m=float(max_d1),
-                    radius_col="nn_radius", lat=lat, lng=lng,
-                ).select("query_id", F.col(id_col).alias("_id"), "dist_m")
-            )
-    if remaining.limit(1).count() > 0:
-        # centers that saw zero points even at z=0 (empty/near-empty
-        # point set): brute-force the stragglers
-        lcent = remaining.select(
-            "query_id", F.col("c_lat").alias("q_lat"),
-            F.col("c_lng").alias("q_lng"),
-        )
-        parts.append(
-            points.crossJoin(F.broadcast(lcent)).select(
-                "query_id", F.col(id_col).alias("_id"),
-                K.distance(F.col("q_lat"), F.col("q_lng"),
-                           F.col(lat), F.col(lng)).alias("dist_m"),
-            )
-        )
-    if not parts:
-        return (
-            points.select(
-                F.lit(None).cast("long").alias("query_id"),
-                F.col(id_col).alias("_id"),
-                F.lit(None).cast("double").alias("dist_m"),
-            ).limit(0)
-            .withColumnRenamed("_id", id_col)
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    best = out.groupBy("query_id").agg(
-        F.min(F.struct(F.col("dist_m"), F.col("_id"))).alias("_b")
+    best = (
+        _knn_candidates(points, centers, 1, lat, lng, q_id, q_lat, q_lng)
+        .groupBy("query_id")
+        .agg(F.min(F.struct(F.col("dist_m"), F.col(id_col).alias("_id")))
+             .alias("_b"))
     )
     return best.select(
         "query_id",
@@ -931,9 +780,10 @@ def knn_classify(points: DataFrame, centers: DataFrame, k: int,
     neighbors via :func:`knn_join_df`; vote ties break on the
     lexicographically smaller label — deterministic in any engine).
 
-    Plan: the kNN join's aggregate-only escalation finds the |Q|*k
-    neighbor ids; that MODEL-SIZED relation broadcasts back into one
-    hash join against the labeled points (the corpus never shuffles),
+    Plan: the kNN join (a cell-count radius bound per query, a bounded
+    radius join, a top-k window) finds the |Q|*k neighbor ids; that
+    MODEL-SIZED relation broadcasts back into one hash join against the
+    labeled points (the corpus never shuffles),
     votes partial-aggregate per (query, label), and the winner is a
     min-struct argmax on (-votes, label). Returns
     (query_id, label, n_votes).

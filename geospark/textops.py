@@ -1684,8 +1684,8 @@ def bpe_train(docs: DataFrame, n_merges: int = 10,
     word-count shuffle (partial-agg; empty tokens dropped).  Every
     merge round then operates on the VOCAB-sized (word, freq, syms)
     relation — pair counting is one partial-agg shuffle of ~|vocab|
-    rows, the argmax moves exactly ONE row to the driver (the same
-    aggregate-only driver contract as the kNN escalation loop), and
+    rows, the argmax moves exactly ONE row to the driver (an
+    aggregate, never data rows), and
     the merge itself is a codegen'd aggregate() fold over each symbol
     array (no Python).  The per-round relation is spooled so lineage
     stays flat across rounds.

@@ -390,17 +390,33 @@ def main() -> None:
               "one broadcast join, one minima-only shuffle.",
     )
 
-    # reverse geocoding: cell-ring kNN k=1 over the gazetteer — the
+    # reverse geocoding: windowless kNN k=1 over the gazetteer — the
     # attribute rejoin broadcasts, nothing falls back to a cartesian
     audit(
         "reverse_geocode (nearest-place kNN k=1)",
         q["reverse_geocode"](spark, sf_dir),
         must=["BroadcastHashJoin"],
         must_not=["BatchEvalPython", "CartesianProduct"],
-        notes="cell-ring escalation joins each point's 3x3 cell "
-              "neighborhood against the place set; the exact top-1 "
-              "re-rank windows per point over its OWN d_1-bounded "
-              "candidates; gaz attributes rejoin by broadcast.",
+        notes="each point's d_1 bound comes from one spooled count of "
+              "places per cell (z16..z1); the radius join covers each "
+              "point's own bound and the exact argmin is a "
+              "partial-aggregatable min(struct) per point, no window; "
+              "gaz attributes rejoin by broadcast.",
+    )
+
+    # kNN: per-center radius bound, then one radius join + top-k
+    # window — no rounds, so no straggler cross join
+    audit(
+        "knn (Q4 point_rtree::nearest, bounded radius join)",
+        q["knn"](spark, sf_dir),
+        must=["Window"],
+        must_not=["BatchEvalPython", "CartesianProduct"],
+        notes="each center's d_k bound comes from one spooled count of "
+              "points per cell (z16..z1); phase 2 is the radius join "
+              "with that per-center radius (Arrow cover UDF over the "
+              "centers only) and a row_number top-k window per center; "
+              "centers short of k points take a world radius instead "
+              "of a cross join.",
     )
 
     # exact-substring scrubbing: gram window + anti-join + rollup,

@@ -133,7 +133,7 @@ def test_resolve_plan_shape(spark):
 
 
 def test_reverse_geocode_matches_brute_force(spark):
-    """reverse_geocode (cell-ring kNN k=1) vs a plain-python
+    """reverse_geocode (windowless kNN k=1) vs a plain-python
     brute-force nearest-place argmin over the full gazetteer —
     exact gaz_id + floor-meter distance per point, every point
     resolved exactly once."""

@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 from geospark.functions import numpy_kernels as NK
 from geospark.joins import (
@@ -71,7 +73,8 @@ def test_knn_join_darmstadt(spark):
 
 def test_knn_join_df_vs_brute_force(spark):
     """kNN == brute-force top-k by (dist, id), including a center in a
-    sparse area (zoom escalation) and one whose k nearest are far."""
+    sparse area (its bound comes from a coarse cell) and one whose k
+    nearest are far."""
     from pyspark.sql import functions as F
 
     from geospark.functions import kernels as K
@@ -97,8 +100,8 @@ def test_knn_join_df_vs_brute_force(spark):
 def test_nearest_join_df_matches_knn_k1(spark):
     """The windowless k=1 path (partial-agg min-structs) returns
     exactly knn_join_df(k=1)'s nearest point and distance per center,
-    including the escalation case (center in a sparse area) and the
-    brute-force straggler path (tiny point set)."""
+    including a center in a sparse area (coarse-cell bound) and the
+    world-radius fallback (tiny point set)."""
     from geospark.joins import nearest_join_df
 
     rows = [
@@ -121,16 +124,14 @@ def test_nearest_join_df_matches_knn_k1(spark):
     }
     assert via_nn == via_knn and len(via_nn) == 3
 
-    # 2-point set: every center below z=0 coverage hits the
-    # brute-force branch and still gets its true nearest
+    # 2-point set: center 2's z1 cell holds no point, so it takes the
+    # world radius and still gets its true nearest
     tiny = spark.createDataFrame(
         rows[:2], "point_id long, lat double, lng double")
     nn_tiny = {r["query_id"]: r["point_id"]
-               for r in nearest_join_df(tiny, cdf, id_col="point_id",
-                                        start_zoom=4).collect()}
+               for r in nearest_join_df(tiny, cdf, id_col="point_id").collect()}
     knn_tiny = {r["query_id"]: r["point_id"]
-                for r in knn_join_df(tiny, cdf, k=1, id_col="point_id",
-                                     start_zoom=4).collect()}
+                for r in knn_join_df(tiny, cdf, k=1, id_col="point_id").collect()}
     assert nn_tiny == knn_tiny and len(nn_tiny) == 3
 
 
@@ -291,6 +292,38 @@ def test_radius_join_high_latitude_vs_brute(spark):
         ]
     assert got == sorted(brute)
     assert len(got) > 10
+
+
+def test_radius_join_per_center_radius_covers_disk(spark):
+    """With per-center radii the cover zoom follows the median radius,
+    so a large high-latitude disk is covered by cells far smaller than
+    its radius. Points just inside its edge, all around it, must still
+    be found: the cover box must hold the whole disk, as a one-cell pad
+    ring no longer makes up for a box narrower than the disk."""
+    R = NK.EARTH_RADIUS_M
+
+    def dest(lat, lng, brg, d):
+        la, ln, b = np.radians([lat, lng, brg])
+        dd = d / R
+        la2 = np.arcsin(np.sin(la) * np.cos(dd) + np.cos(la) * np.sin(dd) * np.cos(b))
+        ln2 = ln + np.arctan2(np.sin(b) * np.sin(dd) * np.cos(la),
+                              np.cos(dd) - np.sin(la) * np.sin(la2))
+        return float(np.degrees(la2)), float((np.degrees(ln2) + 180) % 360 - 180)
+
+    big = [(1, 75.0, 40.0, 800_000.0), (2, -70.0, -100.0, 1_500_000.0),
+           # its bbox spans 359.2 deg with both ends in one z5 column
+           (3, 55.94, -97.4, 3_175_918.0)]
+    rows = [(q * 1000 + i, *dest(la, ln, brg, r * 0.999))
+            for q, la, ln, r in big
+            for i, brg in enumerate(np.linspace(0.0, 360.0, 180, endpoint=False))]
+    small = [(100 + i, 10.0 + i * 0.001, 10.0, 2000.0) for i in range(50)]
+    pts = spark.createDataFrame(rows, "point_id long, lat double, lng double")
+    centers = spark.createDataFrame(
+        big + small, "query_id long, q_lat double, q_lng double, r double")
+    got = radius_join_df(pts, centers, max_m=float("inf"), radius_col="r")
+    assert {(r["query_id"], r["n"]) for r in
+            got.groupBy("query_id").agg(F.count("*").alias("n")).collect()} \
+        == {(1, 180), (2, 180), (3, 180)}
 
 
 def test_radius_join_antimeridian(spark):
@@ -541,7 +574,7 @@ def test_map_match_antimeridian_probe(spark):
 
 
 def test_knn_durable_spool_backend(spark, tmp_path):
-    """The kNN escalation loop spools per-round summaries; with the
+    """The kNN join spools its per-center radius bound; with the
     reliable (DFS-checkpoint) backend the results must be identical
     to the local default — the backend changes durability, never
     rows."""
@@ -635,6 +668,102 @@ def test_south_edge_row_radius_knn_nearest(spark):
     r = nearest_join_df(pts, centers, id_col="point_id").collect()
     assert [(x["query_id"], x["point_id"]) for x in r] == [(7, 0)]
     assert abs(r[0]["dist_m"] - near) < 1e-6
+
+
+@pytest.mark.parametrize("sign", [1.0, -1.0])
+@pytest.mark.parametrize("center,polar", [
+    ((84.5, 0.5), (89.99, 44.5)),
+    # shares only its z5 cell (lat 83.98..90) with the polar point, so
+    # the bound is the distance to that cell's pole-side corners
+    ((84.0, 5.625), (89.99, 5.625)),
+])
+def test_knn_nearest_polar_edge_row(spark, sign, center, polar):
+    """A center whose nearest point lies beyond the Mercator limit,
+    with a decoy at (0, 0); and the mirror case in the south. The
+    bound's cell box must reach the pole (the clamped edge row), or the
+    polar point falls outside the radius and the decoy wins or nothing
+    is found."""
+    from geospark.joins import nearest_join_df
+
+    (c_lat, c_lng), (p_lat, p_lng) = center, polar
+    pts = spark.createDataFrame(
+        [(1, sign * p_lat, p_lng), (2, 0.0, 0.0)],
+        "point_id long, lat double, lng double")
+    centers = _centers_df(spark, [(5, sign * c_lat, c_lng)])
+    want = float(NK.distance(sign * c_lat, c_lng, sign * p_lat, p_lng))
+    for r in (knn_join_df(pts, centers, k=1).collect(),
+              nearest_join_df(pts, centers, id_col="point_id").collect()):
+        assert [(x["query_id"], x["point_id"]) for x in r] == [(5, 1)]
+        assert abs(r[0]["dist_m"] - want) < 1e-6
+
+
+def test_knn_bound_uses_rounded_row_edges(spark):
+    """Cell rows round the pixel y, so z16 row j spans pixel rows
+    j - 0.5 .. j + 0.5. A center and its nearest point in the same z16
+    cell at opposite ends of that span are farther apart than any two
+    points of the unrounded row [j, j + 1]; a bound taken from the
+    unrounded box leaves the point out of the radius."""
+    from geospark.joins import nearest_join_df
+
+    j, i = 22000, 34000  # a z16 cell, in pixel rows / columns
+
+    def lat_of(v):
+        return float(np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * v / 65536.0)))))
+
+    def lng_of(u):
+        return u * 360.0 / 65536.0 - 180.0
+
+    c_lat, c_lng = lat_of(j + 0.45), lng_of(i + 0.01)
+    p_lat, p_lng = lat_of(j - 0.45), lng_of(i + 0.99)
+    pts = spark.createDataFrame([(1, p_lat, p_lng), (2, 0.0, 0.0)],
+                                "point_id long, lat double, lng double")
+    centers = _centers_df(spark, [(5, c_lat, c_lng)])
+    want = float(NK.distance(c_lat, c_lng, p_lat, p_lng))
+    for r in (knn_join_df(pts, centers, k=1).collect(),
+              nearest_join_df(pts, centers, id_col="point_id").collect()):
+        assert [(x["query_id"], x["point_id"]) for x in r] == [(5, 1)]
+        assert abs(r[0]["dist_m"] - want) < 1e-6
+
+
+def test_knn_world_radius_fallback_among_dense_centers(spark):
+    """A center near the equator whose z1 cell holds no point takes the
+    world radius while dense centers keep the cover zoom fine; its cover
+    must still span every longitude, or it finds nothing."""
+    from geospark.joins import nearest_join_df
+
+    rows = [(i, 49.8 + (i % 20) * 0.001, 8.6 + (i // 20) * 0.001)
+            for i in range(400)]
+    pts = spark.createDataFrame(rows, "point_id long, lat double, lng double")
+    centers = [(q, 49.8 + q * 0.0005, 8.6) for q in range(20)] + [(99, 0.3, -100.0)]
+    lat, lng = np.array([r[1] for r in rows]), np.array([r[2] for r in rows])
+    want = {q: int(np.argmin(NK.distance(c_lat, c_lng, lat, lng)))
+            for q, c_lat, c_lng in centers}
+    cdf = _centers_df(spark, centers)
+    for r in (knn_join_df(pts, cdf, k=1).collect(),
+              nearest_join_df(pts, cdf, id_col="point_id").collect()):
+        assert {x["query_id"]: x["point_id"] for x in r} == want
+
+
+def test_knn_jobs_do_not_depend_on_density(spark, jobs_in):
+    """The kNN bound is one aggregate, not rounds: a dense-city center
+    and a mid-ocean center run the same number of Spark jobs, for both
+    knn_join_df and nearest_join_df."""
+    from geospark.joins import nearest_join_df
+
+    pts = spark.createDataFrame(
+        [(i, 49.8 + (i % 20) * 0.001, 8.6 + (i // 20) * 0.001)
+         for i in range(400)],
+        "point_id long, lat double, lng double")
+    dense = _centers_df(spark, [(1, 49.81, 8.61)])
+    ocean = _centers_df(spark, [(1, -30.0, -140.0)])
+    for join in (lambda c: knn_join_df(pts, c, k=5).collect(),
+                 lambda c: nearest_join_df(pts, c, id_col="point_id").collect()):
+        jobs = []
+        for c in (dense, ocean):
+            rows, n = jobs_in(lambda: join(c))
+            assert rows and n > 0
+            jobs.append(n)
+        assert jobs[0] == jobs[1], jobs
 
 
 def test_linear_cell_clamps_south_row_like_covers(spark):

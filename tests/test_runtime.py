@@ -194,40 +194,15 @@ LINEAGE_DTYPES = [("partition_id", "int"), ("rows", "bigint"),
                   ("wall_ms", "double")]
 
 
-def _jobs_in(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted in a fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    tag = f"t-{uuid.uuid4().hex[:8]}"
-
-    def in_group(group, call):
-        sc.setJobGroup(group, group)
-        try:
-            return call()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-
-    out = in_group(tag, fn)
-    in_group(f"{tag}-mark", lambda: spark.range(1).collect())
-    # job events reach the tracker in order: once the marker job shows,
-    # every job fn ran shows too
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(f"{tag}-mark") and time.time() < deadline:
-        time.sleep(0.05)
-    return out, len(tracker.getJobIdsForGroup(tag))
-
-
-def test_snapshot_write_is_one_job_and_read_none(spark, tmp_path):
+def test_snapshot_write_is_one_job_and_read_none(spark, tmp_path, jobs_in):
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
     df = spark.range(0, 1000, numPartitions=3).withColumn("v", F.col("id") * 2)
-    m, n_write = _jobs_in(spark, lambda: t.write(df, stage="s"))
+    m, n_write = jobs_in(lambda: t.write(df, stage="s"))
     assert n_write == 1
     assert m["rows"] == 1000
     assert len(m["files"]) == 3 and sum(f["rows"] for f in m["files"]) == 1000
     assert all(f["bytes"] > 0 for f in m["files"])
-    schema, n_read = _jobs_in(spark, lambda: t.read().schema)
+    schema, n_read = jobs_in(lambda: t.read().schema)
     assert n_read == 0
     assert schema.simpleString() == "struct<id:bigint,v:bigint>"
     assert t.read().count() == 1000
@@ -314,12 +289,12 @@ def test_snapshot_commit_parses_at_most_one_manifest(spark, tmp_path, monkeypatc
     assert sorted(os.listdir(d))[-1] == f"000050-{m['snapshot_id']}.json"
 
 
-def test_pipeline_lineage_one_row_per_part_file(spark, tmp_path):
+def test_pipeline_lineage_one_row_per_part_file(spark, tmp_path, jobs_in):
     root = str(tmp_path / "pipe")
     p = Pipeline(spark, root, run_id="r1")
     stages = [Stage("double", lambda df: df.withColumn("v", F.col("id") * 2)),
               Stage("empty", lambda df: df.filter(F.col("id") < 0))]
-    out, n_jobs = _jobs_in(spark, lambda: p.run(spark.range(0, 50, numPartitions=3),
+    out, n_jobs = jobs_in(lambda: p.run(spark.range(0, 50, numPartitions=3),
                                                 stages))
     # the source commit and the two (map-only) stage writes; lineage and
     # the read-backs run no job
