@@ -1,8 +1,9 @@
 """Pluggable spool — the engine's materialization primitive.
 
 The iterative plans (cluster contraction, BPE merge rounds), the kNN
-radius bound and the minhash shingle relation need to cut lineage and
-pin an intermediate result.
+radius bound and the minhash per-document relation (shingle set plus
+signature, read by both the LSH join and the Jaccard refine) need to
+cut lineage and pin an intermediate result.
 ``localCheckpoint`` is the fast local-mode path, but it stores blocks
 on executor-local storage with no lineage: on a real cluster, losing
 one executor mid-query kills the job. The spool backend is therefore

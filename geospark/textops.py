@@ -11,7 +11,13 @@ Scale notes (the designs assume 10^12 docs):
   loops, no collects;
 - MinHash/SimHash hash with the engine-neutral 60-bit md5 integer
   (one codegen'd expression; identical in DuckDB, so every signature
-  is exactly oracle-checkable) — one scan + one shuffle per signature;
+  is exactly oracle-checkable);
+- MinHash near-dup is one scan + one shuffle up to the candidates:
+  codegen'd shingle rows feed ONE groupBy(doc_id) that builds each
+  document's shingle set and its signature together, spooled once for
+  both the LSH join and the Jaccard refine (no corpus-wide distinct of
+  shingle rows); the permutations run in exact double arithmetic, not
+  ANSI-checked long math;
 - the exact-Jaccard verify only runs on LSH candidate pairs (the
   classic filter-refine shape, same as the spatial joins);
 - banding keys are (band_id, band_signature) so hot buckets spread
@@ -45,8 +51,11 @@ def md5_60_sql(col: str) -> str:
 def hash60_sql(col: str, hash_fn: str = "md5") -> str:
     """Token/shingle hash used by the dedup family. ``md5`` (default)
     is engine-neutral (DuckDB-oracle-checkable); ``xxhash64`` is the
-    production fast path at 100 TB (~4x cheaper per row, Spark-only —
-    positive 60-bit range kept so downstream banding is identical)."""
+    production fast path at 100 TB, Spark-only — positive 60-bit range
+    kept so downstream banding is identical. On 190k shingle rows (4
+    cores, the benchmark's C1 JIT) md5 took 1.3 CPU s and xxhash64
+    0.26 s; md5 stays the default because the MinHash pairs, and so
+    their DuckDB oracles, depend on it."""
     if hash_fn == "md5":
         return md5_60_sql(col)
     if hash_fn == "xxhash64":
@@ -77,34 +86,32 @@ def tokens(docs: DataFrame, text_col: str = "text",
     ).filter(F.col("token") != "")
 
 
+def _shingle_rows(docs: DataFrame, n: int, text_col: str,
+                  id_col: str) -> DataFrame:
+    """(doc_id, shingle) for every word n-gram position, repeats kept.
+
+    One codegen'd ``explode(sequence(0, size(_t) - n))`` over the staged
+    token array, then n O(1) index accesses per position — no lambda
+    (a ``transform`` lambda is interpreted, not codegen'd). Docs with
+    fewer than n tokens, and null text, give no rows; the size filter
+    also keeps ``sequence()`` from running backwards."""
+    parts = ", ".join(f"_t[_i + {j}]" for j in range(n))
+    return (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.expr(f"split({text_col}, '\\\\s+')").alias("_t"),
+        )
+        .filter(F.size("_t") >= n)
+        .select("doc_id", "_t",
+                F.explode(F.expr(f"sequence(0, size(_t) - {n})")).alias("_i"))
+        .select("doc_id", F.expr(f"concat_ws(' ', {parts})").alias("shingle"))
+    )
+
+
 def shingles(docs: DataFrame, n: int = 3, text_col: str = "text",
              id_col: str = "doc_id") -> DataFrame:
-    """Distinct word n-gram shingles per doc: (doc_id, shingle).
-
-    Shingle i concatenates n O(1) index accesses — ``slice(toks, i,
-    n)`` inside the transform is O(tokens) per position, i.e. a
-    quadratic scan per document (measured 4x the whole minhash
-    pipeline at 500-token docs)."""
-    parts = ", ".join(f"_t[i + {j}]" for j in range(n))
-    # stage the token array once (inlining the split text per element
-    # access would re-evaluate it); CASE guards docs shorter than n
-    # tokens (sequence() runs backwards when stop < start); [] is
-    # 0-based
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.expr(f"split({text_col}, '\\\\s+')").alias("_t"),
-    )
-    return base.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(_t) >= {n} THEN "
-                f"transform(sequence(0, size(_t) - {n}), "
-                f"i -> concat_ws(' ', {parts})) "
-                f"ELSE CAST(array() AS array<string>) END"
-            )
-        ).alias("shingle"),
-    ).distinct()
+    """Distinct word n-gram shingles per doc: (doc_id, shingle)."""
+    return _shingle_rows(docs, n, text_col, id_col).distinct()
 
 
 def shingle_arrays(docs: DataFrame, n: int, text_col: str = "text",
@@ -517,20 +524,43 @@ def jaccard_pairs(docs: DataFrame, threshold: float, n: int = 3,
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup — the scale path
 # ---------------------------------------------------------------------------
+def _perm_sql(x: str, a: int, b: int) -> str:
+    """Spark SQL text of the minhash permutation ``(a*x + b) mod HASH_P``
+    for an integer-valued ``x`` in [0, HASH_P), without ANSI-checked
+    long arithmetic (``multiplyExact``/``addExact``: 16 minima over
+    190k shingle rows took 0.94 CPU s that way, 0.53 s this way, on 4
+    cores under the benchmark's C1 JIT). ``a = a1*2^16 + a0`` with
+    a1 < 2^15, so ``a1*x`` < 2^46, ``(a1*x mod P)*2^16 + a0*x + b``
+    < 2^49, and every intermediate is an integer below 2^53: exact in
+    doubles. The two reductions are a double->bigint cast and a long
+    ``%``; all terms are non-negative, so ``%`` is ``pmod``."""
+    a1, a0 = divmod(a, 1 << 16)
+    hi = f"CAST({a1}D * {x} AS BIGINT) % {HASH_P}"
+    return (f"CAST(CAST({hi} AS DOUBLE) * 65536D + {a0}D * {x} + {b}D "
+            f"AS BIGINT) % {HASH_P}")
+
+
+def _minhash_groups(sh: DataFrame, k: int, hash_fn: str,
+                    *extra) -> DataFrame:
+    """(doc_id, mh_0..mh_{k-1}, *extra) from a (doc_id, shingle)
+    relation: ONE groupBy computing the k permuted-hash minima and any
+    ``extra`` aggregates. Every minhash entry point goes through here,
+    so all compute identical signatures. Repeated rows do not change a
+    minimum, so ``sh`` need not be distinct."""
+    hx = sh.withColumn(
+        "_x",
+        F.expr(f"CAST(pmod({hash60_sql('shingle', hash_fn)}, {HASH_P}) AS DOUBLE)"),
+    )
+    mins = [F.min(F.expr(_perm_sql("_x", *minhash_perm_params(i)))).alias(f"mh_{i}")
+            for i in range(k)]
+    return hx.groupBy("doc_id").agg(*mins, *extra)
+
+
 def minhash_signatures_from_shingles(sh: DataFrame, k: int = 16,
                                      hash_fn: str = "md5") -> DataFrame:
     """(doc_id, mh_0..mh_{k-1}) from a prepared (doc_id, shingle)
     relation: k permuted-hash minima in one groupBy."""
-    hx = sh.withColumn(
-        "_x", F.expr(f"pmod({hash60_sql('shingle', hash_fn)}, {HASH_P})")
-    )
-    aggs = []
-    for i in range(k):
-        a, b = minhash_perm_params(i)
-        aggs.append(
-            F.min(F.expr(f"pmod({a} * _x + {b}, {HASH_P})")).alias(f"mh_{i}")
-        )
-    return hx.groupBy("doc_id").agg(*aggs)
+    return _minhash_groups(sh, k, hash_fn)
 
 
 def minhash_signatures(docs: DataFrame, k: int = 16, n: int = 3,
@@ -539,7 +569,7 @@ def minhash_signatures(docs: DataFrame, k: int = 16, n: int = 3,
     """(doc_id, mh_0..mh_{k-1}): k minhashes of the shingle set.
     One scan + one shuffle (the groupBy)."""
     return minhash_signatures_from_shingles(
-        shingles(docs, n, text_col, id_col), k, hash_fn
+        _shingle_rows(docs, n, text_col, id_col), k, hash_fn
     )
 
 
@@ -575,35 +605,35 @@ def minhash_neardup_pairs(docs: DataFrame, threshold: float, k: int = 16,
                           hash_fn: str = "md5") -> DataFrame:
     """LSH candidates -> exact-Jaccard refine (filter-refine, like the
     spatial joins: cheap bucket equi-join, exact verify only on
-    candidates). The shingle set is materialized once — it feeds the
-    signatures AND the exact-Jaccard refine.
+    candidates).
 
-    Refine plan: per-doc shingle ARRAYS (one groupBy of the shingle
-    relation -> n_docs rows), candidates join that table twice on
-    doc_id, and the exact set intersection runs JVM-side via
-    ``array_intersect``. Measured at 5M docs/1.2M candidates: the
-    previous row-level refine (two joins against the 190M-row shingle
-    relation on string keys) was ~425s; the array refine joins 5M-row
-    tables instead. Arrays are bounded by document length — for
-    giant-document corpora cap with a length guard upstream."""
-    sh = spool(shingles(docs, n, text_col, id_col), "shingles")
-    cand = lsh_candidates(
-        minhash_signatures_from_shingles(sh, k, hash_fn), k, bands
+    The codegen'd shingle rows (repeats kept) go through ONE
+    ``groupBy(doc_id)`` computing the shingle set (``collect_set``)
+    and the k minima together; that n_docs-row relation is spooled
+    once and feeds both the banded candidate join and the refine,
+    which joins it twice on doc_id and intersects the sets JVM-side
+    (``array_intersect``) — no corpus-wide ``distinct()`` of shingle
+    rows. At 5M docs/1.2M candidates a row-level refine (two joins
+    against the 190M-row shingle relation on string keys) took
+    ~425 s. Sets are bounded by document length — for giant-document
+    corpora cap with a length guard upstream. A doc_id on several
+    rows gets the union of their shingles; a null doc_id never
+    pairs."""
+    per_doc = spool(
+        _minhash_groups(_shingle_rows(docs, n, text_col, id_col), k, hash_fn,
+                        F.collect_set("shingle").alias("_sh")),
+        "minhash_docs",
     )
-    sets = sh.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("_sh"), F.count("*").alias("n_sh")
-    )
+    cand = lsh_candidates(per_doc, k, bands)
+
+    def side(s: str) -> DataFrame:
+        return per_doc.select(F.col("doc_id").alias(f"doc_id_{s}"),
+                              F.col("_sh").alias(f"_s{s}"),
+                              F.size("_sh").alias(f"n_{s}"))
+
     return (
-        cand.join(
-            sets.select(F.col("doc_id").alias("doc_id_a"),
-                        F.col("_sh").alias("_sa"), F.col("n_sh").alias("n_a")),
-            "doc_id_a",
-        )
-        .join(
-            sets.select(F.col("doc_id").alias("doc_id_b"),
-                        F.col("_sh").alias("_sb"), F.col("n_sh").alias("n_b")),
-            "doc_id_b",
-        )
+        cand.join(side("a"), "doc_id_a")
+        .join(side("b"), "doc_id_b")
         .withColumn("n_inter", F.size(F.array_intersect("_sa", "_sb")))
         .withColumn(
             "jaccard",

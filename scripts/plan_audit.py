@@ -314,6 +314,22 @@ def main() -> None:
               "test table; real many-split corpora skip it.)",
     )
 
+    # shingles: the generator behind every MinHash entry point — a
+    # codegen'd explode of token positions, no interpreted lambda
+    from geospark.textops import shingles
+
+    audit(
+        "doc_shingles (word n-gram shingles for MinHash)",
+        shingles(spark.read.parquet(f"{sf_dir}/documents.parquet")),
+        must=["explode(", "* Generate"],
+        must_not=["lambdafunction", "BatchEvalPython", "ArrowEvalPython"],
+        notes="split once, explode sequence(0, size - n) inside the "
+              "scan's codegen stage, and concat_ws over n indexed "
+              "tokens; no transform lambda (interpreted per element). "
+              "minhash_neardup_pairs feeds the same rows, without the "
+              "distinct, into its one per-document groupBy.",
+    )
+
     # tf-idf: tf/df aggregations shuffle, corpus size N arrives via a
     # broadcast 1-row relation (never a driver-side collect)
     audit(

@@ -244,6 +244,85 @@ def test_cluster_small_groups_short_circuit():
     assert out[0] == out[1]
 
 
+# --- complete-linkage references: the O(n²) kernel is checked against these
+def complete_linkage_scalar(lats32: np.ndarray, lngs32: np.ndarray, max_dist: float) -> np.ndarray:
+    """(src/cluster_nearby.cc:109-172) literal scalar replication,
+    including the quirk that the 'find nearest' scan keeps the LAST
+    qualifying pair (it never updates min_dist in the comparison;
+    condition is distance >= 0 && distance <= max_dist). Kept as the
+    oracle for the vectorized versions."""
+    n = lats32.size
+    if n == 0:
+        raise ValueError("make_complete_linkage_clusters: empty coords")
+    clusters = np.arange(n, dtype=np.uint32)
+    max_dist = np.float32(max_dist)
+    lowest = np.float32(np.finfo(np.float32).min)
+    while np.any(clusters != clusters[0]):
+        distances = np.full((n, n), lowest, dtype=np.float32)
+        for i in range(n):
+            for j in range(i):
+                ci, cj = clusters[i], clusters[j]
+                if ci == cj:
+                    continue
+                d = nk.gc_distance_f(lats32[i], lngs32[i], lats32[j], lngs32[j])
+                if d > distances[ci, cj]:
+                    distances[ci, cj] = d
+        min_dist = np.float32(np.finfo(np.float32).max)
+        best_i = best_j = 0
+        found = False
+        for i in range(n):
+            for j in range(i):
+                d = distances[i, j]
+                if d >= 0 and d <= max_dist:
+                    min_dist = d
+                    best_i, best_j = i, j
+                    found = True
+        if not found:
+            break
+        ci, cj = clusters[best_i], clusters[best_j]
+        clusters[clusters == ci] = cj
+    return clusters
+
+
+def complete_linkage_per_round(lats32: np.ndarray, lngs32: np.ndarray, max_dist: float) -> np.ndarray:
+    """Vectorized twin of the scalar version (identical output, tested
+    pairwise): pairwise float32 distances precomputed once (they are a
+    pure function of the coords; the reference recomputes them every
+    round), per-round cluster-pair maxima via np.maximum.at with the
+    same (clusters[i], clusters[j]) i>j indexing — including the quirk
+    that pairs whose ordered cluster ids land in the upper triangle
+    are invisible to the scan — and the 'LAST qualifying lower-triangle
+    entry in row-major order' selection via max flat index.
+
+    O(n² per round) = O(n³) total — kept as the mid-level oracle for
+    :func:`nk.make_complete_linkage_clusters` (the O(n²) incremental
+    version), itself oracled by the literal scalar port above."""
+    n = int(lats32.size)
+    if n == 0:
+        raise ValueError("make_complete_linkage_clusters: empty coords")
+    clusters = np.arange(n, dtype=np.uint32)
+    max_dist = np.float32(max_dist)
+    lowest = np.float32(np.finfo(np.float32).min)
+    iu, ju = np.tril_indices(n, k=-1)  # pairs (i, j), j < i — loop order
+    d_pairs = nk.gc_distance_f(lats32[iu], lngs32[iu], lats32[ju], lngs32[ju]).astype(np.float32)
+    rows = np.repeat(np.arange(n), n).reshape(n, n)
+    tri_mask = rows > rows.T  # lower-triangle scan mask: [i, j] iff i > j
+    while np.any(clusters != clusters[0]):
+        ci = clusters[iu].astype(np.int64)
+        cj = clusters[ju].astype(np.int64)
+        keep = ci != cj
+        distances = np.full((n, n), lowest, dtype=np.float32)
+        np.maximum.at(distances, (ci[keep], cj[keep]), d_pairs[keep])
+        qual = tri_mask & (distances >= 0) & (distances <= max_dist)
+        flat = np.flatnonzero(qual.ravel())
+        if flat.size == 0:
+            break
+        last = int(flat[-1])
+        bi, bj = last // n, last % n
+        clusters[clusters == np.uint32(bi)] = np.uint32(bj)
+    return clusters
+
+
 def test_complete_linkage_three_way_parity():
     """scalar port (reference-literal) == per-round vectorized ==
     O(n²) incremental, across random components of size 2..40 at
@@ -260,8 +339,8 @@ def test_complete_linkage_three_way_parity():
         la = (lat0 + r * np.cos(th) / 111000.0).astype(np.float32)
         ln = (lng0 + r * np.sin(th)
               / (111200.0 * np.cos(np.radians(lat0)))).astype(np.float32)
-        a = nk.make_complete_linkage_clusters_scalar(la, ln, T)
-        b = nk.make_complete_linkage_clusters_per_round(la, ln, T)
+        a = complete_linkage_scalar(la, ln, T)
+        b = complete_linkage_per_round(la, ln, T)
         c = nk.make_complete_linkage_clusters(la, ln, T)
         assert (a == b).all(), (case, n, a, b)
         assert (b == c).all(), (case, n, b, c)
@@ -276,7 +355,7 @@ def test_complete_linkage_incremental_matches_per_round_large():
     la = (48.1 + rng.uniform(-0.004, 0.004, n)).astype(np.float32)
     ln = (11.5 + rng.uniform(-0.006, 0.006, n)).astype(np.float32)
     T = 120.0
-    b = nk.make_complete_linkage_clusters_per_round(la, ln, T)
+    b = complete_linkage_per_round(la, ln, T)
     c = nk.make_complete_linkage_clusters(la, ln, T)
     assert (b == c).all()
 

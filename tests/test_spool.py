@@ -73,8 +73,9 @@ def test_spool_table_backend(spark, tmp_path):
 
 
 def test_reliable_spool_runs_cluster_and_minhash(spark, tmp_path):
-    """The iterative operators (cluster contraction, minhash shingle
-    spool) produce identical results through the reliable backend —
+    """The iterative operators (cluster contraction, the minhash
+    per-document spool) produce identical results through the reliable
+    backend —
     the backend swap is transparent to every spool() call site."""
     from pyspark.sql import functions as F
 

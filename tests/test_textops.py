@@ -71,6 +71,123 @@ def test_minhash_lsh_finds_near_dups(spark):
         assert exact[pair] == j
 
 
+def _ref_minhash_neardup_pairs(rows, threshold, k=16, bands=4, n=3):
+    """Pure-Python minhash_neardup_pairs: md5_60 shingle hashes, the
+    (a*x + b) % P permutations, `bands` bands of comma-joined minima,
+    exact Jaccard on every candidate, rounded half-up to 6 places."""
+    import hashlib
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sets: dict = {}
+    for doc_id, text in rows:
+        if doc_id is None:
+            continue
+        toks = re.split(r"\s+", text) if text is not None else []
+        sets.setdefault(doc_id, set()).update(
+            " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1))
+    sets = {d: s for d, s in sets.items() if s}
+    perms = [T.minhash_perm_params(i) for i in range(k)]
+    r = k // bands
+    buckets: dict = {}
+    for d, s in sets.items():
+        xs = [int(hashlib.md5(sh.encode()).hexdigest()[:15], 16) % T.HASH_P
+              for sh in s]
+        mh = [min((a * x + b) % T.HASH_P for x in xs) for a, b in perms]
+        for band in range(bands):
+            sig = ",".join(map(str, mh[band * r:(band + 1) * r]))
+            buckets.setdefault((band, sig), []).append(d)
+    cand = {(a, b) for ids in buckets.values() for a in ids for b in ids if a < b}
+    out = []
+    for a, b in cand:
+        inter = len(sets[a] & sets[b])
+        j = inter / (len(sets[a]) + len(sets[b]) - inter)
+        if j >= threshold:
+            out.append((a, b, float(Decimal(repr(j)).quantize(
+                Decimal("1e-6"), rounding=ROUND_HALF_UP))))
+    return sorted(out)
+
+
+def test_minhash_neardup_pairs_matches_python_reference(spark):
+    """Exact pair-for-pair agreement with a pure-Python reference, over
+    text edge cases and seeded near-duplicates (both LSH hits and
+    misses)."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    base = [[rng.choice(vocab) for _ in range(rng.randint(8, 30))] for _ in range(12)]
+    rows = list(DOCS) + [
+        (10, None),                                           # null text
+        (11, ""),                                             # empty text
+        (12, "a b"),                                          # < n tokens
+        (13, "  the quick\tbrown fox\njumps over   the lazy dog "),
+        (14, "the quick brown fox jumps over the lazy dog\n"),
+        (15, "the quick brown fox jumps"),                    # doc_id on two
+        (15, "over the lazy cat"),                            # rows: union
+        (None, "the quick brown fox jumps over the lazy dog"),
+        (16, "a b c a b c a b c a b c"),                      # repeats
+        (17, "a b c a b c d"),
+    ]
+    for i, toks in enumerate(base):
+        rows.append((100 + 2 * i, " ".join(toks)))
+        edit = list(toks)
+        for _ in range(rng.randint(0, 4)):
+            edit[rng.randrange(len(edit))] = rng.choice(vocab)
+        rows.append((101 + 2 * i, " ".join(edit)))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for threshold in (0.0, 0.5):
+        got = sorted(tuple(r) for r in
+                     T.minhash_neardup_pairs(df, threshold=threshold).collect())
+        want = _ref_minhash_neardup_pairs(rows, threshold)
+        assert got == want, threshold
+    assert len(want) > 10  # the planted pairs collide
+
+
+def test_perm_sql_matches_integer_arithmetic(spark):
+    """The double-split permutation is exactly (a*x + b) % P for all 16
+    (a, b) pairs, at the edges of the 2^16 split and of [0, P)."""
+    import random
+
+    P = T.HASH_P
+    rng = random.Random(11)
+    xs = [0, 1, 2**16 - 1, 2**16, 2**30, P - 2, P - 1]
+    xs += [rng.randrange(P) for _ in range(10_000)]
+    perms = [T.minhash_perm_params(i) for i in range(16)]
+    df = spark.createDataFrame([(float(x),) for x in xs], "x double")
+    got = df.select(
+        "x", *[F.expr(T._perm_sql("x", a, b)).alias(f"p{i}")
+               for i, (a, b) in enumerate(perms)]
+    )
+    assert all(f.dataType.typeName() == "long" for f in got.schema.fields[1:])
+    for r in got.collect():
+        x = int(r["x"])
+        assert [r[f"p{i}"] for i in range(16)] == [(a * x + b) % P for a, b in perms], x
+
+
+def test_minhash_neardup_jobs_do_not_grow_with_corpus(spark, jobs_in, tmp_path):
+    """One spooled per-document relation: the job count is fixed by the
+    plan, not by the number of documents or shingles. Input is parquet,
+    as in the benchmark (a Python-list DataFrame has no size estimate,
+    so AQE would re-plan its joins at runtime)."""
+    import random
+
+    rng = random.Random(3)
+    vocab = [f"w{i}" for i in range(500)]
+    big = [(i, " ".join(rng.choice(vocab) for _ in range(rng.randint(5, 40))))
+           for i in range(1_950)]
+    big += [(1_950 + i, big[i][1]) for i in range(50)]  # planted exact dups
+    counts = []
+    for i, rows in enumerate((DOCS, big)):
+        path = str(tmp_path / f"docs{i}")
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+        df = spark.read.parquet(path)
+        out, jobs = jobs_in(lambda: T.minhash_neardup_pairs(df, threshold=0.5).collect())
+        assert out
+        counts.append(jobs)
+    assert counts[0] == counts[1] <= 7, counts
+
+
 def test_simhash_properties(spark):
     sig = {r["doc_id"]: r["simhash"] for r in T.simhash(_docs_df(spark)).collect()}
     assert sig[0] == sig[1]  # identical text -> identical signature
