@@ -87,11 +87,24 @@ def emit(rec: dict, sink: Path) -> None:
         f.write(line + "\n")
 
 
+def codegen_totals(spark) -> tuple[int, float]:
+    """(classes compiled, compile seconds) since this JVM started, from
+    Spark's own codegen counters. They are JVM-wide: in local mode they
+    count executor compiles too, and ops in other threads as well."""
+    jvm = spark._jvm
+    return (jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount(),
+            jvm.org.apache.spark.sql.catalyst.expressions.codegen
+            .CodeGenerator.compileTime() / 1e9)
+
+
 def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
               ctx: dict | None = None, sink: Path = RUNS) -> list[dict]:
     """Build ``suite``'s input once, then run ``passes`` passes over its
-    selected ops and emit one record per op with its min wall. An op
-    that raises is recorded with its ``error`` and the loop goes on."""
+    selected ops and emit one record per op with its min wall and the
+    classes its last pass compiled (``codegen_compiles``,
+    ``codegen_compile_s``). An op that raises is recorded with its
+    ``error`` and the loop goes on."""
     build, ops = SUITES[suite]
     ops = [(name, fn) for name, fn in ops if not only or name in only]
     if not ops:
@@ -99,7 +112,7 @@ def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
     ctx = ctx or run_context()
     inp = build(spark, scale)
     walls = {name: [] for name, _ in ops}
-    extras, errors, records = {}, {}, []
+    extras, errors, codegen, records = {}, {}, {}, []
     for p in range(passes):
         for name, fn in ops:
             if name not in errors:
@@ -110,6 +123,7 @@ def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
                 # isolated)
                 gc.collect()
                 spark._jvm.System.gc()
+                n0, s0 = codegen_totals(spark)
                 t0 = time.time()
                 try:
                     out = fn(inp)
@@ -120,13 +134,17 @@ def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
                           file=sys.stderr, flush=True)
                 except Exception:
                     errors[name] = traceback.format_exc()
+                n1, s1 = codegen_totals(spark)
+                codegen[name] = {"codegen_compiles": n1 - n0,
+                                 "codegen_compile_s": round(s1 - s0, 3)}
             if p < passes - 1:
                 continue
             extra = extras.get(name, {})
             rec = {**ctx, "suite": suite, "op": name,
                    "input_rows": extra.pop("input_rows", inp["n"]),
                    "rows_out": extra.pop("rows_out", None),
-                   "wall_s": min(walls[name], default=None), **extra}
+                   "wall_s": min(walls[name], default=None),
+                   **codegen[name], **extra}
             if passes > 1:
                 rec["passes_s"] = walls[name]
             if name in errors:

@@ -645,6 +645,29 @@ def radius_join_df(points: DataFrame, centers: DataFrame, max_m: float,
     )
 
 
+_Z16_TOP = (1 << 16) - 1
+
+
+def _cell_ancestors(df: DataFrame, la: str, ln: str, *keep: str) -> DataFrame:
+    """``keep`` plus each row's z16 pixel ``(_px, _py)`` and one
+    ``(_z, _x, _y)`` row per ancestor cell at z1 .. z16. Longitudes wrap
+    into [-180, 180) and the pixel clamps to the last row and column."""
+    wrapped = F.pmod(F.col(ln) + 180.0, F.lit(360.0)) - 180.0
+    px = K.merc_to_pixel_x(K.latlng_to_merc_x(wrapped), 16, tile_size=1)
+    py = K.merc_to_pixel_y(K.latlng_to_merc_y(F.col(la)), 16, tile_size=1)
+    # explode + shiftright stay in whole-stage codegen; a transform
+    # lambda would be interpreted once per point
+    return df.select(
+        *keep, F.least(px, F.lit(_Z16_TOP)).alias("_px"),
+        F.least(py, F.lit(_Z16_TOP)).alias("_py"),
+    ).select(
+        *keep, "_px", "_py", F.explode(F.sequence(F.lit(1), F.lit(16))).alias("_z"),
+    ).select(
+        *keep, "_px", "_py", "_z", F.expr("shiftright(_px, 16 - _z)").alias("_x"),
+        F.expr("shiftright(_py, 16 - _z)").alias("_y"),
+    )
+
+
 def _knn_candidates(points: DataFrame, centers: DataFrame, k: int, lat: str,
                     lng: str, q_id: str, q_lat: str, q_lng: str) -> DataFrame:
     """Every (point, query_id, dist_m) pair within a per-center upper
@@ -663,29 +686,14 @@ def _knn_candidates(points: DataFrame, centers: DataFrame, k: int, lat: str,
     """
     from geospark.spool import spool
 
-    top = (1 << 16) - 1
-
-    def levels(df: DataFrame, la: str, ln: str, *keep: str) -> DataFrame:
-        # the z16 pixel (_px, _py) and one (_z, _x, _y) row per ancestor
-        wrapped = F.pmod(F.col(ln) + 180.0, F.lit(360.0)) - 180.0
-        px = K.merc_to_pixel_x(K.latlng_to_merc_x(wrapped), 16, tile_size=1)
-        py = K.merc_to_pixel_y(K.latlng_to_merc_y(F.col(la)), 16, tile_size=1)
-        return df.select(
-            *keep, F.least(px, F.lit(top)).alias("_px"),
-            F.least(py, F.lit(top)).alias("_py"),
-        ).select(*keep, "_px", "_py", F.expr(
-            "inline(transform(sequence(1, 16), z -> named_struct('_z', z,"
-            " '_x', shiftright(_px, 16 - z), '_y', shiftright(_py, 16 - z))))"
-        ))
-
-    counts = levels(points, lat, lng).groupBy("_z", "_x", "_y").agg(
+    counts = _cell_ancestors(points, lat, lng).groupBy("_z", "_x", "_y").agg(
         F.count("*").alias("_n"))
     cen = centers.select(
         F.col(q_id).alias("query_id"), F.col(q_lat).alias("q_lat"),
         F.col(q_lng).alias("q_lng"),
     )
     best = (
-        levels(cen, "q_lat", "q_lng", "query_id", "q_lat", "q_lng")
+        _cell_ancestors(cen, "q_lat", "q_lng", "query_id", "q_lat", "q_lng")
         .join(counts, ["_z", "_x", "_y"], "left")
         .groupBy("query_id", "q_lat", "q_lng", "_px", "_py")
         .agg(F.max(F.when(F.col("_n") >= k, F.col("_z"))).alias("_z"))
@@ -703,7 +711,7 @@ def _knn_candidates(points: DataFrame, centers: DataFrame, k: int, lat: str,
     box = best.select(
         "query_id", "q_lat", "q_lng",
         F.when(v0 == 0, 90.0).otherwise(row_lat(v0 - 0.5)).alias("_lat_n"),
-        F.when(v0 + s > top, -90.0).otherwise(row_lat(v0 + s - 0.5)).alias("_lat_s"),
+        F.when(v0 + s > _Z16_TOP, -90.0).otherwise(row_lat(v0 + s - 0.5)).alias("_lat_s"),
         (u0 * (360.0 / (1 << 16)) - 180.0).alias("_lng_w"),
         ((u0 + s) * (360.0 / (1 << 16)) - 180.0).alias("_lng_e"),
     )

@@ -18,7 +18,7 @@ sort order (``WRITE ORDERED BY cell``) and every writer maintains it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geospark.cells import CELL_ZOOM, with_linear_cell_at_zoom
@@ -69,28 +69,6 @@ def write_cell_bucketed(points: DataFrame, table_name: str, path: str,
         .bucketBy(n_buckets, "cell")
         .sortBy("cell")
         .saveAsTable(table_name)
-    )
-
-
-def scan_cells(spark: SparkSession, path: str, cells: list[int],
-               zoom: int = CELL_ZOOM) -> DataFrame:
-    """Read only the rows in ``cells``: the filter reaches the parquet
-    scan (PushedFilters) so row groups outside the cell range never
-    decompress, and the coarse-prefix dir partition prunes files."""
-    df = spark.read.parquet(path)
-    prefixes = sorted({_prefix_of(c, zoom) for c in cells})
-    return df.filter(
-        F.col("cell_prefix").isin(prefixes) & F.col("cell").isin(cells)
-    )
-
-
-def scan_cell_range(spark: SparkSession, path: str, cell_min: int,
-                    cell_max: int) -> DataFrame:
-    """Contiguous cell-range scan (linear ids are row-major, so a
-    lat-band is a small number of ranges)."""
-    df = spark.read.parquet(path)
-    return df.filter(
-        (F.col("cell") >= cell_min) & (F.col("cell") <= cell_max)
     )
 
 

@@ -17,7 +17,8 @@ SUITES = [s for s in bench.SUITES if s not in ("registry", "pipeline")]
 # needs 2000 vectors
 SCALE = {"embeddings": 0.0004}
 REQUIRED = {"run_id", "git_sha", "host_cpus", "host_mem_gb", "suite", "op",
-            "input_rows", "rows_out", "wall_s"}
+            "input_rows", "rows_out", "wall_s", "codegen_compiles",
+            "codegen_compile_s"}
 
 
 @pytest.fixture(scope="module")

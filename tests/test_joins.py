@@ -766,6 +766,41 @@ def test_knn_jobs_do_not_depend_on_density(spark, jobs_in):
         assert jobs[0] == jobs[1], jobs
 
 
+def test_cell_ancestors_match_lambda_reference(spark):
+    """_cell_ancestors' explode + shiftright rows equal the transform
+    lambda's, row for row, at the world's edges (lng +-180, lat +-90,
+    the clamped south row) and mid-latitude; and its plan generates the
+    rows with no lambda."""
+    import contextlib
+    import io
+
+    from geospark.joins import _cell_ancestors
+
+    rows = [(0, 0.0, 180.0), (1, 0.0, -180.0), (2, 90.0, 10.0),
+            (3, -90.0, -10.0), (4, -85.06, 179.999), (5, 49.8726, 8.6310)]
+    df = spark.createDataFrame(rows, "id long, lat double, lng double")
+    got = _cell_ancestors(df, "lat", "lng", "id")
+    # the reference: one point row per z16 pixel, expanded by the
+    # lambda the kNN bound used before
+    ref = got.filter("_z = 16").select("id", "_px", "_py", F.expr(
+        "inline(transform(sequence(1, 16), z -> named_struct('_z', z,"
+        " '_x', shiftright(_px, 16 - z), '_y', shiftright(_py, 16 - z))))"
+    ))
+    assert got.schema == ref.schema
+    have, want = sorted(got.collect()), sorted(ref.collect())
+    assert have == want and len(have) == 16 * len(rows)
+    px = {r["id"]: (r["_px"], r["_py"]) for r in have if r["_z"] == 16}
+    assert px[0][0] == px[1][0] == 0  # lng 180 wraps to -180
+    assert px[2][1] == 0 and px[3][1] == px[4][1] == (1 << 16) - 1
+    assert all(r["_x"] < (1 << r["_z"]) and r["_y"] < (1 << r["_z"]) for r in have)
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        got.explain("extended")
+    plan = buf.getvalue()
+    assert "Generate" in plan and "lambdafunction" not in plan, plan
+
+
 def test_linear_cell_clamps_south_row_like_covers(spark):
     """cells.with_linear_cell_at_zoom and joins.cell_tile_of_latlng
     agree on the clamped south row, in the <=16 and >16 branches."""

@@ -6,10 +6,32 @@ from __future__ import annotations
 import contextlib
 import io
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geospark.cells import with_linear_cell_at_zoom
-from geospark.layout import _prefix_of, scan_cell_range, scan_cells, write_cell_sorted
+from geospark.layout import _prefix_of, write_cell_sorted
+
+
+def scan_cells(spark, path: str, cells: list[int], zoom: int) -> DataFrame:
+    """Read only the rows in ``cells``: the filter reaches the parquet
+    scan (PushedFilters) so row groups outside the cell range never
+    decompress, and the coarse-prefix dir partition prunes files."""
+    df = spark.read.parquet(path)
+    prefixes = sorted({_prefix_of(c, zoom) for c in cells})
+    return df.filter(
+        F.col("cell_prefix").isin(prefixes) & F.col("cell").isin(cells)
+    )
+
+
+def scan_cell_range(spark, path: str, cell_min: int,
+                    cell_max: int) -> DataFrame:
+    """Contiguous cell-range scan (linear ids are row-major, so a
+    lat-band is a small number of ranges)."""
+    df = spark.read.parquet(path)
+    return df.filter(
+        (F.col("cell") >= cell_min) & (F.col("cell") <= cell_max)
+    )
 
 
 def _points(spark, n=5000):
