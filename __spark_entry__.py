@@ -2682,19 +2682,16 @@ def _q_emb_kmeans(spark, sf_dir):
     """Integer-exact k-means codebook training (embeddings.kmeans_fit)
     — the trainer that feeds ivf_assign/pq_codebook real centroids.
     All executor math is exact integer arithmetic on floor(x*1e6)
-    BIGINT components; per Lloyd iteration the assignment is a
-    MAP-SIDE literal-array projection (zero joins, zero corpus
-    shuffle) and the update is ONE partial-aggregatable
-    (centroid_id, pos) shuffle whose map-side combine caps volume at
-    k*dim rows per task; only model-sized (sum, count) pairs reach
-    the driver.  Output certifies the trained model per centroid:
+    BIGINT components; each Lloyd iteration is ONE mapInArrow pass
+    (numpy assignment + per-centroid sums per partition, at most k
+    rows per task, no shuffle); only model-sized (sum, count) rows
+    reach the driver.  Output certifies the trained model per centroid:
     assignment count, exact BIGINT inertia, and component
     sum/min/max of the final centroid.  Oracle = an
     independent-algorithm plain-Python Lloyd (goldens.kmeans_py)."""
     from geospark.embeddings import kmeans_fit
 
-    a, cents = kmeans_fit(_emb(spark, sf_dir), k=KM_K, iters=KM_ITERS,
-                          arrow=True)
+    a, cents = kmeans_fit(_emb(spark, sf_dir), k=KM_K, iters=KM_ITERS)
     per = a.groupBy("centroid_id").agg(
         F.count("*").alias("n"), F.sum("d2").alias("inertia"))
     cstats = spark.createDataFrame(
@@ -2723,8 +2720,7 @@ def _q_emb_semdedup(spark, sf_dir):
     bit-identically."""
     from geospark.embeddings import semdedup
 
-    return semdedup(_emb(spark, sf_dir), n_centroids=KM_K,
-                    iters=KM_ITERS, arrow=True)
+    return semdedup(_emb(spark, sf_dir), n_centroids=KM_K, iters=KM_ITERS)
 
 
 def _q_emb_pq_rerank(spark, sf_dir):
@@ -2777,7 +2773,6 @@ def _q_emb_ivf_trained(spark, sf_dir):
     return ivf_topk_trained(
         _emb(spark, sf_dir), EMB_QUERY_IDS, k=10,
         n_centroids=KM_K, iters=KM_ITERS, n_probe=IVF_T_PROBE,
-        arrow=True,
     )
 
 

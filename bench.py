@@ -50,6 +50,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as E  # noqa: E402
 from geospark.session import get_spark, host  # noqa: E402
+from perfbench.procs import descendants  # noqa: E402
 
 RUNS = REPO / "bench_runs.jsonl"
 TMP = tempfile.gettempdir()
@@ -98,12 +99,33 @@ def codegen_totals(spark) -> tuple[int, float]:
             .CodeGenerator.compileTime() / 1e9)
 
 
+def py_worker_cpu_s(spark) -> float:
+    """CPU seconds (user + system) of the JVM's Python descendants, the
+    worker daemon and its forked workers, with the workers that have
+    exited (counted in the daemon once reaped). Like the codegen
+    counters they are JVM-wide; 0.0 when this process did not launch
+    the JVM."""
+    proc = getattr(spark.sparkContext._gateway, "proc", None)
+    if proc is None:
+        return 0.0
+    ticks = 0
+    for pid in descendants(proc.pid):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                f = fh.read().rsplit(")", 1)[1].split()
+        except OSError:  # exited while reading
+            continue
+        ticks += sum(int(x) for x in f[11:15])  # utime stime cutime cstime
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
               ctx: dict | None = None, sink: Path = RUNS) -> list[dict]:
     """Build ``suite``'s input once, then run ``passes`` passes over its
-    selected ops and emit one record per op with its min wall and the
+    selected ops and emit one record per op with its min wall, the
     classes its last pass compiled (``codegen_compiles``,
-    ``codegen_compile_s``). An op that raises is recorded with its
+    ``codegen_compile_s``) and the Python-worker CPU of that pass
+    (``py_worker_cpu_s``). An op that raises is recorded with its
     ``error`` and the loop goes on."""
     build, ops = SUITES[suite]
     ops = [(name, fn) for name, fn in ops if not only or name in only]
@@ -112,7 +134,7 @@ def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
     ctx = ctx or run_context()
     inp = build(spark, scale)
     walls = {name: [] for name, _ in ops}
-    extras, errors, codegen, records = {}, {}, {}, []
+    extras, errors, counters, records = {}, {}, {}, []
     for p in range(passes):
         for name, fn in ops:
             if name not in errors:
@@ -124,6 +146,7 @@ def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
                 gc.collect()
                 spark._jvm.System.gc()
                 n0, s0 = codegen_totals(spark)
+                w0 = py_worker_cpu_s(spark)
                 t0 = time.time()
                 try:
                     out = fn(inp)
@@ -135,8 +158,10 @@ def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
                 except Exception:
                     errors[name] = traceback.format_exc()
                 n1, s1 = codegen_totals(spark)
-                codegen[name] = {"codegen_compiles": n1 - n0,
-                                 "codegen_compile_s": round(s1 - s0, 3)}
+                counters[name] = {
+                    "codegen_compiles": n1 - n0,
+                    "codegen_compile_s": round(s1 - s0, 3),
+                    "py_worker_cpu_s": round(py_worker_cpu_s(spark) - w0, 2)}
             if p < passes - 1:
                 continue
             extra = extras.get(name, {})
@@ -144,7 +169,7 @@ def run_suite(spark, suite: str, scale: float = 1.0, only=(), passes: int = 1,
                    "input_rows": extra.pop("input_rows", inp["n"]),
                    "rows_out": extra.pop("rows_out", None),
                    "wall_s": min(walls[name], default=None),
-                   **codegen[name], **extra}
+                   **counters[name], **extra}
             if passes > 1:
                 rec["passes_s"] = walls[name]
             if name in errors:
@@ -1012,7 +1037,7 @@ def _semdedup(inp):
 
     sub = inp["emb"].filter(F.col("vec_id") < 1_000_000)
     out = semdedup(sub, n_centroids=2000, iters=2,
-                   tau_num=9801, tau_den=10000, arrow=True)
+                   tau_num=9801, tau_den=10000)
     agg = _counts(out, n=F.count("*"), dups=F.sum("is_dup"))
     return {"input_rows": min(inp["n"], 1_000_000), "rows_out": agg["n"],
             "n_dups": agg["dups"]}

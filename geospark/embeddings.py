@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -366,7 +367,6 @@ def lsh_bucket_arrow(emb: DataFrame, n_planes: int, dim: int,
     is the scale engine for the auto-sized configs (e.g. 36 tables x
     26 planes at n=5M, 10-candidates/row budget) where L*k ~ 900."""
     import numpy as np
-    import pyarrow as pa
 
     W = np.array(_plane_weights(n_tables * n_planes, dim), dtype=np.float64)
     k = n_planes
@@ -822,14 +822,15 @@ def pq_topk_rerank(emb: DataFrame, query_ids: list[int], k: int = 10,
 # k*dim BIGINTs per iteration, the same model-sized-data-only driver
 # contract as the BPE argmax loop.
 #
-# Per-iteration plan: assignment is a MAP-SIDE projection (centroids
-# inlined as literal arrays — zero joins, zero corpus shuffle, the
-# pq_encode pattern), then ONE partial-aggregatable shuffle of
-# (centroid_id, pos) component sums — map-side combine collapses
-# each task to <= k*dim rows, so shuffle volume is model-sized, not
-# corpus-sized. Empty clusters keep their previous centroid.
-# Ties (equal d2) assign to the lowest centroid_id via the
-# (d2, c_id) struct sort, deterministically.
+# Per-iteration plan: ONE mapInArrow pass over the spooled quantized
+# vectors. Each partition assigns its vectors to the nearest centroid
+# in numpy (exact int64, ties to the lowest centroid_id: argmin keeps
+# the first minimum) and emits one (c_id, sums, count) row per
+# centroid it hit, so a task's output is at most k rows, whatever
+# the corpus size. The driver adds those rows up and floor-divides:
+# one job per iteration, no shuffle. Empty clusters keep their
+# previous centroid. The final assignment is the same kernel as an
+# Arrow UDF returning (c_id, d2).
 # ---------------------------------------------------------------------------
 
 
@@ -842,70 +843,113 @@ def _q_vec_sql(vec_col: str) -> str:
     )
 
 
-def _kmeans_assign_expr(cents: list[list[int]]) -> str:
-    """SQL text of struct(d2, c_id) for the nearest centroid —
-    literal centroid arrays, exact integer L2, ties to lowest c_id."""
-    arr = ", ".join(
-        "array(" + ", ".join(f"{x}L" for x in c) + ")" for c in cents
-    )
-    return (
-        f"sort_array(transform(array({arr}), (c, i) -> "
-        f"struct(aggregate(zip_with(v_q, c, (x, y) -> (x - y) * (x - y)), "
-        f"0L, (acc, v) -> acc + v) AS d2, i AS c_id)))[0]"
-    )
+# a worker scores at most this many (vector, centroid) pairs at once
+_KMEANS_TILE = 1 << 22
 
 
-def _assign_arrow(qv: DataFrame, cents: list[list[int]]):
-    """Arrow fast path for the nearest-centroid assignment: the same
-    exact int64 L2 argmin as _kmeans_assign_expr (ties to the lowest
-    c_id), computed as one numpy matmul per batch instead of the
-    interpreted Catalyst fold (higher-order array functions are
-    CodegenFallback — measured ~5x slower at 5M x 64 x 16). numpy
-    int64 arithmetic wraps exactly like a JVM long, and |v|,|c| <=
-    2e6-scale quantized components keep every d2 term far below
-    2^63, so the two paths are bit-identical (parity-tested).
-    Returns qv with an added _c INT column."""
-    from pyspark.sql.functions import pandas_udf
-
-    c_arr = np.asarray(cents, dtype=np.int64)          # k x dim
-    c_norm = (c_arr * c_arr).sum(axis=1)               # k
-
-    @pandas_udf("int")
-    def _nearest(v: pd.Series) -> pd.Series:
-        m = np.asarray(v.tolist(), dtype=np.int64)     # n x dim
-        # d2 = |v|^2 - 2 v.c + |c|^2; |v|^2 constant per row -> argmin
-        # over (-2 v.c + |c|^2) — exact int64, same ties (argmin takes
-        # the first = lowest c_id)
-        scores = c_norm[None, :] - 2 * (m @ c_arr.T)
-        return pd.Series(np.argmin(scores, axis=1).astype(np.int32))
-
-    return qv.withColumn("_c", _nearest(F.col("v_q")))
+def _vectors(col, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(n x dim int64 matrix, validity mask) of an Arrow list<long>
+    column without a per-row Python step. A null vector is a zero row
+    with mask False; a vector of another length, or with a null
+    component, raises ValueError."""
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    flat = col.flatten()
+    if flat.null_count or (
+            col.value_lengths().fill_null(dim).to_numpy() != dim).any():
+        raise ValueError(
+            f"kmeans_fit: every vector needs {dim} non-null components")
+    m = np.zeros((len(col), dim), dtype=np.int64)
+    m[valid] = flat.to_numpy().reshape(-1, dim)
+    return m, valid
 
 
-def _assign_arrow_d2(qv: DataFrame, cents: list[list[int]]):
-    """Arrow twin of ``_kmeans_assign_expr`` returning BOTH the
-    assignment and its exact int64 d2 (struct<c_id, d2>) — the final-
-    assignment variant of :func:`_assign_arrow`."""
-    from pyspark.sql.functions import pandas_udf
+def _nearest(m: np.ndarray, c: np.ndarray,
+             c_norm: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(c_id, d2) of each row of ``m`` against centroids ``c``: exact
+    int64 L2 (numpy int64 wraps like a JVM long), ties to the lowest
+    c_id. d2 = |v|^2 - 2 v.c + |c|^2; the argmin drops the row's
+    constant |v|^2 and keeps the first minimum."""
+    ci = np.zeros(len(m), dtype=np.int64)
+    d2 = np.zeros(len(m), dtype=np.int64)
+    tile = max(1, _KMEANS_TILE // len(c))
+    for r0 in range(0, len(m), tile):
+        t = m[r0:r0 + tile]
+        scores = c_norm[None, :] - 2 * (t @ c.T)
+        j = np.argmin(scores, axis=1)
+        ci[r0:r0 + tile] = j
+        d2[r0:r0 + tile] = (scores[np.arange(len(j)), j]
+                            + (t * t).sum(axis=1))
+    return ci, d2
 
-    c_arr = np.asarray(cents, dtype=np.int64)
-    c_norm = (c_arr * c_arr).sum(axis=1)
 
-    @pandas_udf("struct<c_id: int, d2: long>")
-    def _nearest(v: pd.Series) -> pd.DataFrame:
-        m = np.asarray(v.tolist(), dtype=np.int64)
-        scores = c_norm[None, :] - 2 * (m @ c_arr.T)
-        ci = np.argmin(scores, axis=1)
-        d2 = scores[np.arange(len(ci)), ci] + (m * m).sum(axis=1)
-        return pd.DataFrame({"c_id": ci.astype(np.int32), "d2": d2})
+def _lloyd_step(qv: DataFrame, cents: list[list[int]]) -> list[list[int]]:
+    """One Lloyd iteration as one mapInArrow job: per partition the
+    assignment and a segmented per-centroid sum (sort by c_id, then
+    ``np.add.reduceat``); on the driver the sum of those rows and a
+    componentwise floor division."""
+    c = np.asarray(cents, dtype=np.int64)
+    k, dim = c.shape
+    c_norm = (c * c).sum(axis=1)
 
-    return qv.withColumn("_b", _nearest(F.col("v_q")))
+    def partial(batches):
+        sums = np.zeros((k, dim), dtype=np.int64)
+        cnt = np.zeros(k, dtype=np.int64)
+        for b in batches:
+            m, valid = _vectors(b.column(0), dim)
+            m = m[valid]
+            if not len(m):
+                continue
+            ci = _nearest(m, c, c_norm)[0]
+            order = np.argsort(ci, kind="stable")
+            cs = ci[order]
+            starts = np.flatnonzero(np.diff(cs, prepend=-1))
+            sums[cs[starts]] += np.add.reduceat(m[order], starts, axis=0)
+            cnt += np.bincount(ci, minlength=k)
+        hit = np.flatnonzero(cnt)
+        yield pa.RecordBatch.from_arrays([
+            pa.array(hit.astype(np.int32)),
+            pa.ListArray.from_arrays(
+                pa.array(np.arange(len(hit) + 1, dtype=np.int32) * dim),
+                pa.array(sums[hit].ravel())),
+            pa.array(cnt[hit]),
+        ], names=["c_id", "s", "n"])
+
+    t = qv.select("v_q").mapInArrow(
+        partial, "c_id int, s array<long>, n long").toArrow()
+    ids = t.column("c_id").to_numpy()
+    sums = np.zeros((k, dim), dtype=np.int64)
+    cnt = np.zeros(k, dtype=np.int64)
+    np.add.at(sums, ids, t.column("s").combine_chunks().flatten()
+              .to_numpy().reshape(-1, dim))
+    np.add.at(cnt, ids, t.column("n").to_numpy())
+    hit = cnt > 0
+    c[hit] = sums[hit] // cnt[hit, None]  # floor division, like Python //
+    return c.tolist()
+
+
+def _assign_udf(cents: list[list[int]]):
+    """Arrow UDF: v_q -> struct(c_id, d2) of the nearest centroid
+    (:func:`_nearest`); a null vector gets c_id 0 and a null d2."""
+    from pyspark.sql.functions import arrow_udf
+
+    c = np.asarray(cents, dtype=np.int64)
+    c_norm = (c * c).sum(axis=1)
+
+    @arrow_udf("struct<c_id: int, d2: long>")
+    def nearest(v: pa.Array) -> pa.Array:
+        m, valid = _vectors(v, c.shape[1])
+        ci, d2 = _nearest(m, c, c_norm)
+        ci[~valid] = 0
+        return pa.StructArray.from_arrays(
+            [pa.array(ci.astype(np.int32)), pa.array(d2, mask=~valid)],
+            names=["c_id", "d2"])
+
+    return nearest
 
 
 def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 3,
                id_col: str = "vec_id", vec_col: str = "embedding",
-               use_spool: bool = True, with_vec: bool = False,
-               arrow: bool = False):
+               use_spool: bool = True, with_vec: bool = False):
     """Integer-exact Lloyd k-means. Init = the first ``k`` vectors by
     id (deterministic). Returns (assign, centroids): ``assign`` is
     (vec_id, centroid_id, d2) under the FINAL centroids — plus the
@@ -914,7 +958,9 @@ def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 3,
     ``centroids`` the trained integer centroid list. d2 sums are exact while
     n * dim * (2 * 1e6)^2 stays under 2^63 — ~3.5e4 adversarial
     vectors, ~1e8 real unit-normalized ones; quantized inputs keep
-    every run engine-reproducible."""
+    every run engine-reproducible. A null vector takes no part in
+    training and is assigned centroid 0 with a null d2; a vector with
+    a null component or of another length than the seeds raises."""
     from geospark.spool import spool
 
     qv = emb.select(
@@ -934,40 +980,15 @@ def kmeans_fit(emb: DataFrame, k: int = 8, iters: int = 3,
         raise ValueError(
             f"kmeans_fit: k={k} but only {len(cents)} vectors available"
         )
-    dim = len(cents[0])
     for _ in range(iters):
-        if arrow:
-            a = _assign_arrow(qv, cents).select("v_q", "_c")
-        else:
-            a = qv.select(
-                "v_q",
-                F.expr(_kmeans_assign_expr(cents) + ".c_id").alias("_c"),
-            )
-        stats = (
-            a.select("_c", F.posexplode("v_q").alias("pos", "x"))
-            .groupBy("_c", "pos")
-            .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        nxt = [list(c) for c in cents]
-        for r in stats:
-            nxt[r["_c"]][r["pos"]] = r["s"] // r["n"]  # floor division
-        cents = nxt
+        cents = _lloyd_step(qv, cents)
     cols = ["vec_id"] + (["v_q"] if with_vec else [])
-    if arrow:
-        a = _assign_arrow_d2(qv.select(*cols, "v_q") if not with_vec
-                             else qv, cents)
-        a = a.select(
-            *cols, F.col("_b.c_id").alias("centroid_id"),
-            F.col("_b.d2").alias("d2"),
-        )
-    else:
-        a = qv.select(
-            *cols, F.expr(_kmeans_assign_expr(cents)).alias("_b")
-        ).select(
-            *cols, F.col("_b.c_id").alias("centroid_id"),
-            F.col("_b.d2").alias("d2"),
-        )
+    a = qv.select(
+        *cols, _assign_udf(cents)(F.col("v_q")).alias("_b")
+    ).select(
+        *cols, F.col("_b.c_id").alias("centroid_id"),
+        F.col("_b.d2").alias("d2"),
+    )
     return a, cents
 
 
@@ -991,8 +1012,8 @@ def ivfpq_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
     with rn = 1..k ranked by (adc distance ASC, vec_id).
 
     Plan shape at corpus scale:
-    - training: kmeans_fit's map-side assignment + model-sized update
-      shuffle (centroids inlined as literals, never joined);
+    - training: kmeans_fit's one numpy pass per Lloyd iteration
+      (model-sized rows to the driver, no shuffle);
     - assignment + residual + PQ encode: ONE map-side projection over
       the corpus (centroid table and residual codebook are literal
       arrays — zero joins, zero corpus shuffles); the corpus then
@@ -1009,10 +1030,11 @@ def ivfpq_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
     Reference analogue: the filter-refine discipline of
     point_rtree.cc:21-36 (coarse prefilter, cheap refine) applied to
     vector search; coarse quantizer = the trained twin of
-    ivf_assign's deterministic lists."""
+    ivf_assign's deterministic lists. ``arrow`` runs the residual
+    encode as a numpy kernel instead of the literal-array fold (the
+    training is numpy either way)."""
     a, cents = kmeans_fit(emb, k=n_centroids, iters=iters,
-                          id_col=id_col, vec_col=vec_col, with_vec=True,
-                          arrow=arrow)
+                          id_col=id_col, vec_col=vec_col, with_vec=True)
     dim = len(cents[0])
     dsub = dim // m
     cent_arr = "array(" + ", ".join(
@@ -1132,8 +1154,7 @@ def ivfpq_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
 def ivf_topk_trained(emb: DataFrame, query_ids: list[int], k: int = 10,
                      n_centroids: int = 8, iters: int = 3, n_probe: int = 4,
                      id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     arrow: bool = False) -> DataFrame:
+                     vec_col: str = "embedding") -> DataFrame:
     """IVF-flat ANN over TRAINED centroids, integer-exact end to end:
     kmeans_fit supplies the coarse quantizer, queries probe their
     ``n_probe`` nearest trained centroids (exact integer L2, ties to
@@ -1144,27 +1165,29 @@ def ivf_topk_trained(emb: DataFrame, query_ids: list[int], k: int = 10,
     rn 1..k ordered by (d2_q, vec_id); the query itself is a candidate
     (rn 1 at d2_q 0), matching pq_topk's convention.
 
-    Plan shape: training is kmeans_fit's map-side-assignment +
-    model-sized-update loop; the probe set is computed map-side on a
+    Plan shape: training is kmeans_fit's one numpy pass per Lloyd
+    iteration; the probe set is computed map-side on a
     broadcast |Q|-row relation with the k centroid arrays inlined as
     literals; candidate selection is ONE broadcast hash join of the
     probes against the assignment (corpus never shuffles); the re-rank
     is a zip_with/aggregate integer fold inside codegen ending in a
     per-query top-k window over ~n * n_probe / n_centroids rows."""
     a, cents = kmeans_fit(emb, k=n_centroids, iters=iters,
-                          id_col=id_col, vec_col=vec_col, with_vec=True,
-                          arrow=arrow)
+                          id_col=id_col, vec_col=vec_col, with_vec=True)
     qids = [int(q) for q in query_ids]
     queries = a.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"), "v_q"
     )
     # probe list: slice(sorted (d2, c_id) structs, 1, n_probe) over the
-    # literal trained centroids — one narrow projection on |Q| rows
-    # (_kmeans_assign_expr reads the quantized vector as column v_q)
+    # literal trained centroids — exact integer L2, ties to the lowest
+    # c_id; one narrow projection on |Q| rows
+    arr = ", ".join(
+        "array(" + ", ".join(f"{x}L" for x in c) + ")" for c in cents
+    )
     probe_expr = (
-        _kmeans_assign_expr(cents)
-        .replace("sort_array(", "slice(sort_array(", 1)
-        .replace(")))[0]", f"))), 1, {int(n_probe)})")
+        f"slice(sort_array(transform(array({arr}), (c, i) -> "
+        f"struct(aggregate(zip_with(v_q, c, (x, y) -> (x - y) * (x - y)), "
+        f"0L, (acc, v) -> acc + v) AS d2, i AS c_id))), 1, {int(n_probe)})"
     )
     probes = queries.select(
         "query_id", F.col("v_q").alias("q_q"),
@@ -1256,8 +1279,7 @@ def semdedup_canonical(ids: np.ndarray, v_q: np.ndarray, tau_num: int,
 def semdedup(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
              tau_num: int = SEMDEDUP_TAU[0],
              tau_den: int = SEMDEDUP_TAU[1],
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             arrow: bool = False) -> DataFrame:
+             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic keep-one deduplication —
     k-means-cluster the embeddings, compare pairs ONLY within a
     cluster, mark every vector whose cosine similarity to a
@@ -1274,7 +1296,8 @@ def semdedup(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
     A cluster whose tau * max|v|^4 reaches 2^63 raises ArithmeticError
     instead of wrapping (see :func:`semdedup_canonical`).
 
-    Plan shape: kmeans_fit's map-side training, then ONE
+    Plan shape: kmeans_fit's training (one numpy pass per Lloyd
+    iteration, no shuffle), then ONE
     ``groupBy(centroid_id).applyInPandas`` — a single shuffle on the
     cluster key, after which :func:`semdedup_canonical` runs per
     cluster in numpy: exact int64 Gram tiles for the pair predicate
@@ -1304,7 +1327,7 @@ def semdedup(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
 
     a, _cents = kmeans_fit(emb, k=n_centroids, iters=iters,
                            id_col=id_col, vec_col=vec_col,
-                           with_vec=True, arrow=arrow)
+                           with_vec=True)
     return (
         a.select("vec_id", "centroid_id", "v_q")
         .groupBy("centroid_id")

@@ -8,6 +8,15 @@ Two defaults make a plan's fixed driver cost a one-off per plan shape
 instead of a charge on every call: a generated-code cache that holds
 the engine's working set, so a repeated plan recompiles nothing, and
 no per-Column call-site capture (see ``_DEFAULTS``).
+
+On a ``local[...]`` master the Python workers fork from
+``geospark._pyworker`` (``spark.python.daemon.module``) instead of
+``pyspark.daemon``: a Python task then costs what its kernel costs,
+not the ~0.1 CPU s PySpark spends re-reading ``pyspark.zip`` before
+each task. geospark's parent directory goes on the workers' path
+(``spark.executorEnv.PYTHONPATH``), so they import it from any cwd.
+On a cluster the daemon starts before ``--py-files`` reach the
+workers' path, so there both are left unset.
 """
 
 from __future__ import annotations
@@ -59,6 +68,36 @@ def host() -> tuple[int, int]:
             os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
 
 
+# the directory geospark is imported from, for the Python workers
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def session_conf(master: str, shuffle_partitions: int | None = None,
+                 extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """The confs ``get_spark`` sets for ``master``: ``_DEFAULTS``, the
+    host-sized heap and parallelism, the worker daemon on local
+    masters, then ``extra_conf`` over all of them."""
+    cores, mem = host()
+    conf = dict(_DEFAULTS)
+    conf["spark.driver.memory"] = f"{min(8192, mem // 2 // 2**20)}m"
+    if master.startswith("local"):
+        # static, like the codegen cache: read when the context starts
+        conf["spark.python.daemon.module"] = "geospark._pyworker"
+        conf["spark.executorEnv.PYTHONPATH"] = _PKG_PARENT
+    if shuffle_partitions is None and "[" in master:
+        # match parallelism: local[N] (or local[N,maxFailures]) -> N
+        n = master.split("[")[-1].rstrip("]").split(",")[0]
+        shuffle_partitions = cores if n == "*" else int(n)
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        conf["spark.default.parallelism"] = str(shuffle_partitions)
+    # else: cluster master with no explicit override — leave the
+    # launcher/AQE-configured parallelism alone
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
+
+
 def get_spark(
     app_name: str = "geospark",
     master: str | None = None,
@@ -71,9 +110,10 @@ def get_spark(
     driver heap to half of physical memory, at most 8g; under
     spark-submit the launcher's master is kept.
 
-    ``spark.sql.codegen.cache.maxEntries`` (like the master and heap)
-    is static: it applies only when this call creates the context, and
-    a reused session keeps the value it started with.
+    ``spark.sql.codegen.cache.maxEntries`` and the worker daemon (like
+    the master and heap) are static: they apply only when this call
+    creates the context, and a reused session keeps what it started
+    with. See ``session_conf`` for every conf it sets.
     """
     from pyspark import SparkConf
 
@@ -83,26 +123,12 @@ def get_spark(
     # single-node on the driver, so only default the master when the
     # launcher didn't choose one
     submitted = SparkConf().get("spark.master", None)
-    cores, mem = host()
     if master is None and submitted:
         master = submitted
     else:
         if master is None:
-            master = f"local[{cores}]"
+            master = f"local[{host()[0]}]"
         builder = builder.master(master)
-    conf = dict(_DEFAULTS)
-    conf["spark.driver.memory"] = f"{min(8192, mem // 2 // 2**20)}m"
-    if shuffle_partitions is None and "[" in master:
-        # match parallelism: local[N] (or local[N,maxFailures]) -> N
-        n = master.split("[")[-1].rstrip("]").split(",")[0]
-        shuffle_partitions = cores if n == "*" else int(n)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-        conf["spark.default.parallelism"] = str(shuffle_partitions)
-    # else: cluster master with no explicit override — leave the
-    # launcher/AQE-configured parallelism alone
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -18,7 +18,7 @@ SUITES = [s for s in bench.SUITES if s not in ("registry", "pipeline")]
 SCALE = {"embeddings": 0.0004}
 REQUIRED = {"run_id", "git_sha", "host_cpus", "host_mem_gb", "suite", "op",
             "input_rows", "rows_out", "wall_s", "codegen_compiles",
-            "codegen_compile_s"}
+            "codegen_compile_s", "py_worker_cpu_s"}
 
 
 @pytest.fixture(scope="module")

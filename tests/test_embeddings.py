@@ -442,6 +442,74 @@ def test_kmeans_matches_python_twin(spark):
             (c_sum, c_min, c_max)
 
 
+def _kmeans_golden(vecs, k, iters):
+    """(centroids, sorted (vec_id, centroid_id, d2) rows) from the
+    plain-Python Lloyd twin."""
+    from geospark.goldens import _d2_int, _lloyd_py, _quantize_vecs
+
+    qv = _quantize_vecs(vecs)
+    cents = _lloyd_py(qv, k, iters)
+    return cents, sorted(
+        (vid, c, d2) for vid, (d2, c) in
+        ((vid, min((_d2_int(q, cc), i) for i, cc in enumerate(cents)))
+         for vid, q in qv.items()))
+
+
+@pytest.mark.parametrize("case", ["ties", "empty_cluster", "negative",
+                                  "empty_partitions"])
+def test_kmeans_numpy_pass_matches_twin(spark, case):
+    """The numpy Lloyd pass replays goldens' Lloyd exactly: equal d2
+    goes to the lowest centroid_id, a centroid nobody picks keeps its
+    value, negative sums floor-divide toward -inf, and partitions
+    with no rows add nothing."""
+    k, iters = 3, 3
+    if case == "ties":
+        # every odd vector sits midway between two seeds
+        vecs = [(0, [1.0, 0.0]), (1, [-1.0, 0.0]), (2, [0.0, 1.0])] + [
+            (i, [0.0, 0.25 * (i % 3) - 0.5] if i % 2 else
+             [0.5 * (i % 5) - 1.0, 0.125 * i])
+            for i in range(3, 24)]
+    elif case == "empty_cluster":
+        vecs = [(i, [0.5, -0.5, 0.25]) for i in range(2)] + [
+            (i, [0.1 * i, -0.3, 0.2]) for i in range(2, 12)]
+    elif case == "negative":
+        rng = np.random.default_rng(11)
+        vecs = [(i, [float(x) for x in -np.abs(rng.normal(0, 0.7, 5)) / 3])
+                for i in range(30)]
+    else:
+        vecs = _km_vecs(seed=9, n=6, dim=4)
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    if case == "empty_partitions":
+        df = df.repartition(16)
+    a, cents = E.kmeans_fit(df, k=k, iters=iters)
+    assert (cents, sorted(map(tuple, a.collect()))) == \
+        _kmeans_golden(vecs, k, iters)
+
+
+def test_kmeans_null_and_ragged_vectors(spark):
+    """A null vector is left out of training and assigned centroid 0
+    with a null d2 (the literal-array fold's result, kept); a vector
+    of another length, or with a null component, raises."""
+    schema = "vec_id long, embedding array<double>"
+    base = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (3, [0.5, 0.5])]
+    df = spark.createDataFrame(base + [(2, None)], schema)
+    a, cents = E.kmeans_fit(df, k=2, iters=2)
+    assert cents == [[750000, 250000], [0, 1000000]]
+    assert sorted(map(tuple, a.collect())) == [
+        (0, 0, 125000000000), (1, 1, 0), (2, 0, None), (3, 0, 125000000000)]
+    for bad in ([0.3], [0.3, 0.2, 0.1], [None, 0.2]):
+        df = spark.createDataFrame(base + [(2, bad)], schema)
+        with pytest.raises(Exception, match="non-null components"):
+            E.kmeans_fit(df, k=2, iters=2)
+
+
+def test_kmeans_one_job_per_lloyd_iteration(spark, jobs_in):
+    df, _ = _emb_df(spark)
+    jobs = [jobs_in(lambda: E.kmeans_fit(df, k=4, iters=n, use_spool=False))[1]
+            for n in (1, 3)]
+    assert jobs[1] - jobs[0] == 2, jobs
+
+
 def test_kmeans_duplicate_init_keeps_empty_centroid(spark):
     """vec 0 and 1 identical -> centroid 1 is never nearest (ties go
     to the lowest id) and must keep its init value through training."""
@@ -550,13 +618,12 @@ def test_ivfpq_recall_vs_exact(spark):
 def test_arrow_fast_paths_bit_identical(spark):
     """The Arrow (numpy matmul) assignment/encode kernels must be
     BIT-IDENTICAL to the literal-array JVM expression paths — same
-    exact int64 L2, same lowest-id tie rule — across kmeans_fit,
-    pq_encode, and the full ivfpq_topk composition."""
+    exact int64 L2, same lowest-id tie rule — across pq_encode and the
+    full ivfpq_topk composition; kmeans_fit (numpy only) is checked
+    against its plain-Python twin."""
     df, rows = _emb_df(spark)
     a1, c1 = E.kmeans_fit(df, k=4, iters=3, with_vec=False)
-    a2, c2 = E.kmeans_fit(df, k=4, iters=3, with_vec=False, arrow=True)
-    assert c1 == c2
-    assert sorted(map(tuple, a1.collect())) == sorted(map(tuple, a2.collect()))
+    assert (c1, sorted(map(tuple, a1.collect()))) == _kmeans_golden(rows, 4, 3)
     e1 = sorted((r["vec_id"], tuple(r["codes"]))
                 for r in E.pq_encode(df, m=4, n_codes=8).collect())
     e2 = sorted((r["vec_id"], tuple(r["codes"]))

@@ -5,8 +5,10 @@ space between them."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from geospark.functions import numpy_kernels as NK
@@ -124,32 +126,31 @@ def test_destination_point_roundtrip(lat, lng, dist, bearing):
 
 @settings(max_examples=150, deadline=None)
 @given(lat_s, lng_s, lat_s, lng_s, lat_s, lng_s)
+# a 4-degree meridian segment at 72-76 S, the query 37 degrees east:
+# on the sphere the Mercator closest point (-73, 0) is 1,183,789 m
+# away and the endpoint (-76, 0) 1,127,289 m, so a haversine bound
+# with 5% slack fails here
+@example(qa=-73.0, qb=37.0, fa=-76.0, fb=0.0, ta=-72.0, tb=0.0)
 def test_closest_on_segment_is_on_segment_and_closer(qa, qb, fa, fb, ta, tb):
-    from hypothesis import assume
-
     from geospark import goldens as GO
 
-    # the reference algorithm is PLANAR in mercator space: for
-    # antimeridian-wrapping configurations the "closest" endpoint on
-    # the plane can be the farther one on the sphere (documented
-    # reference behavior) — restrict to non-wrapping inputs
-    assume(max(abs(qb - fb), abs(qb - tb), abs(fb - tb)) < 90.0)
-    # realistic polyline segments: merc distortion on continent-sized
-    # segments makes planar-vs-haversine endpoint comparisons unbounded
-    assume(abs(fa - ta) < 5.0 and abs(fb - tb) < 5.0)
     c = GO.closest_on_segment((qa, qb), (fa, fb), (ta, tb))
-    # the point lies ON the segment (bbox in latlng, tiny roundtrip eps)
+    # the point lies ON the segment: inside its bbox in latlng, and on
+    # its line in Mercator space (the plane the reference works in,
+    # src/latlng.cc:111-146)
     eps = 1e-6
     assert min(fa, ta) - eps <= c[0] <= max(fa, ta) + eps
     assert min(fb, tb) - eps <= c[1] <= max(fb, tb) + eps
-    d_c = GO._haversine(qa, qb, c[0], c[1])
-    d_f = GO._haversine(qa, qb, fa, fb)
-    d_t = GO._haversine(qa, qb, ta, tb)
-    # never (much) worse than both endpoints: the algorithm minimizes
-    # in MERCATOR space, so haversine meters can come out a few permil
-    # worse than an endpoint on long high-latitude segments (reference
-    # behavior, src/latlng.cc:111-146)
-    assert d_c <= min(d_f, d_t) * 1.05 + 1.0
+    (qx, qy), (cx, cy), (fx, fy), (tx, ty) = (
+        GO._merc(*p) for p in ((qa, qb), c, (fa, fb), (ta, tb)))
+    # (|cross| / |segment| is the distance from the line, in metres)
+    cross = (cx - fx) * (ty - fy) - (cy - fy) * (tx - fx)
+    assert abs(cross) <= 1e-6 * math.hypot(tx - fx, ty - fy)
+    # and in Mercator distance it is no farther than either endpoint
+    d_c = math.hypot(qx - cx, qy - cy)
+    d_f = math.hypot(qx - fx, qy - fy)
+    d_t = math.hypot(qx - tx, qy - ty)
+    assert d_c <= min(d_f, d_t) + 1e-6
 
 
 @settings(max_examples=60, deadline=None)
