@@ -1295,16 +1295,15 @@ def _q_emb_neardup(spark, sf_dir):
     # max pairwise cosine in the synthetic embeddings is ~0.51 — 0.35
     # marks the top ~0.1% of pairs as "near-dups". 4 tables x 8 planes:
     # each self-join is 256-bucketed (~L*n^2/256 candidate pairs).
-    # engine="arrow": the one-scan BLAS bucketer (the scale engine —
-    # all L*k plane signs in one matmul per batch). The SQL-expression
-    # engine computes bit-identical buckets (test_arrow_bucketer_
-    # matches_sql, test_neardup_engines_agree) but embeds L*k*dim
-    # plane literals in the plan (~120 KB -> seconds of codegen
-    # compile); the DuckDB oracle is that literal twin, so green here
-    # certifies the arrow path against an independent engine.
+    # Buckets come from the one-scan BLAS bucketer (all L*k plane
+    # signs in one matmul per batch). The SQL-expression lsh_bucket
+    # computes bit-identical buckets (test_arrow_bucketer_matches_sql)
+    # but embeds L*k*dim plane literals in the plan (~120 KB ->
+    # seconds of codegen compile); the DuckDB oracle is that literal
+    # twin, so green here certifies the arrow path against an
+    # independent engine.
     return embedding_neardup_pairs(
         _emb(spark, sf_dir), threshold=0.35, n_planes=8, n_tables=4,
-        engine="arrow",
     )
 
 

@@ -992,7 +992,7 @@ def _neardup_lsh(inp, threshold=0.95, target_recall=0.9):
                 * EM._p_collide_unrelated(n_planes, DIM))
     t0 = time.time()
     cand = EM.neardup_candidates(
-        emb, n_planes, DIM, n_tables, engine="arrow"
+        emb, n_planes, DIM, n_tables
     ).persist(StorageLevel.DISK_ONLY)
     n_cand = cand.count()
     t1 = time.time()

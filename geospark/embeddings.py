@@ -16,6 +16,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -399,28 +400,11 @@ def lsh_bucket_arrow(emb: DataFrame, n_planes: int, dim: int,
 
 def neardup_candidates(emb: DataFrame, n_planes: int, dim: int = 64,
                        n_tables: int = 4, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       engine: str = "sql") -> DataFrame:
+                       vec_col: str = "embedding") -> DataFrame:
     """Candidate (vec_id_a, vec_id_b) pairs colliding in ANY table:
-    bucketed self-join on (tbl, bucket), distinct. ``engine`` picks
-    how buckets are computed — "sql" (L scans of codegen'd folds,
-    oracle-replicable in DuckDB) or "arrow" (one numpy-BLAS scan; the
-    scale path for auto-sized L*k ~ hundreds)."""
-    if engine == "arrow":
-        buckets = lsh_bucket_arrow(emb, n_planes, dim, n_tables,
-                                   id_col, vec_col)
-    else:
-        sides = []
-        for t in range(n_tables):
-            sides.append(
-                lsh_bucket(emb, n_planes, dim, vec_col, table=t).select(
-                    F.col(id_col).alias("vid"), "bucket",
-                    F.lit(t).alias("tbl"),
-                )
-            )
-        buckets = sides[0]
-        for s in sides[1:]:
-            buckets = buckets.unionByName(s)
+    bucketed self-join on (tbl, bucket), distinct. Buckets come from
+    the one-scan :func:`lsh_bucket_arrow`."""
+    buckets = lsh_bucket_arrow(emb, n_planes, dim, n_tables, id_col, vec_col)
     return (
         buckets.alias("a")
         .join(buckets.alias("b"), ["tbl", "bucket"])
@@ -463,8 +447,7 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
                             vec_col: str = "embedding",
                             target_candidates: int = 50_000_000,
                             target_recall: float = 0.9,
-                            n_rows: int | None = None,
-                            engine: str = "sql") -> DataFrame:
+                            n_rows: int | None = None) -> DataFrame:
     """Embedding-cosine near-dup: MULTI-TABLE sign-LSH (L independent
     plane blocks; a pair is a candidate if it collides in ANY table)
     -> exact cosine refine -> pairs above threshold.
@@ -505,9 +488,7 @@ def embedding_neardup_pairs(emb: DataFrame, threshold: float = 0.95,
         )
     elif n_tables is None:
         n_tables = 4
-    cand = neardup_candidates(
-        emb, n_planes, dim, n_tables, id_col, vec_col, engine
-    )
+    cand = neardup_candidates(emb, n_planes, dim, n_tables, id_col, vec_col)
     return refine_pairs(emb, cand, threshold, id_col, vec_col)
 
 
@@ -606,6 +587,22 @@ def _collect_codebook(emb: DataFrame, m: int, n_codes: int,
     return cb
 
 
+def _pq_codes(q: np.ndarray, cbs: list[np.ndarray], dsub: int,
+              valid: np.ndarray) -> pa.Array:
+    """The Arrow twin of :func:`_pq_code_expr` over an int64 matrix:
+    per subspace the argmin of exact int64 L2 against codebook
+    ``cbs[s]`` (|c|^2 - 2 q.c, ties to the lowest c_id), as an
+    array<int> column; a row whose ``valid`` is False is null."""
+    out = np.empty((len(q), len(cbs)), dtype=np.int32)
+    for s, c in enumerate(cbs):
+        qs = q[:, s * dsub:(s + 1) * dsub]
+        out[:, s] = np.argmin((c * c).sum(axis=1)[None, :] - 2 * (qs @ c.T),
+                              axis=1)
+    offsets = np.arange(len(q) + 1, dtype=np.int32) * len(cbs)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(out.ravel()),
+                                    mask=pa.array(~valid))
+
+
 def _pq_code_expr(cb_s: list[list[int]], s: int, dsub: int,
                   vec_col: str) -> str:
     """SQL text of subspace ``s``'s code: argmin of exact integer L2
@@ -647,22 +644,13 @@ def pq_encode(emb: DataFrame, m: int = 4, n_codes: int = 16,
         # one numpy matmul per (batch, subspace). Bit-identical
         # (parity-tested) — float32 widens exactly to double, floor,
         # int64; ties to the lowest c_id via argmin-first.
-        from pyspark.sql.functions import pandas_udf
-
         cbs = [np.asarray(cb[s], dtype=np.int64) for s in range(m)]
-        cbn = [(c * c).sum(axis=1) for c in cbs]
 
-        @pandas_udf("array<int>")
-        def _codes(v: pd.Series) -> pd.Series:
-            q = np.floor(
-                np.asarray(v.tolist(), dtype=np.float64) * 1000000.0
-            ).astype(np.int64)
-            out = np.empty((len(q), m), dtype=np.int32)
-            for s in range(m):
-                qs = q[:, s * dsub:(s + 1) * dsub]
-                scores = cbn[s][None, :] - 2 * (qs @ cbs[s].T)
-                out[:, s] = np.argmin(scores, axis=1)
-            return pd.Series(list(out))
+        @arrow_udf("array<int>")
+        def _codes(v: pa.Array) -> pa.Array:
+            x, valid = _vectors(v, d)
+            q = np.floor(x.astype(np.float64) * 1000000.0).astype(np.int64)
+            return _pq_codes(q, cbs, dsub, valid)
 
         return emb.select(
             F.col(id_col).alias("vec_id"),
@@ -848,17 +836,16 @@ _KMEANS_TILE = 1 << 22
 
 
 def _vectors(col, dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """(n x dim int64 matrix, validity mask) of an Arrow list<long>
-    column without a per-row Python step. A null vector is a zero row
-    with mask False; a vector of another length, or with a null
-    component, raises ValueError."""
+    """(n x dim matrix of the values' own dtype, validity mask) of an
+    Arrow list column without a per-row Python step. A null vector is
+    a zero row with mask False; a vector of another length, or with a
+    null component, raises ValueError."""
     valid = col.is_valid().to_numpy(zero_copy_only=False)
     flat = col.flatten()
     if flat.null_count or (
             col.value_lengths().fill_null(dim).to_numpy() != dim).any():
-        raise ValueError(
-            f"kmeans_fit: every vector needs {dim} non-null components")
-    m = np.zeros((len(col), dim), dtype=np.int64)
+        raise ValueError(f"every vector needs {dim} non-null components")
+    m = np.zeros((len(col), dim), dtype=flat.type.to_pandas_dtype())
     m[valid] = flat.to_numpy().reshape(-1, dim)
     return m, valid
 
@@ -930,8 +917,6 @@ def _lloyd_step(qv: DataFrame, cents: list[list[int]]) -> list[list[int]]:
 def _assign_udf(cents: list[list[int]]):
     """Arrow UDF: v_q -> struct(c_id, d2) of the nearest centroid
     (:func:`_nearest`); a null vector gets c_id 0 and a null d2."""
-    from pyspark.sql.functions import arrow_udf
-
     c = np.asarray(cents, dtype=np.int64)
     c_norm = (c * c).sum(axis=1)
 
@@ -1078,22 +1063,14 @@ def ivfpq_topk(emb: DataFrame, query_ids: list[int], k: int = 10,
         # Arrow residual-encode: residual and per-subspace argmin in
         # one numpy kernel (the JVM fold is interpreted); bit-identical
         # int64 math, parity-tested against the expression path.
-        from pyspark.sql.functions import pandas_udf
-
         cent_np = np.asarray(cents, dtype=np.int64)
         cbs = [np.asarray(cb[s], dtype=np.int64) for s in range(m)]
-        cbn = [(cc * cc).sum(axis=1) for cc in cbs]
 
-        @pandas_udf("array<int>")
-        def _codes(v: pd.Series, ci: pd.Series) -> pd.Series:
-            q = np.asarray(v.tolist(), dtype=np.int64)
-            rq = q - cent_np[ci.to_numpy(np.int64)]
-            out = np.empty((len(rq), m), dtype=np.int32)
-            for sx in range(m):
-                rs = rq[:, sx * dsub:(sx + 1) * dsub]
-                scores = cbn[sx][None, :] - 2 * (rs @ cbs[sx].T)
-                out[:, sx] = np.argmin(scores, axis=1)
-            return pd.Series(list(out))
+        @arrow_udf("array<int>")
+        def _codes(v: pa.Array, ci: pa.Array) -> pa.Array:
+            q, valid = _vectors(v, dim)
+            rq = q - cent_np[ci.to_numpy(zero_copy_only=False)]
+            return _pq_codes(rq, cbs, dsub, valid)
 
         codes = _spool(
             a.select("vec_id", "centroid_id",

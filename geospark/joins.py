@@ -296,9 +296,6 @@ class PolygonLayer:
       dropped) — the refine side, so a point tests only the few
       edges near its latitude instead of the whole layer.
 
-    For layers too big to broadcast, normalize to a DataFrame and use
-    pip_join_table — same plan shape, shuffled build side.
-
     Edge semantics match the reference's SPHERICAL within() by
     default: long-edge areas are great-circle densified at build time
     (see densify_areas). Pass ``densify_deg=None`` for raw planar
@@ -483,86 +480,14 @@ def pip_join_table(points: DataFrame, polygons: DataFrame,
                    cover_zoom: int = 8, lat: str = "lat",
                    lng: str = "lng") -> DataFrame:
     """PIP join against a polygon TABLE (sources.POLYGON_TABLE_SCHEMA:
-    area_id, outer_idx, ring_kind, ring_idx, seq, lat, lng) — the
-    non-broadcast path for layers too big to ship by closure.
+    area_id, outer_idx, ring_kind, ring_idx, seq, lat, lng): the table
+    input to the same broadcast join as :func:`pip_join`. The table is
+    collected to the driver (sources.df_to_areas) and its rings keep
+    planar edges (no densification), as stored."""
+    from geospark.sources import df_to_areas
 
-    Plan: per-area bbox agg -> cover-cell explode (Arrow UDF, narrow)
-          points ⨝ cover on cell (shuffle hash join; AQE skew split)
-          candidates cogrouped with ring rows by area_id ->
-          applyInPandas ray-cast refine (rings move once per area per
-          partition, not once per candidate row).
-    """
-    from geospark.cells import with_linear_cell_at_zoom
-
-    zoom = cover_zoom
-    bboxes = polygons.filter(F.col("ring_kind") == "outer").groupBy("area_id").agg(
-        F.min(lat).alias("_lat_min"), F.min(lng).alias("_lng_min"),
-        F.max(lat).alias("_lat_max"), F.max(lng).alias("_lng_max"),
-    )
-
-    @pandas_udf("array<long>")
-    def _cover(lat_min: pd.Series, lng_min: pd.Series, lat_max: pd.Series,
-               lng_max: pd.Series) -> pd.Series:
-        # exact polygon bboxes (not buffered disks) need no safety ring
-        return cover_cells_series(
-            lat_min.to_numpy(np.float64), lng_min.to_numpy(np.float64),
-            lat_max.to_numpy(np.float64), lng_max.to_numpy(np.float64),
-            zoom, pad=0,
-        )
-
-    # the cover key gets its OWN column name: cand's lineage shares
-    # attributes with `polygons`, and the cogroup below would otherwise
-    # be an ambiguous self-join (renaming sidesteps attr-id collisions)
-    cover = bboxes.select(
-        F.col("area_id").alias("cov_area_id"),
-        F.explode(_cover(
-            F.col("_lat_min"), F.col("_lng_min"),
-            F.col("_lat_max"), F.col("_lng_max"),
-        )).alias("cell_cov"),
-    )
-    cand = (
-        with_linear_cell_at_zoom(points, zoom, lat, lng, "_cell_cov")
-        .join(cover, F.col("_cell_cov") == F.col("cell_cov"), "inner")
-        .drop("_cell_cov", "cell_cov")
-    )
-
-    point_cols = list(points.columns)
-    out_cols = point_cols + ["area_id"]
-    p_lat, p_lng = lat, lng
-
-    def refine(key, cand_pdf: pd.DataFrame, rings_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = cand_pdf.iloc[0:0][point_cols].copy()
-        empty["area_id"] = pd.Series(dtype="int64")
-        if cand_pdf.empty or rings_pdf.empty:
-            return empty
-        rings_pdf = rings_pdf.sort_values(["outer_idx", "ring_kind", "ring_idx", "seq"])
-        outers, inners = [], []
-        for _, og in rings_pdf.groupby("outer_idx"):
-            o = og[og["ring_kind"] == "outer"]
-            outers.append(o[["lat", "lng"]].to_numpy(np.float64))
-            holes = [
-                ig[["lat", "lng"]].to_numpy(np.float64)
-                for _, ig in og[og["ring_kind"] == "inner"].groupby("ring_idx")
-            ]
-            inners.append(holes)
-        area = Area(int(key[0]), outers, inners)
-        inside = area_contains(
-            area, cand_pdf[p_lat].to_numpy(np.float64),
-            cand_pdf[p_lng].to_numpy(np.float64),
-        )
-        result = cand_pdf.loc[inside, point_cols].copy()
-        result["area_id"] = int(key[0])
-        return result
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in points.schema.fields
-    ) + ", area_id long"
-    return (
-        cand.groupBy("cov_area_id")
-        .cogroup(polygons.groupBy("area_id"))
-        .applyInPandas(refine, schema)
-    )
+    layer = PolygonLayer(df_to_areas(polygons), cover_zoom, densify_deg=None)
+    return pip_join(points, layer, lat, lng)
 
 
 def radius_join_df(points: DataFrame, centers: DataFrame, max_m: float,

@@ -95,7 +95,8 @@ def main() -> None:
     )
 
     # 2b. a small planar layer takes the same slab refine
-    from geospark.joins import Area, PolygonLayer, pip_join
+    from geospark.joins import Area, PolygonLayer, pip_join, pip_join_table
+    from geospark.sources import areas_to_df
 
     small = PolygonLayer(
         [Area(1, [[(10.0, 10.0), (10.0, 12.0), (8.0, 12.0), (8.0, 10.0)]])],
@@ -113,7 +114,23 @@ def main() -> None:
               "the densified layer — zero Python.",
     )
 
-    # 2c. the flagship path: parquet pages -> extract -> pip -> tiles
+    # 2c. a polygon TABLE is read into a layer and takes the same joins
+    audit(
+        "pip_join_table (polygon table, same broadcast slab refine)",
+        pip_join_table(G.events_points(spark, sf_dir)
+                       .select("event_id", "lat", "lng"),
+                       areas_to_df(spark, small.areas),
+                       cover_zoom=small.cover_zoom),
+        must=["* BroadcastHashJoin"],
+        must_not=["FlatMapCoGroupsInPandas", "ArrowEvalPython",
+                  "BatchEvalPython"],
+        notes="the table's rings are collected into a planar "
+              "PolygonLayer, so the plan is pip_join's: broadcast cell "
+              "cover, broadcast slab table, JVM ray-cast — no cogroup, "
+              "zero Python.",
+    )
+
+    # 2d. the flagship path: parquet pages -> extract -> pip -> tiles
     import tempfile
 
     from geospark.cells import with_tile

@@ -336,23 +336,6 @@ def test_arrow_bucketer_matches_sql(spark):
             assert arrow[key] == b, (key, arrow[key], b)
 
 
-def test_neardup_engines_agree(spark):
-    """engine="arrow" and engine="sql" produce the same near-dup
-    pairs (same buckets -> same candidates -> same exact refine)."""
-    df, rows = _emb_df(spark, n=50)
-    kw = dict(threshold=0.9, n_planes=6, dim=DIM, n_tables=3)
-    sql_pairs = sorted(
-        (r["vec_id_a"], r["vec_id_b"], r["cos_sim"])
-        for r in E.embedding_neardup_pairs(df, engine="sql", **kw).collect()
-    )
-    arrow_pairs = sorted(
-        (r["vec_id_a"], r["vec_id_b"], r["cos_sim"])
-        for r in E.embedding_neardup_pairs(df, engine="arrow", **kw).collect()
-    )
-    assert sql_pairs == arrow_pairs
-    assert sql_pairs, "expected pairs within the 4 tight clusters"
-
-
 def test_synth_embeddings_planted_structure(spark):
     """The deterministic embedding synthesizer: unit norms, planted
     (src, dup) pairs land in [min_cos, 1], values stable under

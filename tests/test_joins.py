@@ -136,13 +136,21 @@ def test_nearest_join_df_matches_knn_k1(spark):
 
 
 def test_pip_join_table_matches_broadcast_path(spark):
-    """The polygon-TABLE PIP join (cogrouped refine, non-broadcast)
-    must match the broadcast PolygonLayer path on the demo layer."""
+    """The polygon-TABLE PIP join (table input to the broadcast
+    PolygonLayer join) must match the broadcast path on the demo
+    layer, and planar area_contains row for row on a hand-built table:
+    two outer rings (one with a hole), a 10-degree edge at lat 62
+    (densifying it would move points under its great-circle bulge
+    inside), rows stored out of seq order, probes on band edges. Its
+    plan runs no Python."""
+    import contextlib
+    import io
+
     import numpy as np
 
     from geospark import geodata as G
-    from geospark.joins import pip_join_table
-    from geospark.sources import areas_to_df
+    from geospark.joins import PIP_BAND_DEG, PIP_DENSIFY_DEG, pip_join_table
+    from geospark.sources import POLYGON_TABLE_SCHEMA, areas_to_df
 
     rng = np.random.RandomState(5)
     rows = [
@@ -160,6 +168,51 @@ def test_pip_join_table_matches_broadcast_path(spark):
         for r in pip_join_table(pts, poly_df, cover_zoom=layer.cover_zoom).collect()
     )
     assert via_table == via_broadcast and len(via_table) > 0
+
+    # area 1: a square with a hole, and a high-latitude ring whose top
+    # edge spans 10 degrees of longitude at lat 62; area 2 overlaps both
+    # the square and its hole
+    areas = [
+        Area(1,
+             outers=[np.array([(10.0, 20.0), (10.0, 24.0), (14.0, 24.0), (14.0, 20.0)]),
+                     np.array([(60.0, 0.0), (62.0, 0.0), (62.0, 10.0), (60.5, 10.0)])],
+             inners=[[np.array([(11.0, 21.0), (11.0, 23.0), (13.0, 23.0), (13.0, 21.0)])],
+                     []]),
+        Area(2, outers=[np.array([(12.0, 22.5), (15.25, 26.0), (9.5, 27.0)])]),
+    ]
+    assert areas[0].max_edge_deg() > PIP_DENSIFY_DEG
+    rows = [(a.area_id, oi, kind, ri, s, float(la), float(lo))
+            for a in areas
+            for oi, (outer, holes) in enumerate(zip(a.outers, a.inners))
+            for kind, ri, ring in [("outer", 0, outer),
+                                   *(("inner", i, h) for i, h in enumerate(holes))]
+            for s, (la, lo) in enumerate(ring)]
+    table = spark.createDataFrame(
+        [rows[i] for i in rng.permutation(len(rows))], POLYGON_TABLE_SCHEMA)
+    ks = np.r_[36:65, 236:255]  # band edges at lat 9..16 and 59..63.5
+    lat = np.r_[ks * PIP_BAND_DEG,
+                # under the top edge's great-circle bulge (~62.09 at lng 5)
+                62.05, 62.05, 62.0, 61.0, 11.0, 13.0,
+                rng.uniform(9.0, 16.0, 300), rng.uniform(59.5, 62.5, 300)]
+    lng = np.r_[rng.uniform(19.5, 27.5, 29), rng.uniform(-0.5, 10.5, 19),
+                5.0, 4.0, 5.0, 5.0, 22.0, 22.0,
+                rng.uniform(19.0, 28.0, 300), rng.uniform(-1.0, 11.0, 300)]
+    pts = spark.createDataFrame(
+        [(i, float(la), float(lo)) for i, (la, lo) in enumerate(zip(lat, lng))],
+        "point_id long, lat double, lng double")
+    joined = pip_join_table(pts, table, cover_zoom=6)
+    got = sorted(tuple(r) for r in joined.collect())
+    want = sorted((int(i), float(lat[i]), float(lng[i]), a.area_id) for a in areas
+                  for i in np.nonzero(area_contains(a, lat, lng))[0])
+    assert got == want and len(want) > 0
+    assert not area_contains(areas[0], np.array([62.05]), np.array([5.0]))[0]
+    assert area_contains(areas[0].densified_great_circle(PIP_DENSIFY_DEG),
+                         np.array([62.05]), np.array([5.0]))[0]
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        joined.explain("formatted")
+    plan = buf.getvalue()
+    assert "FlatMapCoGroupsInPandas" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_box_query_strict(spark):
